@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.QueryDsl.Twin
+
 /** Benchmark main — mirrors the reference protocol (3 runs per query,
   * average reported; `docs/development/benchmarking.md:27-34`).
   *
@@ -12,7 +14,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  val headline: Seq[String] = Seq(
+  /** Non-twin headline queries, then every twin with its default
+    * (`Twin.all`), so each twin is measured as a same-run pair. */
+  val headline: Seq[String] = (Seq(
     "q01_pricing_summary", // scan + filter + hash agg
     "q03_topk_revenue",    // 3-way join + top-k
     "q05_nation_revenue",  // 6-way join + broadcast dims
@@ -34,37 +38,6 @@ object Bench {
     "cb04_top_users",      // heavy-hitter top-k
     "cb05_daily_histogram", // time histogram + distinct
     "k02_bucketed_join",   // shuffle-free co-located join
-    "k03_bucketed_q21",    // TPC-H q21 on bucketed layout (vs tpch_q21)
-    "k04_bucketed_q18",    // TPC-H q18 on bucketed layout (vs tpch_q18)
-    "k05_bucketed_q04",    // TPC-H q04 on staged layout (vs tpch_q04)
-    "k06_staged_q16",      // TPC-H q16 on staged partsupp (vs tpch_q16)
-    "k07_bucketed_q05",    // TPC-H q05 on bucketed layout (vs tpch_q05)
-    "k08_staged_q11",      // TPC-H q11 on staged partsupp, fused (vs tpch_q11)
-    "k09_bucketed_q03",    // TPC-H q03 on bucketed layout (vs tpch_q03)
-    "k10_bucketed_q13",    // TPC-H q13 on custkey-bucketed layout (vs tpch_q13)
-    "k11_staged_q02",      // TPC-H q02 on staged partsupp (vs tpch_q02)
-    "k12_bucketed_q12",    // TPC-H q12 on bucketed layout (vs tpch_q12)
-    "k13_bucketed_q09",    // TPC-H q09, partsupp join computed inline (vs tpch_q09)
-    "k14_bucketed_q10",    // TPC-H q10 on bucketed layout (vs tpch_q10)
-    "k15_fused_q15",       // TPC-H q15 single-scan fused (vs tpch_q15)
-    "k16_staged_q01",      // TPC-H q01 over stored-unscaled i64 (vs tpch_q01)
-    "k17_bucketed_q08",    // TPC-H q08 on bucketed layout (vs tpch_q08)
-    "k18_fused_q14",       // TPC-H q14, part shuffle eliminated (vs tpch_q14)
-    "k19_denorm_q05",      // TPC-H q05 on the denormalized projection (vs tpch_q05)
-    "k20_denorm_q07",      // TPC-H q07 on the denormalized projection (vs tpch_q07)
-    "k21_denorm_q03",      // TPC-H q03 on the denormalized projection (vs tpch_q03)
-    "k22_denorm_q06",      // TPC-H q06 on the denormalized projection (vs tpch_q06)
-    "k23_denorm_q09",      // TPC-H q09 on the denormalized projection (vs tpch_q09)
-    "k24_denorm_q10",      // TPC-H q10 on the denormalized projection (vs tpch_q10)
-    "k25_denorm_q08",      // TPC-H q08 on the denormalized projection (vs tpch_q08)
-    "k26_denorm_q14",      // TPC-H q14 on the denormalized projection (vs tpch_q14)
-    "k27_bucketed_q22",    // TPC-H q22 on the custkey-bucketed layout (vs tpch_q22)
-    "k28_fused_q11",       // TPC-H q11 fused single-pass program (vs tpch_q11)
-    "k29_fused_q16",       // TPC-H q16 fused generator-filter program (vs tpch_q16)
-    "k30_fused_q17",       // TPC-H q17 fused single-scan program (vs tpch_q17)
-    "k31_fused_q20",       // TPC-H q20 fused red-slice program (vs tpch_q20)
-    "k36_pairs_q16",       // TPC-H q16 on the pre-aggregated pairs projection
-    "k61_grid_q17",        // TPC-H q17 on the per-part quantity grid (vs tpch_q17)
     "t04_fingerprint") ++  // text normalize + md5 (native kernel)
     (1 to 22).map(i => f"tpch_q$i%02d") ++ // the reference's golden suite
     // TPC-DS (synthesized star schema): correlated CTE avg, scalar-subquery
@@ -78,122 +51,15 @@ object Bench {
     // stddev (q39), the store/catalog mega-join (q64), the wide rollup
     // (q67), and the inventory-join fan-in (q72)
     Seq("tpcds_q04", "tpcds_q11", "tpcds_q14", "tpcds_q23",
-      "tpcds_q39", "tpcds_q64", "tpcds_q67", "tpcds_q72",
-      // staged-inventory twin (stored fact table vs per-query synthesis)
-      // + the fused single-derivation q39 program over the stored fact.
-      // k44_staged_ds39 measured NEGATIVE (+36% at sf10, round 12: the
-      // view path's synthesis is year-pruned by pushdown into the
-      // generator) — dropped from the headline per the k08 precedent;
-      // it stays oracle-checked in CORRECTNESS via SparkEntry.queries.
-      "k45_staged_ds72", "k48_fused_ds39",
-      // the fused cross-channel q14 program over the staged per-channel
-      // pricing projections (round-12 verdict task 3). The report-floor
-      // candidates measured NEGATIVE in the round-13 DsProbe and stay
-      // oracle-only (k08 precedent): k59_fused_ds67 +12% (the finest-
-      // granularity base holds ~7.0M of the 8.7M joined rows — near-
-      // unique (item, store, month) combos — so re-rollup adds a pass
-      // while Spark's post-Expand partial agg already compresses to
-      // 9.7M records, not 9x the fact) and k60_staged_ds98 +7%/noise
-      // (the synthesis is NOT q98's cost; the agg+window+sort pipeline
-      // is). The q67/q98/q89/q36 class is a measured per-query floor.
-      "k58_fused_ds14") ++
-    // ClickBench ports: 90-sum wide aggregate, heavy high-cardinality
-    // group, and the synthesized-string-hot queries with their staged-hits
-    // layout twins (see operators/CbxLayout.scala for the selection)
-    Seq("cbx_q29", "cbx_q32", "cbx_q08", "cbx_q09", "cbx_q10",
-      "k32_staged_cbx29", "k33_staged_cbx10", "k34_staged_cbx09",
-      "k35_staged_cbx08") ++
-    // the CounterID+EventDate pruning family (round-11 sf10 sweep: 25-37x
-    // the proxy on the view path) + the string-distinct shape, with their
-    // zone-map-pruned staged-hits twins
-    Seq("cbx_q37", "cbx_q38", "cbx_q39", "cbx_q40", "cbx_q41", "cbx_q42",
-      "cbx_q05",
-      "k37_staged_cbx37", "k38_staged_cbx38", "k39_staged_cbx39",
-      "k40_staged_cbx40", "k41_staged_cbx41", "k42_staged_cbx42",
-      "k43_staged_cbx05") ++
-    // the heavy high-cardinality GROUP BY class representatives with the
-    // pre-aggregated (SearchPhrase, UserID) / (RegionID, UserID) grid twins
-    Seq("cbx_q12", "cbx_q13", "k46_pairs_cbx13", "k47_pairs_cbx12",
-      "k49_grid_cbx08", "k50_grid_cbx09") ++
-    // the rest of the heavy high-cardinality GROUP BY class with their
-    // grid-projection twins (round-12 verdict task 2): the mobile-model
-    // grid (q10/q11), the (UserID, SearchPhrase, SearchEngineID) activity
-    // grid (q14-q17), and the per-minute activity grid (q18)
-    Seq("cbx_q11", "cbx_q14", "cbx_q15", "cbx_q16", "cbx_q17", "cbx_q18",
-      "k51_grid_cbx10", "k52_grid_cbx11", "k53_grid_cbx14",
-      "k54_grid_cbx15", "k55_grid_cbx16", "k56_grid_cbx17",
-      "k57_grid_cbx18") ++
-    // streaming operators: the only family that had correctness rows but
-    // zero perf signal (round-12 verdict stretch 9) — micro-batch drain
-    // over the events fixture, so regressions in the stateful operators
-    // (windowed agg, stream-stream join) surface in the bench trend
-    Seq("st01_stream_hourly", "st04_stream_stream_join")
-
-  /** Staged-layout twins vs their default-layout originals: same oracle,
-    * different physical layout. Emitted as first-class same-run pairs in
-    * bench.json so layout deltas are always measured inside ONE session
-    * (cross-round absolute comparisons were twice voided by machine drift —
-    * round-7/8 verdicts). */
-  val twinOf: Map[String, String] = Map(
-    "k03_bucketed_q21" -> "tpch_q21",
-    "k04_bucketed_q18" -> "tpch_q18",
-    "k05_bucketed_q04" -> "tpch_q04",
-    "k06_staged_q16" -> "tpch_q16",
-    "k07_bucketed_q05" -> "tpch_q05",
-    "k08_staged_q11" -> "tpch_q11",
-    "k09_bucketed_q03" -> "tpch_q03",
-    "k10_bucketed_q13" -> "tpch_q13",
-    "k11_staged_q02" -> "tpch_q02",
-    "k12_bucketed_q12" -> "tpch_q12",
-    "k13_bucketed_q09" -> "tpch_q09",
-    "k14_bucketed_q10" -> "tpch_q10",
-    "k15_fused_q15" -> "tpch_q15",
-    "k16_staged_q01" -> "tpch_q01",
-    "k17_bucketed_q08" -> "tpch_q08",
-    "k18_fused_q14" -> "tpch_q14",
-    "k19_denorm_q05" -> "tpch_q05",
-    "k20_denorm_q07" -> "tpch_q07",
-    "k21_denorm_q03" -> "tpch_q03",
-    "k22_denorm_q06" -> "tpch_q06",
-    "k23_denorm_q09" -> "tpch_q09",
-    "k24_denorm_q10" -> "tpch_q10",
-    "k25_denorm_q08" -> "tpch_q08",
-    "k26_denorm_q14" -> "tpch_q14",
-    "k27_bucketed_q22" -> "tpch_q22",
-    "k28_fused_q11" -> "tpch_q11",
-    "k29_fused_q16" -> "tpch_q16",
-    "k30_fused_q17" -> "tpch_q17",
-    "k31_fused_q20" -> "tpch_q20",
-    "k36_pairs_q16" -> "tpch_q16",
-    "k61_grid_q17" -> "tpch_q17",
-    "k32_staged_cbx29" -> "cbx_q29",
-    "k33_staged_cbx10" -> "cbx_q10",
-    "k34_staged_cbx09" -> "cbx_q09",
-    "k35_staged_cbx08" -> "cbx_q08",
-    "k37_staged_cbx37" -> "cbx_q37",
-    "k38_staged_cbx38" -> "cbx_q38",
-    "k39_staged_cbx39" -> "cbx_q39",
-    "k40_staged_cbx40" -> "cbx_q40",
-    "k41_staged_cbx41" -> "cbx_q41",
-    "k42_staged_cbx42" -> "cbx_q42",
-    "k43_staged_cbx05" -> "cbx_q05",
-    "k44_staged_ds39" -> "tpcds_q39",
-    "k45_staged_ds72" -> "tpcds_q72",
-    "k46_pairs_cbx13" -> "cbx_q13",
-    "k47_pairs_cbx12" -> "cbx_q12",
-    "k48_fused_ds39" -> "tpcds_q39",
-    "k49_grid_cbx08" -> "cbx_q08",
-    "k50_grid_cbx09" -> "cbx_q09",
-    "k51_grid_cbx10" -> "cbx_q10",
-    "k52_grid_cbx11" -> "cbx_q11",
-    "k53_grid_cbx14" -> "cbx_q14",
-    "k54_grid_cbx15" -> "cbx_q15",
-    "k55_grid_cbx16" -> "cbx_q16",
-    "k56_grid_cbx17" -> "cbx_q17",
-    "k57_grid_cbx18" -> "cbx_q18",
-    "k58_fused_ds14" -> "tpcds_q14",
-    "k59_fused_ds67" -> "tpcds_q67",
-    "k60_staged_ds98" -> "tpcds_q98")
+      "tpcds_q39", "tpcds_q64", "tpcds_q67", "tpcds_q72") ++
+    // ClickBench ports: the 90-sum wide aggregate and the untwinned
+    // group-by shape (the rest of the cbx headline comes with its twins)
+    Seq("cbx_q29", "cbx_q32") ++
+    // streaming operators: micro-batch drain over the events fixture, so
+    // regressions in the stateful operators (windowed agg, stream-stream
+    // join) surface in the bench trend
+    Seq("st01_stream_hourly", "st04_stream_stream_join") ++
+    Twin.all.flatMap(t => Seq(t.of, t.name))).distinct
 
   /** Compact stdout key for a query name (the driver's tail capture is
     * 2000 chars; full names live in target/bench.json): suite prefixes map
@@ -407,10 +273,11 @@ object Bench {
     val medians = results.map { case (k, (m, _)) => k -> m }.toMap
     // keyed by the TWIN query (a default may have several twins, e.g.
     // tpch_q05 has both k07 bucketed and k19 denormalized)
-    val pairsJson = twinOf.toSeq.sortBy(_._2).flatMap { case (twin, dflt) =>
-      (medians.get(twin), medians.get(dflt)) match {
+    val pairsJson = Twin.all.sortBy(_.of).flatMap { twin =>
+      val dflt = twin.of
+      (medians.get(twin.name), medians.get(dflt)) match {
         case (Some(t), Some(d)) if t > 0 && d > 0 =>
-          Some("\"" + twin + "\":" +
+          Some("\"" + twin.name + "\":" +
             f"""{"default_query":"$dflt","default":$d%.4f,"twin":$t%.4f,"delta_pct":${100.0 * (t - d) / d}%.1f}""")
         case _ => None
       }

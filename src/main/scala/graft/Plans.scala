@@ -5,6 +5,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, TakeOrdere
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import java.nio.file.{Files, Paths}
 
+import graft.QueryDsl.Twin
+
 /** Regenerates PLANS.md: formatted physical plans for the headline queries
   * AND the golden suites (TPC-H q01–q22, the TPC-DS picks), as evidence
   * that filters/pruning reach the scans and join strategies are the
@@ -76,17 +78,13 @@ object Plans {
       "n01_knn_cosine", "n03_knn_lsh", "n05_knn_ivf",
       "e01_sessionize", "e02_tumbling_hour", "e03_funnel",
       "e04_asof_join", "e05_range_join",
-      "k01_salted_join", "k02_bucketed_join", "k03_bucketed_q21",
-      "k04_bucketed_q18", "k05_bucketed_q04", "k06_staged_q16", "k07_bucketed_q05",
-      "k08_staged_q11", "k09_bucketed_q03", "k10_bucketed_q13", "k11_staged_q02",
-      "k12_bucketed_q12", "k13_bucketed_q09", "k14_bucketed_q10",
-      "k15_fused_q15", "k16_staged_q01", "k17_bucketed_q08", "k18_fused_q14",
-      "k19_denorm_q05", "k20_denorm_q07", "k21_denorm_q03",
-      "k22_denorm_q06", "k23_denorm_q09", "k24_denorm_q10",
-      "k25_denorm_q08", "k26_denorm_q14", "k27_bucketed_q22",
+      "k01_salted_join", "k02_bucketed_join",
       "t01_lang_id", "t08_decontaminate", "t09_repetition",
       "t11_unigram_logprob", "a02_topk_sketch", "a03_hll_union",
-      "m02_decode_features", "m03_frame_sample")
+      "m02_decode_features", "m03_frame_sample") ++
+      // every TPC-H twin (the TPC-DS and ClickBench twins need the star /
+      // hits synthesis, which this sf0.01 plan pass leaves out)
+      Twin.all.filter(_.of.startsWith("tpch_q")).map(_.name)
     val tpch = (1 to 22).map(i => f"tpch_q$i%02d")
     val tpcds = Seq("tpcds_q01", "tpcds_q09", "tpcds_q25", "tpcds_q36",
       "tpcds_q59", "tpcds_q65", "tpcds_q89", "tpcds_q98")
@@ -149,7 +147,7 @@ object Plans {
       "d05_ngram_jaccard", "d06_embedding_neardup", "d07_dedup_clusters",
       "n03_knn_lsh", "e04_asof_join", "e05_range_join", "k01_salted_join",
       "k02_bucketed_join", "k03_bucketed_q21", "k04_bucketed_q18",
-      "k05_bucketed_q04", "k06_staged_q16", "k07_bucketed_q05",
+      "k05_bucketed_q04", "k07_bucketed_q05",
       "k09_bucketed_q03", "k10_bucketed_q13", "k11_staged_q02",
       // k13 is excluded: its 1-row supplier-count scalar attaches via a
       // deliberate broadcast cross join (no raw-row NLJ)
@@ -173,7 +171,6 @@ object Plans {
       "k03_bucketed_q21" -> "orderkey",
       "k04_bucketed_q18" -> "orderkey",
       "k05_bucketed_q04" -> "orderkey",
-      "k06_staged_q16" -> "partkey",
       "k07_bucketed_q05" -> "orderkey",
       "k09_bucketed_q03" -> "orderkey",
       "k10_bucketed_q13" -> "custkey",
@@ -191,7 +188,7 @@ object Plans {
               if j.leftKeys.exists(_.toString.toLowerCase.contains(key)) => j
         }
         // shuffle exchanges only: a tiny-dim BroadcastExchange below the
-        // merge join (k06's complaints anti join) moves no fact data
+        // merge join moves no fact data
         val shuffled = bucketJoins.exists(j => j.collect {
           case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
         }.nonEmpty)
@@ -199,17 +196,17 @@ object Plans {
         else if (shuffled) Seq(s"${p._1}(shuffled-bucket-join)")
         else Nil
       }
-    // Denormalized-projection contract (k19/k20): the fact is scanned ONCE,
-    // every join is a broadcast (the order/customer attributes are stored
-    // on the fact row — there is nothing left to merge), and the only
-    // shuffle in the whole plan is the final few-row aggregate.
+    // Denormalized-projection contract (the `_denorm_` twins): the fact is
+    // scanned ONCE, every join is a broadcast (the order/customer
+    // attributes are stored on the fact row — there is nothing left to
+    // merge), and the only shuffle in the whole plan is the final few-row
+    // aggregate.
     // k24 is excluded from the strict set: its customer join is planned SMJ
     // by size-blind initial planning (AQE broadcasts the per-custkey revenue
     // aggregate at runtime); the fact-side contract (single scan, pre-agg
     // before customer) is covered by fact_bcast + the k14 pattern.
-    val denormSet = Seq("k19_denorm_q05", "k20_denorm_q07",
-      "k21_denorm_q03", "k22_denorm_q06", "k23_denorm_q09",
-      "k25_denorm_q08", "k26_denorm_q14")
+    val denormSet = Twin.all.map(_.name)
+      .filter(n => n.contains("_denorm_") && !n.startsWith("k24_"))
     // "raw fact rows never cross the wire": a ShuffleExchange is legitimate
     // only when an aggregate below it bounds the payload by group count
     // (the final group-by / ORDER BY / scalar-count exchanges); a denorm

@@ -16,6 +16,18 @@ import org.apache.spark.sql.types._
 object QueryDsl {
   type Q = (SparkSession, String) => DataFrame
 
+  /** A strategy twin: `build` returns exactly the rows of the default
+    * query `of`, through another physical layout or plan. This one line is
+    * the twin's whole registration — its catalog entry, its oracle (the
+    * default's) and its same-run bench pair all derive from [[Twin.all]]. */
+  final case class Twin(name: String, of: String, build: Q)
+
+  object Twin {
+    lazy val all: Seq[Twin] =
+      graft.operators.Skew.twins ++ graft.operators.CbxLayout.twins ++
+        graft.operators.TpcdsLayout.twins ++ graft.queries.Tpch.twins
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Engine.table(spark, dir, name)
 

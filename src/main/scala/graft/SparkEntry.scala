@@ -2,11 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.QueryDsl.Twin
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every implemented operator from SURVEY.md §2 is a named entry in
   * [[queries]]; entries with a DuckDB-expressible equivalent also appear in
   * [[oracleSql]] (the driver hash-compares both at sf0.01).
+  * Strategy twins ([[Twin.all]]) are appended to both: a twin's oracle is
+  * its default's.
   */
 object SparkEntry {
 
@@ -15,9 +19,17 @@ object SparkEntry {
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
+    defaultQueries ++ Twin.all.map(t => t.name -> t.build)
+
+  def oracleSql: Map[String, String] = {
+    val defaults = defaultOracles
+    defaults ++ Twin.all.map(t => t.name -> defaults(t.of))
+  }
+
+  /** Every catalog query that is not a twin. */
+  private[graft] def defaultQueries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.Tpcds.queries ++
       graft.queries.Tpch.queries ++
-      graft.queries.Tpch.fusedTwins ++
       graft.queries.Relational.queries ++
       graft.queries.Windows.queries ++
       graft.queries.Aggregates.queries ++
@@ -38,17 +50,14 @@ object SparkEntry {
       graft.sources.ParquetMeta.queries ++
       graft.sources.TpchGen.queries ++
       graft.operators.Skew.queries ++
-      graft.operators.Skew.bucketedQueries ++
-      graft.operators.CbxLayout.queries ++
-      graft.operators.TpcdsLayout.queries ++
       graft.functions.Aggregators.queries ++
       graft.streaming.Streaming.queries ++
       graft.streaming.Streaming.joinQueries
 
-  def oracleSql: Map[String, String] =
+  /** The oracles of [[defaultQueries]]. */
+  private[graft] def defaultOracles: Map[String, String] =
     graft.queries.Tpcds.oracles ++
       graft.queries.Tpch.oracles ++
-      graft.queries.Tpch.fusedTwinOracles ++
       graft.queries.Relational.oracles ++
       graft.queries.Windows.oracles ++
       graft.queries.Aggregates.oracles ++
@@ -69,8 +78,6 @@ object SparkEntry {
       graft.sources.ParquetMeta.oracles ++
       graft.sources.TpchGen.oracles ++
       graft.operators.Skew.oracles ++
-      graft.operators.CbxLayout.oracles ++
-      graft.operators.TpcdsLayout.oracles ++
       graft.functions.Aggregators.oracles ++
       graft.streaming.Streaming.oracles
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.QueryDsl.Q
+import graft.QueryDsl.{Q, Twin}
 
 /** Staged ClickBench layout: the synthesized `hits` projection materialized
   * ONCE at ingest as a sorted parquet table, instead of re-deriving ~25
@@ -272,15 +272,15 @@ object CbxLayout {
   /** Staged twins for the cbx queries the layout measurably helps.
     *
     * Selection by measurement at sf10 (5-run medians, staged vs view):
-    * q10 −33%, q08 −19%, q09 −15%, q29 −10% — the wins are exactly the
-    * queries whose hot columns are SYNTHESIZED STRINGS (MobilePhoneModel,
-    * SearchPhrase concatenations): storing them turns per-row string
-    * building into a dictionary-encoded column read. MEASURED NEGATIVE
-    * and not twinned: q32 +4%, q33 +5%, q18 −5% — group-by/distinct-bound
-    * queries where deriving a column from one stored i64 is CHEAPER than
-    * reading the materialized string column; a stored layout only pays
-    * when the derivation is expensive relative to the read. */
-  /** The round-11 sf10 cbx-vs-proxy sweep put the ENTIRE
+    * q29 −10% — the wins are the queries whose hot columns are
+    * SYNTHESIZED STRINGS: storing them turns per-row string building into
+    * a dictionary-encoded column read. MEASURED NEGATIVE and not twinned:
+    * q32 +4%, q33 +5%, q18 −5% — group-by/distinct-bound queries where
+    * deriving a column from one stored i64 is CHEAPER than reading the
+    * materialized string column. The q08–q10 staged-text twins were
+    * retired once their grid twins (k49–k51) beat them in the same run.
+    *
+    * The round-11 sf10 cbx-vs-proxy sweep put the ENTIRE
     * `CounterID = 62 AND EventDate BETWEEN ...` family (q37–q42) at
     * 25–37x the DuckDB proxy on the view path: every query pays the full
     * events scan + column synthesis to select ~1 % of rows. On the staged
@@ -288,52 +288,28 @@ object CbxLayout {
     * turns that filter into file/row-group zone-map pruning — the
     * ClickBench "partitioned hits" regime the reference benches against.
     * q05 (COUNT(DISTINCT SearchPhrase)) is the synthesized-string-distinct
-    * shape: storing the phrase makes it a dictionary-encoded column read. */
-  val queries: Map[String, Q] = Map(
-    "k32_staged_cbx29" -> staged("cbx_q29"),
-    "k33_staged_cbx10" -> staged("cbx_q10"),
-    "k34_staged_cbx09" -> staged("cbx_q09"),
-    "k35_staged_cbx08" -> staged("cbx_q08"),
-    "k37_staged_cbx37" -> staged("cbx_q37"),
-    "k38_staged_cbx38" -> staged("cbx_q38"),
-    "k39_staged_cbx39" -> staged("cbx_q39"),
-    "k40_staged_cbx40" -> staged("cbx_q40"),
-    "k41_staged_cbx41" -> staged("cbx_q41"),
-    "k42_staged_cbx42" -> staged("cbx_q42"),
-    "k43_staged_cbx05" -> staged("cbx_q05"),
-    "k46_pairs_cbx13" -> pairsQ13,
-    "k47_pairs_cbx12" -> pairsQ12,
-    "k49_grid_cbx08" -> gridQ08,
-    "k50_grid_cbx09" -> gridQ09,
-    "k51_grid_cbx10" -> gridQ10,
-    "k52_grid_cbx11" -> gridQ11,
-    "k53_grid_cbx14" -> gridQ14,
-    "k54_grid_cbx15" -> gridQ15,
-    "k55_grid_cbx16" -> gridQ16,
-    "k56_grid_cbx17" -> gridQ17,
-    "k57_grid_cbx18" -> gridQ18)
-
-  val oracles: Map[String, String] = Map(
-    "k32_staged_cbx29" -> graft.queries.ClickBench.oracles("cbx_q29"),
-    "k33_staged_cbx10" -> graft.queries.ClickBench.oracles("cbx_q10"),
-    "k34_staged_cbx09" -> graft.queries.ClickBench.oracles("cbx_q09"),
-    "k35_staged_cbx08" -> graft.queries.ClickBench.oracles("cbx_q08"),
-    "k37_staged_cbx37" -> graft.queries.ClickBench.oracles("cbx_q37"),
-    "k38_staged_cbx38" -> graft.queries.ClickBench.oracles("cbx_q38"),
-    "k39_staged_cbx39" -> graft.queries.ClickBench.oracles("cbx_q39"),
-    "k40_staged_cbx40" -> graft.queries.ClickBench.oracles("cbx_q40"),
-    "k41_staged_cbx41" -> graft.queries.ClickBench.oracles("cbx_q41"),
-    "k42_staged_cbx42" -> graft.queries.ClickBench.oracles("cbx_q42"),
-    "k43_staged_cbx05" -> graft.queries.ClickBench.oracles("cbx_q05"),
-    "k46_pairs_cbx13" -> graft.queries.ClickBench.oracles("cbx_q13"),
-    "k47_pairs_cbx12" -> graft.queries.ClickBench.oracles("cbx_q12"),
-    "k49_grid_cbx08" -> graft.queries.ClickBench.oracles("cbx_q08"),
-    "k50_grid_cbx09" -> graft.queries.ClickBench.oracles("cbx_q09"),
-    "k51_grid_cbx10" -> graft.queries.ClickBench.oracles("cbx_q10"),
-    "k52_grid_cbx11" -> graft.queries.ClickBench.oracles("cbx_q11"),
-    "k53_grid_cbx14" -> graft.queries.ClickBench.oracles("cbx_q14"),
-    "k54_grid_cbx15" -> graft.queries.ClickBench.oracles("cbx_q15"),
-    "k55_grid_cbx16" -> graft.queries.ClickBench.oracles("cbx_q16"),
-    "k56_grid_cbx17" -> graft.queries.ClickBench.oracles("cbx_q17"),
-    "k57_grid_cbx18" -> graft.queries.ClickBench.oracles("cbx_q18"))
+    * shape: storing the phrase makes it a dictionary-encoded column read.
+    *
+    * The pairs/grid twins answer the heavy high-cardinality GROUP BY class
+    * from pre-aggregated projections (see the grid writers above). */
+  val twins: Seq[Twin] = Seq(
+    Twin("k32_staged_cbx29", "cbx_q29", staged("cbx_q29")),
+    Twin("k37_staged_cbx37", "cbx_q37", staged("cbx_q37")),
+    Twin("k38_staged_cbx38", "cbx_q38", staged("cbx_q38")),
+    Twin("k39_staged_cbx39", "cbx_q39", staged("cbx_q39")),
+    Twin("k40_staged_cbx40", "cbx_q40", staged("cbx_q40")),
+    Twin("k41_staged_cbx41", "cbx_q41", staged("cbx_q41")),
+    Twin("k42_staged_cbx42", "cbx_q42", staged("cbx_q42")),
+    Twin("k43_staged_cbx05", "cbx_q05", staged("cbx_q05")),
+    Twin("k46_pairs_cbx13", "cbx_q13", pairsQ13),
+    Twin("k47_pairs_cbx12", "cbx_q12", pairsQ12),
+    Twin("k49_grid_cbx08", "cbx_q08", gridQ08),
+    Twin("k50_grid_cbx09", "cbx_q09", gridQ09),
+    Twin("k51_grid_cbx10", "cbx_q10", gridQ10),
+    Twin("k52_grid_cbx11", "cbx_q11", gridQ11),
+    Twin("k53_grid_cbx14", "cbx_q14", gridQ14),
+    Twin("k54_grid_cbx15", "cbx_q15", gridQ15),
+    Twin("k55_grid_cbx16", "cbx_q16", gridQ16),
+    Twin("k56_grid_cbx17", "cbx_q17", gridQ17),
+    Twin("k57_grid_cbx18", "cbx_q18", gridQ18))
 }

@@ -38,9 +38,8 @@ object Skew {
     * broadcasts), so runtime re-planning has nothing to improve. Measured
     * at sf10 (5-run medians, idle box): k11 1.15→0.56 s (−51%),
     * k27 0.46→0.33 s (−29%), k08 0.85→0.66 s (−22%); at sf30 −11/0/−14% —
-    * no scale inversion. The heavy twins (k03/k04) and the generator-fused
-    * k29 measured neutral-to-WORSE without AQE (k29 +23%: it relies on
-    * runtime partition coalescing) and keep it on.
+    * no scale inversion. The heavy twins (k03/k04) measured
+    * neutral-to-WORSE without AQE and keep it on.
     *
     * Session-scoped on purpose: Bench/Verify give each query a fresh or
     * shared-but-correctness-only session; a caller embedding these twins
@@ -292,6 +291,18 @@ object Skew {
       val o = t(s, dir, "orders")
       val c = t(s, dir, "customer")
       saltedJoin(o, c, "o_custkey", "c_custkey", 8)
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n_orders"),
+          sumd(dbig(col("o_totalprice"))).as("total"))
+        .orderBy("c_mktsegment")
+    },
+
+    // Join of two tables bucketed on the join key: zero Exchange nodes
+    // (asserted by spec) — at scale the only cost is the local merge.
+    "k02_bucketed_join" -> { (s, dir) =>
+      val (to, tc) = writeBucketed(s, dir, defaultBuckets)
+      s.table(to).hint("merge")
+        .join(s.table(tc).hint("merge"), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),
           sumd(dbig(col("o_totalprice"))).as("total"))
@@ -595,25 +606,13 @@ object Skew {
     tdn
   }
 
-  val bucketedQueries: Map[String, Q] = Map(
-    // Join of two tables bucketed on the join key: zero Exchange nodes
-    // (asserted by spec) — at scale the only cost is the local merge.
-    "k02_bucketed_join" -> { (s, dir) =>
-      val (to, tc) = writeBucketed(s, dir, defaultBuckets)
-      s.table(to).hint("merge")
-        .join(s.table(tc).hint("merge"), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"),
-          sumd(dbig(col("o_totalprice"))).as("total"))
-        .orderBy("c_mktsegment")
-    },
-
+  val twins: Seq[Twin] = Seq(
     // TPC-H q21 on the bucketed layout: the semi join (another supplier on
     // the order), anti join (no OTHER late supplier) and orders join are
     // all co-located merges on l_orderkey — the fact table is never
     // shuffled; only the tiny supplier⋈nation dim broadcasts. Same values
     // as tpch_q21 (that query's oracle IS this oracle).
-    "k03_bucketed_q21" -> { (s, dir) =>
+    Twin("k03_bucketed_q21", "tpch_q21", { (s, dir) =>
       val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
       val li = s.table(tli)
       val late = li.filter(col("l_receiptdate") > col("l_commitdate"))
@@ -638,7 +637,7 @@ object Skew {
         .agg(count(lit(1)).as("numwait"))
         .orderBy(desc("numwait"), asc("s_name"))
         .limit(100)
-    },
+    }),
 
     // TPC-H q04 on the bucketed layout. On the raw fixtures q04 is the one
     // query whose selective predicate (l_commitdate < l_receiptdate) CANNOT
@@ -648,7 +647,7 @@ object Skew {
     // the filter a plain two-column comparison over stored values, and the
     // EXISTS semi-join to orders a co-located merge on the bucket key —
     // zero fact exchange. Same values as tpch_q04 (shared oracle).
-    "k05_bucketed_q04" -> { (s, dir) =>
+    Twin("k05_bucketed_q04", "tpch_q04", { (s, dir) =>
       val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
       val late = s.table(tli)
         .filter(col("l_commitdate") < col("l_receiptdate"))
@@ -661,12 +660,12 @@ object Skew {
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("order_count"))
         .orderBy("o_orderpriority")
-    },
+    }),
 
     // TPC-H q18 on the bucketed layout: the per-order quantity sum groups
     // on the bucket key (no exchange), and its join back to orders is a
     // co-located merge; only the customer join shuffles (its own key).
-    "k04_bucketed_q18" -> { (s, dir) =>
+    Twin("k04_bucketed_q18", "tpch_q18", { (s, dir) =>
       val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
       val sums = s.table(tli)
         .groupBy(col("l_orderkey"))
@@ -680,7 +679,7 @@ object Skew {
           col("o_orderdate"), col("o_totalprice"), col("sum_qty"))
         .orderBy(desc("o_totalprice"), asc("o_orderdate"), asc("o_orderkey"))
         .limit(100)
-    },
+    }),
 
     // TPC-H q16 on the pre-aggregated pairs projection (writeStagedQ16Pairs):
     // the part⋈partsupp expansion AND the distinct are paid once at ingest;
@@ -688,7 +687,7 @@ object Skew {
     // broadcast anti join on the complaints suppliers, and a plain COUNT(*)
     // (pairs are distinct by construction, so no two-phase distinct
     // aggregate). Same values as tpch_q16 (shared oracle).
-    "k36_pairs_q16" -> { (s, dir) =>
+    Twin("k36_pairs_q16", "tpch_q16", { (s, dir) =>
       val tp = writeStagedQ16Pairs(s, dir)
       val complaints = t(s, dir, "supplier")
         .filter(col("s_suppkey") % 13 === 0) // supplier_x comment filter
@@ -702,7 +701,7 @@ object Skew {
         .agg(count(lit(1)).as("supplier_cnt"))
         .orderBy(desc("supplier_cnt"), asc("p_brand"), asc("p_type"),
           asc("p_size"))
-    },
+    }),
 
     // TPC-H q17 on the per-part quantity grid (writeStagedPartQtyGrid):
     // the correlated per-part avg is a STORED aggregate, so the query is
@@ -714,9 +713,9 @@ object Skew {
     // group-by into 2 M part groups per query at sf100), the grid prepays
     // that group-by at ingest. Same values as tpch_q17 (shared oracle):
     // see the writer's recovery argument.
-    "k61_grid_q17" -> { (s, dir) =>
+    Twin("k61_grid_q17", "tpch_q17", { (s, dir) =>
       val tg = writeStagedPartQtyGrid(s, dir)
-      // part_x's p_container, synthesized exactly like the CTE (k06/k36
+      // part_x's p_container, synthesized exactly like the CTE (k36
       // precedent for replaying the view's derived columns)
       val container = concat(
         when(col("p_partkey") % 5 === 0, "SM")
@@ -742,38 +741,7 @@ object Skew {
         .join(broadcast(thr), col("l_partkey") === col("tk"))
         .filter(col("l_quantity") < col("qty_thr"))
         .agg((sumd(dmoney(col("l_extendedprice"))) / 7.0).as("avg_yearly"))
-    },
-
-    // TPC-H q16 on the staged layout: partsupp is a stored bucketed table
-    // (not a per-query cross-join expansion), part is co-bucketed on the
-    // join key — the part⋈partsupp join is a zero-exchange merge; only the
-    // small filtered result shuffles for the distinct-count group-by, and
-    // the complaints suppliers broadcast for the NOT IN anti join. Same
-    // values as tpch_q16 (shared oracle).
-    "k06_staged_q16" -> { (s, dir) =>
-      val (tps, tpt) = writeStagedPartsupp(s, dir, defaultBuckets)
-      // supplier_x's synthesized s_comment, filtered exactly like the query
-      val complaints = t(s, dir, "supplier")
-        .withColumn("s_comment",
-          when(col("s_suppkey") % 13 === 0,
-            lit("slow Customer service Complaints logged"))
-            .otherwise(lit("dependable supplier")))
-        .filter(col("s_comment").like("%Customer%Complaints%"))
-        .select(col("s_suppkey"))
-      val pt = s.table(tpt)
-        .filter(col("p_brand") =!= "Brand#45" &&
-          !col("p_type").like("MEDIUM%") &&
-          col("p_size").isin(49, 14, 23, 45, 19, 3, 36, 9))
-        .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-      s.table(tps)
-        .join(broadcast(complaints),
-          col("ps_suppkey") === col("s_suppkey"), "leftanti")
-        .join(pt.hint("merge"), col("p_partkey") === col("ps_partkey"))
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("ps_suppkey")).as("supplier_cnt"))
-        .orderBy(desc("supplier_cnt"), asc("p_brand"), asc("p_type"),
-          asc("p_size"))
-    },
+    }),
 
     // TPC-H q05 on the bucketed layout. On raw fixtures q05 is the worst
     // scaler in the suite (sf10→sf30 marginal 18x the proxy): BOTH facts
@@ -782,7 +750,7 @@ object Skew {
     // merge (zero fact exchange); supplier⋈nation⋈region broadcasts; the
     // single remaining shuffle is the already-joined row stream against
     // customer on its own key. Same values as tpch_q05 (shared oracle).
-    "k07_bucketed_q05" -> { (s, dir) =>
+    Twin("k07_bucketed_q05", "tpch_q05", { (s, dir) =>
       val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
       val nr = t(s, dir, "nation")
         .join(t(s, dir, "region").filter(col("r_name") === "ASIA"),
@@ -811,7 +779,7 @@ object Skew {
         .agg(sumd(dmoney(col("l_extendedprice")) *
           (one - drate(col("l_discount")))).as("revenue"))
         .orderBy(desc("revenue"))
-    },
+    }),
 
     // TPC-H q11 on the staged partsupp: the per-query synthesis cross-join
     // disappears (the table is stored), supplier⋈nation broadcasts, and
@@ -824,7 +792,7 @@ object Skew {
     // span vs 5 jobs/795 ms; medians 1.156 -> 0.974 s at sf10, -15.7%).
     // Exact i64 group sums re-summed 128-bit = the all-rows sum by
     // associativity. Same values as tpch_q11 (shared oracle).
-    "k08_staged_q11" -> { (s, dir) =>
+    Twin("k08_staged_q11", "tpch_q11", { (s, dir) =>
       staticPlan(s)
       val (tps, _) = writeStagedPartsupp(s, dir, defaultBuckets)
       graft.functions.DecimalFunctions.register(s)
@@ -847,13 +815,13 @@ object Skew {
         .join(broadcast(threshold), col("value") > col("t"), "inner")
         .select(col("ps_partkey"), col("value"))
         .orderBy(desc("value"))
-    },
+    }),
 
     // TPC-H q03 on the bucketed layout: lineitem⋈orders is a co-located
     // merge on the bucket key, the mktsegment-filtered customer broadcasts,
     // and the per-orderkey revenue aggregation is bucket-local — the only
     // data movement is the final top-10. Same values as tpch_q03.
-    "k09_bucketed_q03" -> { (s, dir) =>
+    Twin("k09_bucketed_q03", "tpch_q03", { (s, dir) =>
       val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
       val cust = t(s, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
@@ -874,14 +842,14 @@ object Skew {
           (one - drate(col("l_discount")))).as("revenue"))
         .orderBy(desc("revenue"), asc("o_orderdate"), asc("l_orderkey"))
         .limit(10)
-    },
+    }),
 
     // TPC-H q13 on the custkey-bucketed layout (the same staged tables
     // k02 uses): the customer LEFT JOIN orders is a co-located merge, the
     // per-customer order count is bucket-local, and only the tiny
     // c_count histogram crosses the wire. o_comment is an orders_x
     // schema-completion column, derived here exactly like the CTE.
-    "k10_bucketed_q13" -> { (s, dir) =>
+    Twin("k10_bucketed_q13", "tpch_q13", { (s, dir) =>
       val (to, tc) = writeBucketed(s, dir, defaultBuckets)
       val ordersC = s.table(to)
         .withColumn("o_comment",
@@ -898,7 +866,7 @@ object Skew {
         .groupBy(col("c_count"))
         .agg(count(lit(1)).as("custdist"))
         .orderBy(desc("custdist"), desc("c_count"))
-    },
+    }),
 
     // TPC-H q02 on the staged partsupp: the correlated MIN(ps_supplycost)
     // subquery becomes a bucket-local aggregation over the stored table,
@@ -906,7 +874,7 @@ object Skew {
     // bucket key (as is the part join), and the EUROPE supplier side
     // broadcasts. The supplier_x/part_x schema-completion columns are
     // derived exactly like the CTEs. Same values as tpch_q02.
-    "k11_staged_q02" -> { (s, dir) =>
+    Twin("k11_staged_q02", "tpch_q02", { (s, dir) =>
       staticPlan(s)
       val (tps, tpt) = writeStagedPartsupp(s, dir, defaultBuckets)
       val supEu = t(s, dir, "supplier")
@@ -950,7 +918,7 @@ object Skew {
         .orderBy(desc("s_acctbal"), asc("n_name"), asc("s_name"),
           asc("p_partkey"))
         .limit(100)
-    },
+    }),
 
     // TPC-H q09 on the bucketed layout, with the partsupp JOIN ELIMINATED.
     // The synthesized partsupp is pure integer arithmetic over
@@ -967,7 +935,7 @@ object Skew {
     // this is the generated-column / join-index pattern: a join to a
     // DERIVABLE table is a per-row expression, not data movement.
     // Same values as tpch_q09 (shared oracle).
-    "k13_bucketed_q09" -> { (s, dir) =>
+    Twin("k13_bucketed_q09", "tpch_q09", { (s, dir) =>
       val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
       val redParts = t(s, dir, "part")
         .filter(col("p_name").like("%red%")).select(col("p_partkey"))
@@ -1003,7 +971,7 @@ object Skew {
             dmoney(col("ps_supplycost")) * drate(col("l_quantity")))
           .as("sum_profit"))
         .orderBy(asc("nation"), desc("o_year"))
-    },
+    }),
 
     // TPC-H q10 on the bucketed layout: lineitem(R-returns)⋈orders(3-month
     // window) is a co-located merge, revenue is pre-aggregated per custkey
@@ -1011,7 +979,7 @@ object Skew {
     // aggregated rows, not fact rows), and nation broadcasts. The wide
     // customer table never shuffles — AQE broadcasts the small aggregated
     // side at runtime. Same values as tpch_q10 (shared oracle).
-    "k14_bucketed_q10" -> { (s, dir) =>
+    Twin("k14_bucketed_q10", "tpch_q10", { (s, dir) =>
       val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
       val li = s.table(tli).filter(col("l_returnflag") === "R")
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
@@ -1039,7 +1007,7 @@ object Skew {
           col("c_comment"))
         .orderBy(desc("revenue"), asc("c_custkey"))
         .limit(20)
-    },
+    }),
 
     // TPC-H q15 with the double-scan FUSED: the SQL text references the
     // revenue0 CTE twice (per-supplier group + global max), and Catalyst
@@ -1049,7 +1017,7 @@ object Skew {
     // consumers), then the max and the winner join both read the tiny
     // cached result; supplier never shuffles (the <=handful of winners
     // broadcast). Same values as tpch_q15 (shared oracle).
-    "k15_fused_q15" -> { (s, dir) =>
+    Twin("k15_fused_q15", "tpch_q15", { (s, dir) =>
       val rev0 = t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01 00:00:00").cast("timestamp"))
@@ -1070,7 +1038,7 @@ object Skew {
         .select(col("s_suppkey"), col("s_name"), col("s_address"),
           col("s_phone"), col("total_revenue"))
         .orderBy(asc("s_suppkey"))
-    },
+    }),
 
     // TPC-H q01 on the staged layout with STORED-UNSCALED money/rate
     // columns: the default plan spends its time converting 4 doubles/row
@@ -1082,7 +1050,7 @@ object Skew {
     // results. Product magnitudes are bounded by the TPC-H domains
     // (price < 1e6 at scale 4 -> |charge_u| < ~1.2e18 < 2^63). Same values
     // as tpch_q01 (shared oracle).
-    "k16_staged_q01" -> { (s, dir) =>
+    Twin("k16_staged_q01", "tpch_q01", { (s, dir) =>
       val (tli, _) = writeBucketedTpch(s, dir, defaultBuckets)
       graft.functions.DecimalFunctions.register(s)
       s.table(tli)
@@ -1107,7 +1075,7 @@ object Skew {
           (col("sum_disc") / col("count_order")).as("avg_disc"),
           col("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
-    },
+    }),
 
     // TPC-H q08 on the bucketed layout: the 8-way join collapses to ONE
     // co-located merge (lineitem⋈orders on the bucket key) plus three
@@ -1116,7 +1084,7 @@ object Skew {
     // join index k07 uses), STANDARD parts and supplier⋈nation broadcast.
     // Zero fact exchange; the only shuffle is the |years|-row final
     // aggregate. Same values as tpch_q08 (shared oracle).
-    "k17_bucketed_q08" -> { (s, dir) =>
+    Twin("k17_bucketed_q08", "tpch_q08", { (s, dir) =>
       val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
       val amKeys = t(s, dir, "nation")
         .join(t(s, dir, "region").filter(col("r_name") === "AMERICA"),
@@ -1146,7 +1114,7 @@ object Skew {
             .otherwise(lit(0).cast(DecimalType(12, 4)))) / sumd(volume), 6)
           .as("mkt_share"))
         .orderBy(asc("o_year"))
-    },
+    }),
 
     // TPC-H q14 with the part shuffle ELIMINATED: the month of lineitem is
     // pre-aggregated to exact unscaled-i64 revenue per partkey (p_type is
@@ -1155,7 +1123,7 @@ object Skew {
     // streaming scan of part — neither fact nor dimension is ever
     // exchanged beyond the tiny per-partkey partials. Same values as
     // tpch_q14 (shared oracle).
-    "k18_fused_q14" -> { (s, dir) =>
+    Twin("k18_fused_q14", "tpch_q14", { (s, dir) =>
       graft.functions.DecimalFunctions.register(s)
       val la = t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-09-01 00:00:00").cast("timestamp") &&
@@ -1172,7 +1140,7 @@ object Skew {
         .agg(round(lit(100.0) *
           expr("sum_unscaled128(CASE WHEN p_type LIKE 'PROMO%' THEN gu ELSE 0L END, 8, 4)") /
           expr("sum_unscaled128(gu, 8, 4)"), 6).as("promo_revenue"))
-    },
+    }),
 
     // TPC-H q12 on the bucketed layout: on raw fixtures ALL of q12's
     // selective predicates (shipmode + three date comparisons) are over
@@ -1180,7 +1148,7 @@ object Skew {
     // and recomputed. The staged table stores them, the filters reach the
     // scan, and the orders join is a co-located merge — zero fact
     // exchange. Same values as tpch_q12.
-    "k12_bucketed_q12" -> { (s, dir) =>
+    Twin("k12_bucketed_q12", "tpch_q12", { (s, dir) =>
       val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
       val li = s.table(tli)
         .filter(col("l_shipmode").isin("MAIL", "SHIP") &&
@@ -1198,7 +1166,7 @@ object Skew {
           sum(when(!urgent, 1L).otherwise(0L)).cast("long")
             .as("low_line_count"))
         .orderBy("l_shipmode")
-    },
+    }),
 
     // TPC-H q05 on the denormalized projection: the 6-way join collapses
     // to ONE pruned fact scan (o_orderdate is the table's sort key, so the
@@ -1208,7 +1176,7 @@ object Skew {
     // aggregate. q05 was the suite's worst scaler (sf10→sf30 marginal 18×
     // the proxy, both facts shuffled); here NOTHING is exchanged. Same
     // values as tpch_q05 (shared oracle).
-    "k19_denorm_q05" -> { (s, dir) =>
+    Twin("k19_denorm_q05", "tpch_q05", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
       graft.functions.DecimalFunctions.register(s)
       // With the supplier nation STORED on the fact row (l_snation), the
@@ -1236,7 +1204,7 @@ object Skew {
         .join(broadcast(asiaN), col("l_snation") === col("n_nationkey"))
         .select(col("n_name"), col("revenue"))
         .orderBy(desc("revenue"))
-    },
+    }),
 
     // TPC-H q07 on the denormalized projection: same single-scan shape —
     // the two-year shipdate window prunes via the sort order (shipdate
@@ -1246,7 +1214,7 @@ object Skew {
     // exactly (both sides are restricted to the two nations, so "different"
     // ≡ the two ordered pairs). Zero fact exchange; the final aggregate is
     // |2 pairs × years| rows. Same values as tpch_q07 (shared oracle).
-    "k20_denorm_q07" -> { (s, dir) =>
+    Twin("k20_denorm_q07", "tpch_q07", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
       graft.functions.DecimalFunctions.register(s)
       val twoN = Seq("NATION_5", "NATION_10")
@@ -1275,7 +1243,7 @@ object Skew {
         .select(col("supp_nation"), col("cust_nation"), col("l_year"),
           col("revenue"))
         .orderBy(asc("supp_nation"), asc("cust_nation"), asc("l_year"))
-    },
+    }),
 
     // TPC-H q03 on the denormalized projection: the customer segment and
     // order date are STORED on the fact row, so the shipping-priority
@@ -1283,7 +1251,7 @@ object Skew {
     // order, the segment via dictionary filters) + a group-by over only the
     // ~2% surviving rows + top-10. No joins at all. Same values as
     // tpch_q03 (shared oracle).
-    "k21_denorm_q03" -> { (s, dir) =>
+    Twin("k21_denorm_q03", "tpch_q03", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
       graft.functions.DecimalFunctions.register(s)
       s.table(tdn)
@@ -1295,7 +1263,7 @@ object Skew {
         .agg(expr("sum_unscaled128(l_rev_u, 8, 4)").as("revenue"))
         .orderBy(desc("revenue"), asc("o_orderdate"), asc("l_orderkey"))
         .limit(10)
-    },
+    }),
 
     // TPC-H q06 on the denormalized projection: the forecast is a pure
     // long-multiply + 128-bit-sum kernel over stored unscaled integers —
@@ -1303,7 +1271,7 @@ object Skew {
     // filter on the raw double columns exactly like the SQL text, and the
     // ungrouped aggregate never shuffles anything. Same values as
     // tpch_q06 (shared oracle).
-    "k22_denorm_q06" -> { (s, dir) =>
+    Twin("k22_denorm_q06", "tpch_q06", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
       graft.functions.DecimalFunctions.register(s)
       s.table(tdn)
@@ -1312,7 +1280,7 @@ object Skew {
           col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
         .agg(expr("sum_unscaled128(l_price_u * l_disc_u, 8, 4)")
           .as("revenue"))
-    },
+    }),
 
     // TPC-H q09 on the denormalized projection: k13's inline partsupp
     // inversion (the synthesized table is arithmetic — no join) PLUS the
@@ -1320,7 +1288,7 @@ object Skew {
     // the fact, two broadcasts, and the |nation × year| final aggregate.
     // Profit per row is exact unscaled-i64 arithmetic (revenue at scale 8
     // minus supplycost_u(4) × qty_u(4)). Same values as tpch_q09.
-    "k23_denorm_q09" -> { (s, dir) =>
+    Twin("k23_denorm_q09", "tpch_q09", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
       graft.functions.DecimalFunctions.register(s)
       val redParts = t(s, dir, "part")
@@ -1357,7 +1325,7 @@ object Skew {
           "sum_unscaled128(l_rev_u - ps_cost_u * l_qty_u, 8, 4)")
           .as("sum_profit"))
         .orderBy(asc("nation"), desc("o_year"))
-    },
+    }),
 
     // TPC-H q10 on the denormalized projection: the returns report is one
     // filtered scan (returnflag dictionary filter + the 3-month window on
@@ -1365,7 +1333,7 @@ object Skew {
     // is joined only against the ~|active customers| aggregate (AQE
     // broadcasts it), nation broadcasts, top-20. Neither fact nor customer
     // is ever shuffled. Same values as tpch_q10 (shared oracle).
-    "k24_denorm_q10" -> { (s, dir) =>
+    Twin("k24_denorm_q10", "tpch_q10", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
       graft.functions.DecimalFunctions.register(s)
       val rev = s.table(tdn)
@@ -1389,7 +1357,7 @@ object Skew {
           col("c_comment"))
         .orderBy(desc("revenue"), asc("c_custkey"))
         .limit(20)
-    },
+    }),
 
     // TPC-H q08 on the denormalized projection: the 8-way join is one
     // fact scan — the 2-year window prunes via the sort key, the STANDARD
@@ -1398,7 +1366,7 @@ object Skew {
     // stored l_cnation, and the supplier nation broadcasts. The only
     // shuffle is the |years|-row final aggregate. Same values as tpch_q08
     // (shared oracle; k17 is the bucketed variant of the same query).
-    "k25_denorm_q08" -> { (s, dir) =>
+    Twin("k25_denorm_q08", "tpch_q08", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
       graft.functions.DecimalFunctions.register(s)
       val amKeys = t(s, dir, "nation")
@@ -1422,7 +1390,7 @@ object Skew {
           expr("sum_unscaled128(CASE WHEN nation = 'NATION_3' THEN l_rev_u ELSE 0L END, 8, 4)") /
             expr("sum_unscaled128(l_rev_u, 8, 4)"), 6).as("mkt_share"))
         .orderBy(asc("o_year"))
-    },
+    }),
 
     // TPC-H q14 on the denormalized projection: the promo-share month is
     // ~1/80 of the table and prunes via the sort key; p_type is stored on
@@ -1436,7 +1404,7 @@ object Skew {
     // is never null — true of the TPC-H spec and these fixtures. If null
     // p_type ever becomes possible, store a separate dn_pk-matched boolean
     // at ingest instead (same caveat applies to k25's l_ptype equality).
-    "k26_denorm_q14" -> { (s, dir) =>
+    Twin("k26_denorm_q14", "tpch_q14", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
       graft.functions.DecimalFunctions.register(s)
       s.table(tdn)
@@ -1446,7 +1414,7 @@ object Skew {
         .agg(round(lit(100.0) *
           expr("sum_unscaled128(CASE WHEN l_ptype LIKE 'PROMO%' THEN l_rev_u ELSE 0L END, 8, 4)") /
           expr("sum_unscaled128(l_rev_u, 8, 4)"), 6).as("promo_revenue"))
-    },
+    }),
 
     // TPC-H q22 on the custkey-bucketed layout: the synthesized phone
     // prefix is CAST(10 + c_nationkey AS STRING), so the country-code IN
@@ -1454,7 +1422,7 @@ object Skew {
     // threshold broadcasts (1 row); and the NOT EXISTS anti join against
     // big-ticket orders is a CO-LOCATED merge on the bucket key — neither
     // table is ever shuffled. Same values as tpch_q22 (shared oracle).
-    "k27_bucketed_q22" -> { (s, dir) =>
+    Twin("k27_bucketed_q22", "tpch_q22", { (s, dir) =>
       staticPlan(s)
       val (to, tc) = writeBucketed(s, dir, defaultBuckets)
       // '13','31','23','29','30','18','17' as (prefix - 10) nation keys
@@ -1477,7 +1445,7 @@ object Skew {
         .agg(count(lit(1)).as("numcust"),
           sumd(dmoney(col("c_acctbal"))).as("totacctbal"))
         .orderBy("cntrycode")
-    })
+    }))
 
   val oracles: Map[String, String] = Map(
     "k02_bucketed_join" -> s"""
@@ -1490,35 +1458,5 @@ object Skew {
       SELECT c_mktsegment, COUNT(*) AS n_orders,
              ${sql.sumd(sql.dbig("o_totalprice"))} AS total
       FROM orders JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-
-    // identical values to the plain TPC-H queries — layout must not change
-    // semantics, so the oracle is literally theirs
-    "k03_bucketed_q21" -> graft.queries.Tpch.oracles("tpch_q21"),
-    "k04_bucketed_q18" -> graft.queries.Tpch.oracles("tpch_q18"),
-    "k05_bucketed_q04" -> graft.queries.Tpch.oracles("tpch_q04"),
-    "k06_staged_q16" -> graft.queries.Tpch.oracles("tpch_q16"),
-    "k36_pairs_q16" -> graft.queries.Tpch.oracles("tpch_q16"),
-    "k61_grid_q17" -> graft.queries.Tpch.oracles("tpch_q17"),
-    "k07_bucketed_q05" -> graft.queries.Tpch.oracles("tpch_q05"),
-    "k08_staged_q11" -> graft.queries.Tpch.oracles("tpch_q11"),
-    "k10_bucketed_q13" -> graft.queries.Tpch.oracles("tpch_q13"),
-    "k11_staged_q02" -> graft.queries.Tpch.oracles("tpch_q02"),
-    "k12_bucketed_q12" -> graft.queries.Tpch.oracles("tpch_q12"),
-    "k09_bucketed_q03" -> graft.queries.Tpch.oracles("tpch_q03"),
-    "k13_bucketed_q09" -> graft.queries.Tpch.oracles("tpch_q09"),
-    "k14_bucketed_q10" -> graft.queries.Tpch.oracles("tpch_q10"),
-    "k15_fused_q15" -> graft.queries.Tpch.oracles("tpch_q15"),
-    "k16_staged_q01" -> graft.queries.Tpch.oracles("tpch_q01"),
-    "k17_bucketed_q08" -> graft.queries.Tpch.oracles("tpch_q08"),
-    "k18_fused_q14" -> graft.queries.Tpch.oracles("tpch_q14"),
-    "k19_denorm_q05" -> graft.queries.Tpch.oracles("tpch_q05"),
-    "k20_denorm_q07" -> graft.queries.Tpch.oracles("tpch_q07"),
-    "k21_denorm_q03" -> graft.queries.Tpch.oracles("tpch_q03"),
-    "k22_denorm_q06" -> graft.queries.Tpch.oracles("tpch_q06"),
-    "k23_denorm_q09" -> graft.queries.Tpch.oracles("tpch_q09"),
-    "k24_denorm_q10" -> graft.queries.Tpch.oracles("tpch_q10"),
-    "k25_denorm_q08" -> graft.queries.Tpch.oracles("tpch_q08"),
-    "k26_denorm_q14" -> graft.queries.Tpch.oracles("tpch_q14"),
-    "k27_bucketed_q22" -> graft.queries.Tpch.oracles("tpch_q22"))
+      GROUP BY c_mktsegment ORDER BY c_mktsegment""")
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.QueryDsl.Q
+import graft.QueryDsl.{Q, Twin}
 
 /** Staged TPC-DS inventory: the weekly (Sunday) item × warehouse snapshot
   * grid materialized ONCE at ingest as a sorted parquet table.
@@ -83,10 +83,10 @@ object TpcdsLayout {
 
   /** q39 as a fused single-derivation program over the staged fact.
     *
-    * The text twin (k44) measured NEGATIVE at sf10 (+48%): the view path's
-    * synthesis is YEAR-PRUNED before the cross product materializes
-    * (d_year=2001 pushes through the date_dim equi-join into the
-    * generator), so each of q39's two CTE references derives only 1/5 of
+    * The staged-text twin of q39 measured NEGATIVE at sf10 (+48%, since
+    * retired): the view path's synthesis is YEAR-PRUNED before the cross
+    * product materializes (d_year=2001 pushes through the date_dim
+    * equi-join into the generator), so each of q39's two CTE references derives only 1/5 of
     * the grid, while the stored table is scanned in FULL twice — layout
     * beat by predicate pushdown into a generator. The fused program keeps
     * the stored fact but removes BOTH structural costs: ONE scan
@@ -150,9 +150,10 @@ object TpcdsLayout {
   def writeStagedSalesPricing(spark: SparkSession, dir: String)
       : (String, String, String) = {
     val dirH = Integer.toHexString(dir.hashCode).take(8)
-    // store_sales carries the report-class columns too (q67 needs
-    // store_sk/sales_price, q98 ext_sales_price); catalog/web stay at the
-    // 4 cross-channel pricing columns the q14/q23 class reads
+    // store_sales also carries the report-class columns (store_sk,
+    // sales_price, ext_sales_price) read by the since-retired q67/q98
+    // programs; catalog/web stay at the 4 cross-channel pricing columns
+    // the q14/q23 class reads
     val cols = Map(
       "ss" -> Seq("ss_sold_date_sk", "ss_item_sk", "ss_store_sk",
         "ss_quantity", "ss_list_price", "ss_sales_price",
@@ -266,56 +267,6 @@ object TpcdsLayout {
       LIMIT 100""")
   }
 
-  /** q67 with the ROLLUP re-aggregated from a finest-granularity base —
-    * the round-12 verdict's report-floor adjudication (task 4), informed
-    * by the DsProbe stage decomposition: Spark plans ROLLUP as
-    * Expand(x9 grouping sets) BEFORE the first aggregate, so the fact's
-    * joined rows are replicated nine times through the partial agg. All
-    * nine grouping sets are prefixes of the full 8-column tuple and the
-    * aggregate is a decimal SUM (associative, null-tolerant), so
-    * aggregating ONCE at finest granularity and rolling the (orders of
-    * magnitude smaller) base up is value-identical: each rollup row is
-    * the sum of a disjoint partition of base rows, and the text's
-    * per-set sumd (ROUND once, cast double) is applied only at the outer
-    * level. Runs over the staged pricing projection, so the synthesis
-    * CTE is out of the loop too. Values = tpcds_q67 (shared oracle). */
-  private def fusedQ67: Q = { (s, dir) =>
-    val (ssT, _, _) = writeStagedSalesPricing(s, dir)
-    graft.queries.Tpcds.ensureStar(s, dir)
-    val sqlh = graft.QueryDsl.sql
-    s.sql(s"""
-      SELECT * FROM
-        (SELECT i_category AS i_category, i_class AS i_class,
-                i_brand AS i_brand, i_product_name AS i_product_name,
-                d_year AS d_year, d_qoy AS d_qoy, d_moy AS d_moy,
-                s_store_id AS s_store_id, sumsales AS sumsales,
-                rank() OVER (PARTITION BY i_category
-                             ORDER BY sumsales DESC) rk
-         FROM
-           (SELECT i_category, i_class, i_brand, i_product_name, d_year,
-                   d_qoy, d_moy, s_store_id,
-                   CAST(ROUND(SUM(s0), 4) AS DOUBLE) sumsales
-            FROM
-              (SELECT i_category, i_class, i_brand, i_product_name, d_year,
-                      d_qoy, d_moy, s_store_id,
-                      SUM(${sqlh.dbig("coalesce(ss_sales_price * ss_quantity, 0)")}) s0
-               FROM $ssT, date_dim, store, item
-               WHERE ss_sold_date_sk = d_date_sk
-                 AND ss_item_sk = i_item_sk
-                 AND ss_store_sk = s_store_sk
-                 AND d_month_seq BETWEEN 120 AND 120 + 11
-               GROUP BY i_category, i_class, i_brand, i_product_name,
-                        d_year, d_qoy, d_moy, s_store_id) base
-            GROUP BY ROLLUP(i_category, i_class, i_brand, i_product_name,
-                            d_year, d_qoy, d_moy, s_store_id)) dw1) dw2
-      WHERE rk <= 100
-      ORDER BY i_category NULLS FIRST, i_class NULLS FIRST,
-               i_brand NULLS FIRST, i_product_name NULLS FIRST,
-               d_year NULLS FIRST, d_qoy NULLS FIRST, d_moy NULLS FIRST,
-               s_store_id NULLS FIRST, sumsales NULLS FIRST, rk NULLS FIRST
-      LIMIT 100""")
-  }
-
   /** q64 with the twice-referenced cross_sales CTE derived ONCE — the
     * round-13 verdict's only unadjudicated over-bar TPC-DS shape
     * (1.85-2.06x across two rounds, task 7).
@@ -325,7 +276,7 @@ object TpcdsLayout {
     * filters into each copy, so the two subtrees are unequal and
     * ReuseExchange cannot share them — the entire 17-way join (plus the
     * cs_ui catalog-returns aggregate it contains) runs twice per query.
-    * The DsProbe decomposition at sf10 confirms: the two join pipelines
+    * A stage decomposition at sf10 confirms: the two join pipelines
     * are mirror images, each ~half the runtime (see OPTIMIZATION_r14.md).
     * The fused program computes cross_sales ONCE restricted to
     * d1.d_year IN (1999, 2000) — equivalent because syear IS d1.d_year,
@@ -424,39 +375,9 @@ object TpcdsLayout {
                cs1.s1, cs2.s1""")
   }
 
-  /** A tpcds text with ONE star view re-pointed at a stored table for
-    * the duration of the sql() analysis (same restore discipline as
-    * [[staged]]). */
-  private def repointed(name: String, view: String)(
-      tableOf: (SparkSession, String) => String): Q = { (s, dir) =>
-    val tn = tableOf(s, dir)
-    graft.queries.Tpcds.ensureStar(s, dir)
-    s.sql(s"CREATE OR REPLACE TEMPORARY VIEW $view AS SELECT * FROM $tn")
-    try s.sql(graft.queries.Tpcds.texts(name).trim)
-    finally s.sql(s"CREATE OR REPLACE TEMPORARY VIEW $view AS " +
-      graft.queries.Tpcds.viewBody(view))
-  }
-
-  val queries: Map[String, Q] = Map(
-    "k44_staged_ds39" -> staged("tpcds_q39"),
-    "k45_staged_ds72" -> staged("tpcds_q72"),
-    "k48_fused_ds39" -> fusedQ39,
-    "k58_fused_ds14" -> fusedQ14,
-    "k59_fused_ds67" -> fusedQ67,
-    // q98 reads exactly three store_sales columns; the staged pricing
-    // projection replaces the synthesis scan (k44 lesson checked: q98's
-    // date window is a JOIN-derived filter, not a generator-prunable
-    // predicate, so the stored read wins or ties — measured at sf10)
-    "k60_staged_ds98" -> repointed("tpcds_q98", "store_sales")(
-      (s, d) => writeStagedSalesPricing(s, d)._1),
-    "k62_fused_ds64" -> fusedQ64)
-
-  val oracles: Map[String, String] = Map(
-    "k44_staged_ds39" -> graft.queries.Tpcds.oracles("tpcds_q39"),
-    "k45_staged_ds72" -> graft.queries.Tpcds.oracles("tpcds_q72"),
-    "k48_fused_ds39" -> graft.queries.Tpcds.oracles("tpcds_q39"),
-    "k58_fused_ds14" -> graft.queries.Tpcds.oracles("tpcds_q14"),
-    "k59_fused_ds67" -> graft.queries.Tpcds.oracles("tpcds_q67"),
-    "k60_staged_ds98" -> graft.queries.Tpcds.oracles("tpcds_q98"),
-    "k62_fused_ds64" -> graft.queries.Tpcds.oracles("tpcds_q64"))
+  val twins: Seq[Twin] = Seq(
+    Twin("k45_staged_ds72", "tpcds_q72", staged("tpcds_q72")),
+    Twin("k48_fused_ds39", "tpcds_q39", fusedQ39),
+    Twin("k58_fused_ds14", "tpcds_q14", fusedQ14),
+    Twin("k62_fused_ds64", "tpcds_q64", fusedQ64))
 }

@@ -509,57 +509,10 @@ object Tpch {
   /** Fused Spark-side implementations for the queries where the SQL text's
     * plan pays for the same data twice (oracles stay the SQL text — values
     * are bit-identical, asserted by the driver gate and GraftSpec). These
-    * are exposed as the k28–k31 strategy twins, NEVER as the tpch_q*
-    * defaults.
-    *
-    * Everything else runs the dialect-common SQL through the full Catalyst
-    * binder path; these two override only the execution strategy:
-    *   - q11: the HAVING scalar subquery re-synthesizes partsupp and
-    *     re-aggregates it. Fused: one synthesis+join+aggregate pass,
-    *     localCheckpoint'd at ~|part| rows; the global threshold and the
-    *     HAVING filter both read the materialized per-part sums. Exactness:
-    *     per-part sums are kept as unscaled i64 (exact HALF_UP conversion),
-    *     and the 128-bit re-sum of the group sums equals the all-rows sum
-    *     by associativity.
-    *   - q16: Catalyst cannot push the part filter through the partsupp
-    *     generator (the 4-slot cross join runs over ALL parts, then joins
-    *     the ~12%-filtered part). Fused: synthesize partsupp only for the
-    *     filtered parts (ps_partkey = p_partkey is injective, so the
-    *     restriction commutes with the inner join exactly).
-    */
+    * are exposed as strategy twins, NEVER as the tpch_q* defaults. */
   private object Fused {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-
-    val q11: Q = { (s, dir) =>
-      Seq("nation", "supplier", "part").foreach(Engine.table(s, dir, _))
-      graft.functions.DecimalFunctions.register(s)
-      val sup = Engine.table(s, dir, "supplier")
-        .join(Engine.table(s, dir, "nation")
-          .filter(col("n_name") === "NATION_7"),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"))
-      val byPart = s.sql(partsuppSelect)
-        .join(broadcast(sup), col("ps_suppkey") === col("s_suppkey"))
-        // row value as unscaled i64 at scale 4: |supplycost_u| < 1e7,
-        // availqty <= 1e4 -> per-row < 1e11, per-part (4 rows) < 4e11
-        .withColumn("row_u",
-          expr("to_unscaled64(ps_supplycost, 12, 4)") * col("ps_availqty"))
-        .groupBy(col("ps_partkey"))
-        .agg(sum(col("row_u")).as("gu"))
-        .localCheckpoint()
-      // total over groups == total over rows (integer associativity);
-      // finishing matches sumd: exact decimal at scale 4 -> double
-      val thr = byPart
-        .agg((expr("sum_unscaled128(gu, 4, 4)") * lit(0.001)).as("t"))
-      byPart
-        .withColumn("value",
-          (col("gu").cast(DecimalType(38, 4)) / lit(10000))
-            .cast(DecimalType(24, 4)).cast(DoubleType))
-        .join(broadcast(thr), col("value") > col("t"))
-        .select(col("ps_partkey"), col("value"))
-        .orderBy(desc("value"))
-    }
 
     /** q17: the SQL plan computes the per-part avg over ALL of lineitem
       * (a full shuffle by partkey) and scans lineitem twice; only ~1/40 of
@@ -647,62 +600,21 @@ object Tpch {
         .select(col("s_name"), col("s_address"))
         .orderBy(asc("s_name"))
     }
-
-    val q16: Q = { (s, dir) =>
-      Seq("supplier", "part").foreach(Engine.table(s, dir, _))
-      val pt = Engine.table(s, dir, "part")
-        .filter(col("p_brand") =!= "Brand#45" &&
-          !col("p_type").like("MEDIUM%") &&
-          col("p_size").isin(49, 14, 23, 45, 19, 3, 36, 9))
-        .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-      val sCnt = Engine.table(s, dir, "supplier")
-        .agg(count(lit(1)).as("s_count"))
-      val complaints = Engine.table(s, dir, "supplier")
-        .filter(col("s_suppkey") % 13 === 0) // supplier_x comment filter
-        .select(col("s_suppkey"))
-      pt.crossJoin(broadcast(sCnt))
-        .select(col("p_partkey"), col("p_brand"), col("p_type"),
-          col("p_size"), col("s_count"),
-          explode(array((0 to 3).map(i => lit(i.toLong)): _*)).as("i"))
-        .withColumn("ps_suppkey",
-          pmod(col("p_partkey") - 1 +
-            col("i") * floor(col("s_count") / lit(4)).cast(LongType),
-            col("s_count")) + 1)
-        .join(broadcast(complaints),
-          col("ps_suppkey") === col("s_suppkey"), "leftanti")
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("ps_suppkey")).as("supplier_cnt"))
-        .orderBy(desc("supplier_cnt"), asc("p_brand"), asc("p_type"),
-          asc("p_size"))
-    }
   }
 
-  /** The pure-SQL-text execution path for a query, regardless of fused
-    * overrides (spec probes assert optimizer behavior on the SQL plans). */
-  private[graft] def sqlTextQuery(name: String): Q = run(texts(name))
-
   /** The tpch_q* defaults are ALWAYS the Catalyst-planned SQL texts.
-    * Round-9 verdict: the four fused DataFrame programs used to silently
+    * Round-9 verdict: the fused DataFrame programs used to silently
     * replace their tpch_q* defaults, blurring the default/twin boundary —
-    * they now live as explicit k28–k31 strategy twins (`fusedTwins`). */
+    * they now live as explicit strategy twins (`twins`). */
   val queries: Map[String, Q] =
     texts.map { case (name, text) => name -> run(text) }
 
-  /** Manual plan-rewrite twins of four TPC-H queries, reported under
-    * k-names like the layout twins (same-run pairs in bench.json). Values
-    * are bit-identical to the SQL texts (GraftSpec twin-rows assertion +
-    * the shared DuckDB oracle). */
-  val fusedTwins: Map[String, Q] = Map(
-    "k28_fused_q11" -> Fused.q11, "k29_fused_q16" -> Fused.q16,
-    "k30_fused_q17" -> Fused.q17, "k31_fused_q20" -> Fused.q20)
+  /** Manual plan-rewrite twins, reported under k-names like the layout
+    * twins. Values are bit-identical to the SQL texts (GraftSpec twin-rows
+    * assertion + the shared DuckDB oracle). */
+  val twins: Seq[Twin] = Seq(
+    Twin("k30_fused_q17", "tpch_q17", Fused.q17),
+    Twin("k31_fused_q20", "tpch_q20", Fused.q20))
 
   val oracles: Map[String, String] = texts.map { case (n, t) => n -> wrap(t) }
-
-  /** Twin oracles are literally the defaults' — a strategy rewrite must
-    * not change semantics. */
-  val fusedTwinOracles: Map[String, String] = Map(
-    "k28_fused_q11" -> oracles("tpch_q11"),
-    "k29_fused_q16" -> oracles("tpch_q16"),
-    "k30_fused_q17" -> oracles("tpch_q17"),
-    "k31_fused_q20" -> oracles("tpch_q20"))
 }

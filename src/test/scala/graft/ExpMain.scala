@@ -70,14 +70,12 @@ object ExpMain {
     "k08_noaqe" -> noAqe("k08_staged_q11"),
     "k11_noaqe" -> noAqe("k11_staged_q02"),
     "k27_noaqe" -> noAqe("k27_bucketed_q22"),
-    "k29_noaqe" -> noAqe("k29_fused_q16"),
     "k19_noaqe" -> noAqe("k19_denorm_q05"),
     "k10_noaqe" -> noAqe("k10_bucketed_q13"),
     "k12_noaqe" -> noAqe("k12_bucketed_q12"),
     "k16_noaqe" -> noAqe("k16_staged_q01"),
     "k22_noaqe" -> noAqe("k22_denorm_q06"),
     "k26_noaqe" -> noAqe("k26_denorm_q14"),
-    "k06_noaqe" -> noAqe("k06_staged_q16"),
     "k04_noaqe" -> noAqe("k04_bucketed_q18"),
     "k03_noaqe" -> noAqe("k03_bucketed_q21"))
 

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.QueryDsl.Twin
+
 /** Engine-wide invariants at sf0.001. The DuckDB oracle (driver-side /
   * scripts/check.py) covers value correctness for SQL-expressible queries;
   * these specs cover the operators the oracle can't express: sketch/LSH
@@ -22,15 +24,6 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   // at the driver's sf0.01 correctness gate.
   private val emptyOkAtTinySf = Set(
     "tpch_q02", "tpch_q07", "tpch_q11", "tpch_q20", "tpch_q21",
-    // staged-layout twins: same selective filters as their tpch originals
-    "k03_bucketed_q21", "k08_staged_q11", "k11_staged_q02",
-    // denorm twin of tpch_q07 (same NATION_5/NATION_10 pair, which has
-    // zero suppliers in the 10-supplier sf0.001 fixture; 4 rows +
-    // hash-match at the sf0.01 oracle gate)
-    "k20_denorm_q07",
-    // fused strategy twins of tpch_q11/q20: identical NATION_7 / NATION_4
-    // supplier filters, empty at sf0.001 for the same fixture reason
-    "k28_fused_q11", "k31_fused_q20",
     // q06 HAVING count>=10, q19 selective manager+zip filter
     "tpcds_q06", "tpcds_q19",
     // HAVING count>100 (q27/q28), OFFSET 10 past the tiny group count
@@ -43,13 +36,13 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     // than the 6k-lineitem fixture carries; 1/8/1/4 rows at sf0.01
     "tpcds_q54", "tpcds_q58", "tpcds_q85", "tpcds_q91")
 
-  /** A layout twin runs the IDENTICAL query text as its default original,
-    * so it inherits the original's tiny-sf emptiness exemption
-    * automatically (round-11 lesson: the k38/k39/k42 ClickBench twins were
-    * hand-listed nowhere and turned the suite red). */
+  /** A twin returns exactly its default's rows, so it inherits the
+    * default's tiny-sf emptiness exemption (round-11 lesson: the
+    * k38/k39/k42 ClickBench twins were hand-listed nowhere and turned the
+    * suite red). */
   private def emptyOk(name: String): Boolean =
     emptyOkAtTinySf.contains(name) ||
-      Bench.twinOf.get(name).exists(emptyOkAtTinySf.contains)
+      Twin.all.exists(t => t.name == name && emptyOkAtTinySf.contains(t.of))
 
   test("fixture schemas match the engine's assumptions (drift gate)") {
     // Round-5 lesson: the driver regenerated events.parquet with ts as
@@ -120,15 +113,16 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the fused DataFrame twins override only execution strategy; values
     // must be bit-identical to the dialect-common SQL (which is also the
     // oracle text). The tpch_q* defaults themselves are ALWAYS the
-    // Catalyst-planned SQL texts (round-9 verdict boundary fix).
+    // Catalyst-planned SQL texts. k28 and k29 are retired; k30 and k31
+    // remain.
     def rows(q: graft.QueryDsl.Q): Set[Seq[Any]] = {
       val df = q(spark, dir)
       df.select(df.columns.sorted.toSeq.map(col): _*).collect().map(_.toSeq).toSet
     }
-    graft.queries.Tpch.fusedTwins.foreach { case (name, fused) =>
-      val dflt = "tpch_" + name.takeRight(3)
-      assert(rows(fused) === rows(graft.queries.Tpch.sqlTextQuery(dflt)),
-        s"$name fused != $dflt SQL text")
+    assert(graft.queries.Tpch.twins.nonEmpty)
+    graft.queries.Tpch.twins.foreach { t =>
+      assert(rows(t.build) === rows(graft.queries.Tpch.queries(t.of)),
+        s"${t.name} fused != ${t.of} SQL text")
     }
   }
 
@@ -151,9 +145,34 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
         case x => x
       }).toSet
     }
-    Bench.twinOf.foreach { case (twin, dflt) =>
-      assert(rows(twin) === rows(dflt), s"$twin rows differ from $dflt")
+    Twin.all.foreach { t =>
+      assert(rows(t.name) === rows(t.of), s"${t.name} rows differ from ${t.of}")
     }
+  }
+
+  test("twin registry: names are unique and none shadows a non-twin query") {
+    val names = Twin.all.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, s"duplicate twins: ${names.diff(names.distinct)}")
+    val shadowing = names.filter(SparkEntry.defaultQueries.contains)
+    assert(shadowing.isEmpty, s"twins named like non-twin queries: $shadowing")
+  }
+
+  test("twin registry: every default is a non-twin query with an oracle") {
+    val bad = Twin.all.filterNot(t => SparkEntry.defaultQueries.contains(t.of) &&
+      SparkEntry.defaultOracles.contains(t.of))
+    assert(bad.isEmpty, s"twins of unknown or oracle-less defaults: ${bad.map(_.name)}")
+  }
+
+  test("twin registry: a twin's oracle is exactly its default's") {
+    val oracles = SparkEntry.oracleSql
+    val bad = Twin.all.filterNot(t => oracles.get(t.name) == oracles.get(t.of))
+    assert(bad.isEmpty, s"twin oracles that differ from the default's: ${bad.map(_.name)}")
+  }
+
+  test("twin registry: every twin and its default are in the bench headline") {
+    val unpaired = Twin.all.filterNot(t =>
+      Bench.headline.contains(t.name) && Bench.headline.contains(t.of))
+    assert(unpaired.isEmpty, s"twins without a same-run bench pair: ${unpaired.map(_.name)}")
   }
 
   test("cosine_sim: self-similarity is 1, matches scala computation") {
@@ -320,10 +339,8 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Spark promotes the int operand to decimal(10,0); the bare-column
     // product guard must treat that cast as a trusted hard-bounded leaf,
     // not an unknown fallback — q11's supplycost*availqty sums lost the
-    // rewrite when the guard first landed. Probes the SQL-text plan: the
-    // default catalog entry is the fused DataFrame variant, which carries
-    // its unscaled sums explicitly instead of via the rewrite.
-    val df = graft.queries.Tpch.sqlTextQuery("tpch_q11")(spark, dir)
+    // rewrite when the guard first landed.
+    val df = SparkEntry.queries("tpch_q11")(spark, dir)
     val n = "sumunscaled128".r
       .findAllIn(df.queryExecution.optimizedPlan.toString.toLowerCase).length
     assert(n == 2, s"expected 2 rewritten sums in tpch_q11, got $n")
@@ -777,6 +794,29 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark, graft.streaming.Streaming.stageDir(dir), Map.empty).collect()
     assert(multi.nonEmpty)
     assert(multi.map(_.toString).toSeq == single.map(_.toString).toSeq)
+  }
+
+  test("st01 on a directory-layout events table returns the one-file fixture's rows") {
+    // ScaleGen writes each table as a directory of part files; staging
+    // used to copy only the empty top-level directory, and st01 streamed
+    // zero rows without an error
+    val fixture = java.nio.file.Files.createTempDirectory("graft-dir-layout").toFile
+    val stage = new java.io.File("target/tmp_stream",
+      java.lang.Integer.toHexString(fixture.getAbsolutePath.hashCode))
+    def rm(x: java.io.File): Unit = {
+      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
+    }
+    def rows(d: String): Set[Seq[Any]] = {
+      val df = SparkEntry.queries("st01_stream_hourly")(spark, d)
+      df.select(df.columns.sorted.toSeq.map(col): _*).collect().map(_.toSeq).toSet
+    }
+    try {
+      spark.read.parquet(s"$dir/events.parquet").repartition(3)
+        .write.parquet(s"${fixture.getAbsolutePath}/events.parquet")
+      val expected = rows(dir)
+      assert(expected.nonEmpty)
+      assert(rows(fixture.getAbsolutePath) === expected)
+    } finally { rm(fixture); rm(stage) }
   }
 
   test("simhash64 is deterministic and order-sensitive only via token multiset") {

@@ -33,38 +33,41 @@ class StagedMarkerSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    assert(wh.contains("marker-spec-wh"),
-      s"spec must run against its own temp warehouse, got $wh")
-
-    val tg = Skew.writeStagedPartQtyGrid(spark, dir)
-    val marker = new java.io.File(new java.io.File(wh, tg), "_GRAFT_COMPLETE")
-    assert(marker.isFile, "build must write the completion marker")
-    val fullCount = spark.table(tg).count()
-    assert(fullCount > 0)
-
-    // simulate a build that died between slices: data present (with its
-    // per-job _SUCCESS), catalog entry live, but no completion marker —
-    // AND the surviving data is truncated, so a silent re-attach would
-    // return wrong results
-    assert(marker.delete())
-    val aFile = new java.io.File(wh, tg).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    assert(aFile.delete(), "simulate a lost slice")
-
-    // a fresh session (same catalog) must detect the missing marker,
-    // drop the partial table and rebuild it to the full row count
-    val s2 = spark.newSession()
-    val tg2 = Skew.writeStagedPartQtyGrid(s2, dir)
-    assert(tg2 == tg)
-    assert(marker.isFile, "rebuild must restore the marker")
-    assert(s2.table(tg2).count() == fullCount,
-      "rebuild must restore the full table, not attach the partial one")
-    spark.stop()
     def rm(x: java.io.File): Unit = {
       Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
     }
-    rm(new java.io.File(tmpWh))
+    try {
+      spark.sparkContext.setLogLevel("ERROR")
+      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+      assert(wh.contains("marker-spec-wh"),
+        s"spec must run against its own temp warehouse, got $wh")
+
+      val tg = Skew.writeStagedPartQtyGrid(spark, dir)
+      val marker = new java.io.File(new java.io.File(wh, tg), "_GRAFT_COMPLETE")
+      assert(marker.isFile, "build must write the completion marker")
+      val fullCount = spark.table(tg).count()
+      assert(fullCount > 0)
+
+      // simulate a build that died between slices: data present (with its
+      // per-job _SUCCESS), catalog entry live, but no completion marker —
+      // AND the surviving data is truncated, so a silent re-attach would
+      // return wrong results
+      assert(marker.delete())
+      val aFile = new java.io.File(wh, tg).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      assert(aFile.delete(), "simulate a lost slice")
+
+      // a fresh session (same catalog) must detect the missing marker,
+      // drop the partial table and rebuild it to the full row count
+      val s2 = spark.newSession()
+      val tg2 = Skew.writeStagedPartQtyGrid(s2, dir)
+      assert(tg2 == tg)
+      assert(marker.isFile, "rebuild must restore the marker")
+      assert(s2.table(tg2).count() == fullCount,
+        "rebuild must restore the full table, not attach the partial one")
+    } finally {
+      spark.stop()
+      rm(new java.io.File(tmpWh))
+    }
   }
 }
