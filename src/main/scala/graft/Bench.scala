@@ -183,10 +183,7 @@ object Bench {
     // pulse itself always runs (it also reaps localCheckpoint RDDs).
     val graceMs: Long = sys.env.get("SPARK_GRAFT_BENCH_GRACE_MS").map(_.toLong)
       .getOrElse {
-        def size(x: java.io.File): Long =
-          if (x.isFile) x.length
-          else Option(x.listFiles()).map(_.map(size).sum).getOrElse(0L)
-        if (size(new java.io.File(sfDir)) >= (5L << 30)) 2000L else 0L
+        if (Fs.size(new java.io.File(sfDir)) >= (5L << 30)) 2000L else 0L
       }
     def gcPulse(): Unit = { System.gc(); if (graceMs > 0) Thread.sleep(graceMs) }
 

@@ -61,7 +61,8 @@ object Graft {
   /** Ingest-time physical layouts (write once, query many): the staged
     * tables the k-twin queries run on. Each returns the stored table
     * name(s); re-invocations attach the existing tables instead of
-    * rebuilding. See operators/Skew.scala for the layout designs. */
+    * rebuilding. See operators/Skew.scala for the layout designs and
+    * operators/Staged.scala for how a build is published. */
   object layouts {
     /** lineitem + orders co-bucketed on the orderkey (zero-exchange
       * order/line joins) with schema-completion columns materialized. */

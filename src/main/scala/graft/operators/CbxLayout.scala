@@ -26,65 +26,34 @@ import graft.QueryDsl.{Q, Twin}
   */
 object CbxLayout {
 
-  /** Staged-table tag: layout version + a hash of the DEFINING TEXT +
-    * fixture-dir hash. The def hash folds in the hits synthesis SQL (and,
-    * for derived grids, the grid's own aggregate SQL), mirroring
-    * `Tpcds.defHash` — an edit to the synthesis CTE or a grid definition
-    * then forces a rebuild instead of silently attaching stale aggregates
-    * that no longer match the oracle's inlined CTE (round-12 advice; the
-    * round-11 stale-inventory failure mode). */
-  private def tag(dir: String, gridDef: String = ""): String =
-    Skew.layoutVer + "_" +
-      Integer.toHexString(
-        (graft.queries.ClickBench.hitsSelect + gridDef).hashCode).take(8) +
-      "_" + Integer.toHexString(dir.hashCode).take(8)
-
-  private def dirSuffix(dir: String): String =
-    "_" + Integer.toHexString(dir.hashCode).take(8)
-
   /** Materialize the staged hits table for `dir`; returns the table name.
-    * Same per-JVM-session staging contract as the TPC-H layout writers
-    * (rebuilt per JVM, reused across sessions within it). */
-  def writeStagedHits(spark: SparkSession, dir: String): String = {
-    val th = s"graft_hits_${tag(dir)}"
-    Skew.ensureStaged(spark, Seq(th -> None)) {
-      // superseded def-hash builds of THIS fixture dir die here (build
-      // branch only — never from an attach-only JVM). The prefix pins the
-      // version segment so the derived grid families (graft_hits_pu_*,
-      // graft_hits_mu_*, ...) are not matched.
-      Skew.pruneSuperseded(spark, s"graft_hits_${Skew.layoutVer}",
-        dirSuffix(dir), keep = th)
-      graft.Engine.table(spark, dir, "events")
-      spark.sql(graft.queries.ClickBench.hitsSelect)
-        .repartitionByRange(32, col("CounterID"), col("EventDate"))
-        .sortWithinPartitions(col("CounterID"), col("EventDate"), col("UserID"))
-        .write.mode("overwrite").format("parquet").option("compression", Skew.stagedCodec)
-        .saveAsTable(th)
+    * The defining text is the hits synthesis SQL (and, for the derived
+    * grids, the grid's own aggregate SQL on top), mirroring
+    * `Tpcds.defHash`: an edit to the synthesis CTE or a grid definition
+    * renames the table, forcing a rebuild instead of silently attaching
+    * stale aggregates that no longer match the oracle's inlined CTE. */
+  def writeStagedHits(spark: SparkSession, dir: String): String =
+    Staged.table(spark, "hits", graft.queries.ClickBench.hitsSelect, dir) {
+      _ =>
+        graft.Engine.table(spark, dir, "events")
+        spark.sql(graft.queries.ClickBench.hitsSelect)
+          .repartitionByRange(32, col("CounterID"), col("EventDate"))
+          .sortWithinPartitions(col("CounterID"), col("EventDate"),
+            col("UserID"))
     }
-    th
-  }
 
   /** Shared grid-writer shape: `gridSql` (a SELECT over `$HITS`) is both
-    * the defining text that feeds the staleness tag AND the build query,
-    * so the two cannot drift apart. Bucketed + sorted by `bucketKey`:
-    * every twin whose grouping keys contain the bucket key plans ZERO
-    * exchange over the grid. */
+    * part of the defining text AND the build query, so the two cannot
+    * drift apart. Bucketed + sorted by `bucketKey`: every twin whose
+    * grouping keys contain the bucket key plans ZERO exchange over the
+    * grid. */
   private def writeGrid(spark: SparkSession, dir: String, family: String,
-      gridSql: String, bucketKey: String): String = {
-    val tn = s"graft_hits_${family}_${tag(dir, gridSql)}"
-    Skew.ensureStaged(spark, Seq(tn -> Some((32, bucketKey)))) {
-      Skew.pruneSuperseded(spark, s"graft_hits_${family}_${Skew.layoutVer}",
-        dirSuffix(dir), keep = tn)
-      val th = writeStagedHits(spark, dir)
-      spark.sql(gridSql.replace("$HITS", th))
-        .repartition(32, col(bucketKey))
-        .write.mode("overwrite").format("parquet")
-        .option("compression", Skew.stagedCodec)
-        .bucketBy(32, bucketKey).sortBy(bucketKey)
-        .saveAsTable(tn)
+      gridSql: String, bucketKey: String): String =
+    Staged.table(spark, s"hits_$family",
+        graft.queries.ClickBench.hitsSelect + gridSql, dir,
+        Some((32, bucketKey))) { _ =>
+      spark.sql(gridSql.replace("$HITS", writeStagedHits(spark, dir)))
     }
-    tn
-  }
 
   /** Run a cbx query text against the staged table (the text references
     * `hits`, which we point at the stored layout for this session). */

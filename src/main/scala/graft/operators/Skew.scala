@@ -47,230 +47,6 @@ object Skew {
   private def staticPlan(s: org.apache.spark.sql.SparkSession): Unit =
     s.conf.set("spark.sql.adaptive.enabled", "false")
 
-  /** Layout version, baked into every staged-table name. Bump when a
-    * staged schema or physical order changes: on-disk tables from older
-    * versions then simply stop matching and are rebuilt under the new
-    * name (production analogue: layout epochs in the table catalog). */
-  private[operators] val layoutVer = "r10z"
-
-  /** Staged layouts are written zstd, not the snappy default: they are
-    * write-once/read-many materializations, so the one-time ~2x encode
-    * cost buys ~40% smaller files on every subsequent scan — less IO per
-    * query and, at sf100 on this box, the difference between the layout
-    * set fitting on disk or not. (At 100 TB the same logic holds: a
-    * petabyte-scale projection store is always aggressively compressed.) */
-  private[operators] val stagedCodec = "zstd"
-
-  /** Ingest batching: how many key-range slices to stage a fact table in.
-    *
-    * A single-shot `repartition(buckets, key).bucketBy.saveAsTable` of a
-    * 600M-row fact holds the ENTIRE table as live shuffle files plus the
-    * growing parquet output — at sf100 that transient peak overflowed the
-    * box's disk twice (measured: >52 GB free was not enough). Batched
-    * ingest bounds the peak at 1/slices: each slice filters the fact to a
-    * bucket range (`pmod(hash(key), buckets)` — the same Murmur3 hash
-    * bucketed writes use, so a slice's rows land ONLY in its buckets and
-    * every bucket still ends up a SINGLE sorted file), shuffles just that
-    * fraction, and appends. This is also how a production cluster ingests
-    * a 100 TB fact into a co-located layout: bounded batches, not one
-    * all-table exchange. Slices are sized from the input's on-disk bytes
-    * (~one slice per 4 GB, min 1, max 16). */
-  private[operators] def ingestSlices(dir: String, table: String): Int = {
-    sys.env.get("GRAFT_INGEST_SLICES").foreach(n => return n.toInt)
-    val f = new java.io.File(s"$dir/$table.parquet")
-    def size(x: java.io.File): Long =
-      if (x.isFile) x.length
-      else Option(x.listFiles()).map(_.map(size).sum).getOrElse(0L)
-    val gb = size(f).toDouble / (1L << 30)
-    math.max(1, math.min(16, math.ceil(gb / 4.0).toInt))
-  }
-
-  /** Release the previous ingest slice's shuffle files before the next
-    * slice shuffles. Spark deletes a shuffle's disk files only when its
-    * ShuffleDependency becomes weakly reachable and the ContextCleaner
-    * drains it — inside a slice loop nothing GCs, so every slice's files
-    * accumulate and the "bounded 1/slices footprint" claim silently
-    * becomes slices/slices (measured: 32 GB of blockmgr files at sf100,
-    * ENOSPC on a 41 GB-free disk). A GC pulse plus a short grace period
-    * lets the async cleaner reclaim them; the sleep is untimed ingest
-    * work, not query time. */
-  private def releaseShuffles(slices: Int): Unit =
-    if (slices > 1) {
-      System.gc()
-      // The ContextCleaner deletes asynchronously; a fixed sleep was the
-      // round-10 floor, but on a slower disk the cleaner can lag past it
-      // and the bounded-footprint contract degrades silently (round-10
-      // advice). Poll the shuffle spill dirs instead: sleep in 1 s steps
-      // while their total size is still DROPPING (the cleaner is mid-reap),
-      // with the old 4 s as the floor and 20 s as a hard cap.
-      def spillBytes(): Long = {
-        val tmp = new java.io.File(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-        def size(x: java.io.File): Long =
-          if (x.isFile) x.length
-          else Option(x.listFiles()).map(_.map(size).sum).getOrElse(0L)
-        Option(tmp.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith("blockmgr-") ||
-            f.getName.startsWith("spark-"))
-          .map(size).sum
-      }
-      Thread.sleep(4000)
-      var prev = spillBytes()
-      var waited = 4000L
-      var dropping = true
-      while (dropping && waited < 20000L) {
-        Thread.sleep(1000); waited += 1000
-        val now = spillBytes()
-        dropping = now < prev - (64L << 20) // still reaping >64 MB/s
-        prev = now
-      }
-    }
-
-  /** Write a bucketed+sorted table in bounded ingest batches (see
-    * [[ingestSlices]]): slice `s` keeps only the rows whose bucket id —
-    * `pmod(hash(key), buckets)`, the exact Murmur3 expression Spark's
-    * bucketed write uses — falls in the slice's bucket range, so each
-    * bucket receives files from exactly ONE slice and stays a single
-    * sorted file (the outputOrdering contract the merge-join twins rely
-    * on), while the live shuffle footprint is 1/slices of the table. */
-  private def writeBucketedSliced(
-      df: => DataFrame, key: String, nBuckets: Int, slices: Int,
-      table: String): Unit =
-    (0 until slices).foreach { s =>
-      val lo = s * nBuckets / slices
-      val hi = (s + 1) * nBuckets / slices
-      val bucketId = pmod(hash(col(key)), lit(nBuckets))
-      df.filter(bucketId >= lit(lo) && bucketId < lit(hi))
-        .repartition(nBuckets, col(key))
-        .write.mode(if (s == 0) "overwrite" else "append").format("parquet").option("compression", stagedCodec)
-        .bucketBy(nBuckets, key).sortBy(key)
-        .saveAsTable(table)
-      releaseShuffles(slices)
-    }
-
-  /** Attach-or-build for staged tables — staging is INGEST work and must
-    * happen once per (fixture, layout version), not once per JVM.
-    *
-    * The in-memory catalog forgets tables across JVMs but the warehouse
-    * files persist; the old writers deleted and rebuilt them every
-    * process, which (a) re-paid the full staging shuffle per bench run and
-    * (b) at sf100 overflowed the disk with a staging spill the bench JVM
-    * had no business repeating. Now: if every table dir carries a
-    * _SUCCESS marker, re-attach it as an external table (CREATE TABLE ...
-    * USING parquet [CLUSTERED BY ...] LOCATION — bucket identity rides on
-    * the bucketed writer's filename suffixes, so a re-attached table keeps
-    * its co-location and write-time sort order); otherwise clear and
-    * rebuild. Incomplete multi-table groups rebuild as a unit.
-    *
-    * @param tables (name, Some((buckets, key)) for bucketed | None plain)
-    */
-  /** Delete warehouse dirs from SUPERSEDED layout versions. A layoutVer
-    * bump re-stages every table under a new name, but the rebuild path
-    * only ever deleted the new-name dirs — the old-version dirs (tens of
-    * GB of zstd parquet at sf100) were orphaned on a 94 GB box, the exact
-    * disk-pressure failure class round 10 fixed elsewhere (round-10
-    * advice). Version rides in the table name as `_r<digits><letters>_`;
-    * any graft_* dir whose version segment differs from [[layoutVer]] is
-    * dead by construction (nothing can re-attach it: ensureStaged only
-    * looks up current-version names). */
-  private val verSeg = "_(r\\d+[a-z]*)_".r
-  private def pruneStaleLayouts(wh: String): Unit = {
-    val dirs = Option(new java.io.File(wh).listFiles()).getOrElse(Array.empty)
-    dirs.filter(_.getName.startsWith("graft_")).foreach { d =>
-      val stale = verSeg.findFirstMatchIn(d.getName)
-        .exists(m => m.group(1) != layoutVer)
-      if (stale) {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-        }
-        rm(d)
-      }
-    }
-  }
-
-  /** Delete warehouse dirs for SUPERSEDED builds of one staged-table
-    * family: same `prefix` + same fixture-dir suffix, different def-hash
-    * segment (the def hash rides in the table name between them; see
-    * TpcdsLayout/CbxLayout writers). Call ONLY from inside an
-    * ensureStaged build branch — an attach-only JVM must never delete a
-    * dir a concurrent sibling on an older jar may still be reading
-    * (round-12 advice). */
-  private[operators] def pruneSuperseded(
-      spark: org.apache.spark.sql.SparkSession,
-      prefix: String, dirSuffix: String, keep: String): Unit = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Option(new java.io.File(wh).listFiles()).getOrElse(Array.empty)
-      .filter(d => d.getName.startsWith(prefix) &&
-        d.getName.endsWith(dirSuffix) && d.getName != keep)
-      .foreach { d =>
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-        }
-        rm(d)
-      }
-  }
-
-  /** Build-completion marker. `_SUCCESS` is NOT a completeness signal for
-    * staged tables: the bounded-batch sliced writers (`writeDenormLineitem`
-    * etc.) commit one Spark job PER SLICE, each of which writes its own
-    * `_SUCCESS` — so a build that dies between slices (measured in round
-    * 13: an ENOSPC at the sf100 staging peak left graft_dnm_lineitem with
-    * 300 M of 600 M rows, a `_SUCCESS`, and a live catalog entry, and the
-    * same-JVM twin queries silently ran on half the fact) looks complete
-    * to both the catalog check and the old `_SUCCESS` probe. The marker is
-    * written ONLY after the whole build block returns; any dir without it
-    * is treated as partial and rebuilt from scratch. */
-  private def completeMarker(wh: String, n: String): java.io.File =
-    new java.io.File(new java.io.File(wh, n), "_GRAFT_COMPLETE")
-
-  private[operators] def ensureStaged(
-      spark: org.apache.spark.sql.SparkSession,
-      tables: Seq[(String, Option[(Int, String)])])(build: => Unit): Unit = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    if (tables.forall { case (n, _) =>
-        spark.catalog.tableExists(n) && completeMarker(wh, n).isFile
-      }) return
-    pruneStaleLayouts(wh)
-    val complete = tables.forall { case (n, _) => completeMarker(wh, n).isFile }
-    if (complete) {
-      tables.foreach { case (n, bucketSpec) =>
-        if (!spark.catalog.tableExists(n)) {
-          val loc = new java.io.File(wh, n).getAbsolutePath
-          val schema = spark.read.parquet(loc).schema.toDDL
-          val cluster = bucketSpec.map { case (b, k) =>
-            s"CLUSTERED BY ($k) SORTED BY ($k) INTO $b BUCKETS"
-          }.getOrElse("")
-          spark.sql(
-            s"CREATE TABLE $n ($schema) USING parquet $cluster LOCATION '$loc'")
-        }
-      }
-    } else {
-      tables.foreach { case (n, _) =>
-        // a partial build may have left a live catalog entry (slice 0's
-        // saveAsTable commits the table before later slices append) —
-        // drop it BEFORE deleting the dir so the rebuild starts clean
-        if (spark.catalog.tableExists(n))
-          spark.sql(s"DROP TABLE IF EXISTS $n")
-        val f = new java.io.File(wh, n)
-        if (f.exists()) {
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-          }
-          rm(f)
-        }
-      }
-      build
-      tables.foreach { case (n, _) =>
-        // a failed marker write must surface NOW, not as a silent full
-        // rebuild on the next run (round-13 advice): ENOSPC right after a
-        // successful build is this box's known failure mode
-        val m = completeMarker(wh, n)
-        require(m.createNewFile() || m.isFile,
-          s"failed to write completion marker ${m.getAbsolutePath}")
-      }
-    }
-  }
-
   def saltedJoin(
       big: DataFrame, small: DataFrame, bigKey: String, smallKey: String,
       nSalts: Int): DataFrame = {
@@ -316,24 +92,10 @@ object Skew {
   def writeBucketed(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       nBuckets: Int): (String, String) = {
-    val tag = layoutVer + "_" + Integer.toHexString(dir.hashCode).take(8) +
-      "_" + nBuckets
-    val (to, tc) = (s"graft_bkt_orders_$tag", s"graft_bkt_customer_$tag")
-    ensureStaged(spark, Seq(
-      to -> Some((nBuckets, "o_custkey")),
-      tc -> Some((nBuckets, "c_custkey")))) {
-      t(spark, dir, "orders")
-        .repartition(nBuckets, col("o_custkey"))
-        .write.mode("overwrite").format("parquet").option("compression", stagedCodec)
-        .bucketBy(nBuckets, "o_custkey").sortBy("o_custkey")
-        .saveAsTable(to)
-      t(spark, dir, "customer")
-        .repartition(nBuckets, col("c_custkey"))
-        .write.mode("overwrite").format("parquet").option("compression", stagedCodec)
-        .bucketBy(nBuckets, "c_custkey").sortBy("c_custkey")
-        .saveAsTable(tc)
-    }
-    (to, tc)
+    def copy(table: String, key: String): String =
+      Staged.table(spark, s"bkt_$table", table, dir,
+        Some((nBuckets, key)))(_ => t(spark, dir, table))
+    (copy("orders", "o_custkey"), copy("customer", "c_custkey"))
   }
 
   /** TPC-H fact tables laid out for self-joins: lineitem (with the derived
@@ -354,20 +116,12 @@ object Skew {
   def writeBucketedTpch(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       nBuckets: Int): (String, String) = {
-    val tag = layoutVer + "_" + Integer.toHexString(dir.hashCode).take(8) +
-      "_" + nBuckets
-    val (tli, tor) = (s"graft_bkt_lineitem_$tag", s"graft_bkt_orders2_$tag")
-    ensureStaged(spark, Seq(
-      tli -> Some((nBuckets, "l_orderkey")),
-      tor -> Some((nBuckets, "o_orderkey")))) {
-      t(spark, dir, "lineitem")
-      graft.functions.DecimalFunctions.register(spark)
-      // The *_u columns store the hot money/rate doubles as unscaled i64
-      // at ingest (Decimal64-style storage): to_unscaled64 is the exact
-      // HALF_UP decimal cast, so downstream sum_unscaled128 aggregation is
-      // bit-identical to the decimal-sum plans while skipping the per-row
-      // double→decimal→unscaled conversion entirely (k16's q01 kernel).
-      writeBucketedSliced(spark.sql("""
+    // The *_u columns store the hot money/rate doubles as unscaled i64 at
+    // ingest (Decimal64-style storage): to_unscaled64 is the exact HALF_UP
+    // decimal cast, so downstream sum_unscaled128 aggregation is
+    // bit-identical to the decimal-sum plans while skipping the per-row
+    // double→decimal→unscaled conversion entirely (k16's q01 kernel).
+    val lineitemSql = """
         SELECT lineitem.*,
           l_shipdate + INTERVAL 1 DAY * ((l_orderkey * 3 + l_linenumber * 7) % 61 - 30)
             AS l_commitdate,
@@ -381,20 +135,26 @@ object Skew {
           to_unscaled64(l_extendedprice, 12, 4) AS l_price_u,
           to_unscaled64(l_discount, 6, 4) AS l_disc_u,
           to_unscaled64(l_tax, 6, 4) AS l_tax_u
-        FROM lineitem"""),
-        "l_orderkey", nBuckets, ingestSlices(dir, "lineitem"), tli)
-      // c_nationkey denormalized into orders at ingest (a materialized
-      // join index): q05-shaped queries then never touch customer at all.
-      // Left join: orders without a customer keep a null nationkey, which
-      // fails any equality downstream exactly like the inner join it
-      // replaces.
-      val cust = t(spark, dir, "customer")
-        .select(col("c_custkey").as("bk_ck"), col("c_nationkey"))
-      writeBucketedSliced(
+        FROM lineitem"""
+    val tli = Staged.table(spark, "bkt_lineitem", lineitemSql, dir,
+        Some((nBuckets, "l_orderkey")), Staged.ingestSlices(dir, "lineitem")) {
+      _ =>
+        t(spark, dir, "lineitem")
+        graft.functions.DecimalFunctions.register(spark)
+        spark.sql(lineitemSql)
+    }
+    // c_nationkey denormalized into orders at ingest (a materialized join
+    // index): q05-shaped queries then never touch customer at all. Left
+    // join: orders without a customer keep a null nationkey, which fails
+    // any equality downstream exactly like the inner join it replaces.
+    val tor = Staged.table(spark, "bkt_orders2", "orders+c_nationkey", dir,
+        Some((nBuckets, "o_orderkey")), Staged.ingestSlices(dir, "orders")) {
+      _ =>
+        val cust = t(spark, dir, "customer")
+          .select(col("c_custkey").as("bk_ck"), col("c_nationkey"))
         t(spark, dir, "orders")
           .join(cust, col("o_custkey") === col("bk_ck"), "left")
-          .drop("bk_ck"),
-        "o_orderkey", nBuckets, ingestSlices(dir, "orders"), tor)
+          .drop("bk_ck")
     }
     (tli, tor)
   }
@@ -409,25 +169,15 @@ object Skew {
   def writeStagedPartsupp(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       nBuckets: Int): (String, String) = {
-    val tag = layoutVer + "_" + Integer.toHexString(dir.hashCode).take(8) +
-      "_" + nBuckets
-    val (tps, tpt) = (s"graft_bkt_partsupp_$tag", s"graft_bkt_part_$tag")
-    ensureStaged(spark, Seq(
-      tps -> Some((nBuckets, "ps_partkey")),
-      tpt -> Some((nBuckets, "p_partkey")))) {
+    val partsuppSql = graft.queries.Tpch.partsuppSelect
+    val tps = Staged.table(spark, "bkt_partsupp", partsuppSql, dir,
+        Some((nBuckets, "ps_partkey"))) { _ =>
       t(spark, dir, "part")
       t(spark, dir, "supplier")
-      spark.sql(graft.queries.Tpch.partsuppSelect)
-        .repartition(nBuckets, col("ps_partkey"))
-        .write.mode("overwrite").format("parquet").option("compression", stagedCodec)
-        .bucketBy(nBuckets, "ps_partkey").sortBy("ps_partkey")
-        .saveAsTable(tps)
-      t(spark, dir, "part")
-        .repartition(nBuckets, col("p_partkey"))
-        .write.mode("overwrite").format("parquet").option("compression", stagedCodec)
-        .bucketBy(nBuckets, "p_partkey").sortBy("p_partkey")
-        .saveAsTable(tpt)
+      spark.sql(partsuppSql)
     }
+    val tpt = Staged.table(spark, "bkt_part", "part", dir,
+      Some((nBuckets, "p_partkey")))(_ => t(spark, dir, "part"))
     (tps, tpt)
   }
 
@@ -450,12 +200,12 @@ object Skew {
     * distinct-aggregate layout. */
   def writeStagedQ16Pairs(
       spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val tag = layoutVer + "_" + Integer.toHexString(dir.hashCode).take(8)
-    val tp = s"graft_q16pairs_$tag"
-    ensureStaged(spark, Seq(tp -> None)) {
+    val partsuppSql = graft.queries.Tpch.partsuppSelect
+    Staged.table(spark, "q16pairs",
+        partsuppSql + "|distinct p_brand,p_type,p_size,ps_suppkey", dir) { _ =>
       t(spark, dir, "part")
       t(spark, dir, "supplier")
-      spark.sql(graft.queries.Tpch.partsuppSelect)
+      spark.sql(partsuppSql)
         .join(t(spark, dir, "part"),
           col("ps_partkey") === col("p_partkey"))
         .select(col("p_brand"), col("p_type"), col("p_size"),
@@ -463,11 +213,7 @@ object Skew {
         .distinct()
         .repartitionByRange(32, col("p_size"))
         .sortWithinPartitions(col("p_size"), col("p_brand"), col("p_type"))
-        .write.mode("overwrite").format("parquet")
-        .option("compression", stagedCodec)
-        .saveAsTable(tp)
     }
-    tp
   }
 
   /** Pre-aggregated per-part quantity grid: one row per l_partkey carrying
@@ -489,22 +235,14 @@ object Skew {
     * definition rebuilds instead of attaching stale aggregates. */
   def writeStagedPartQtyGrid(
       spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val defTxt = "l_partkey:sumd(drate(l_quantity)),count:v1"
-    val dirH = Integer.toHexString(dir.hashCode).take(8)
-    val tg = s"graft_pqty_${layoutVer}_" +
-      Integer.toHexString(defTxt.hashCode).take(8) + "_" + dirH
-    ensureStaged(spark, Seq(tg -> None)) {
-      pruneSuperseded(spark, s"graft_pqty_${layoutVer}", "_" + dirH, keep = tg)
+    Staged.table(spark, "pqty",
+        "l_partkey:sumd(drate(l_quantity)),count:v1", dir) { _ =>
       t(spark, dir, "lineitem")
         .groupBy(col("l_partkey"))
         .agg(sumd(drate(col("l_quantity"))).as("sq"), count(lit(1)).as("c"))
         .repartitionByRange(32, col("l_partkey"))
         .sortWithinPartitions(col("l_partkey"))
-        .write.mode("overwrite").format("parquet")
-        .option("compression", stagedCodec)
-        .saveAsTable(tg)
     }
-    tg
   }
 
   /** Denormalized lineitem projection: the order date, the customer's
@@ -535,12 +273,14 @@ object Skew {
   def writeDenormLineitem(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       nParts: Int): String = {
-    val tag = layoutVer + "_" + Integer.toHexString(dir.hashCode).take(8) +
-      "_" + nParts
-    val tdn = s"graft_dnm_lineitem_$tag"
-    ensureStaged(spark, Seq(tdn -> None)) {
+    val slices = Staged.ingestSlices(dir, "lineitem")
+    // the part count is a physical-layout choice that differs per core
+    // count, so it names a family of its own: a 4-core and a 32-core build
+    // of one fixture coexist instead of superseding each other
+    Staged.table(spark, s"dnm_lineitem_$nParts",
+        "lineitem+orders+customer+part+supplier:v1", dir, slices = slices,
+        rowGroupBytes = Some(16L << 20)) { s =>
       graft.functions.DecimalFunctions.register(spark)
-      val slices = ingestSlices(dir, "lineitem")
       val ptype = t(spark, dir, "part")
         .select(col("p_partkey").as("dn_pk"), col("p_type").as("l_ptype"))
       // supplier nation folded in like the customer's: one more i32 turns
@@ -548,62 +288,55 @@ object Skew {
       val snat = t(spark, dir, "supplier")
         .select(col("s_suppkey").as("dn_sk"),
           col("s_nationkey").as("l_snation"))
-      // Batched ingest (see ingestSlices): slice s keeps the orderkeys with
-      // pmod(hash(k), slices) = s on BOTH join sides — equal keys hash
-      // equal, so the per-slice joins partition the full join exactly and
-      // the union of appends is the complete projection. Each slice covers
-      // the full o_orderdate range (hash slicing is date-uniform), so
-      // file-level zone-map pruning sees slices× more files at the same
-      // pruned fraction.
-      (0 until slices).foreach { s =>
-        def inSlice(k: Column): Column =
-          if (slices == 1) lit(true) else pmod(hash(k), lit(slices)) === lit(s)
-        val ordCust = t(spark, dir, "orders")
-          .filter(inSlice(col("o_orderkey")))
-          .join(t(spark, dir, "customer")
-              .select(col("c_custkey").as("dn_ck"), col("c_nationkey"),
-                col("c_mktsegment")),
-            col("o_custkey") === col("dn_ck"), "left")
-          .select(col("o_orderkey").as("dn_ok"), col("o_orderdate"),
-            col("o_custkey").as("l_custkey"),
-            col("c_nationkey").as("l_cnation"),
-            col("c_mktsegment").as("l_cmkt"))
-        t(spark, dir, "lineitem")
-          .filter(inSlice(col("l_orderkey")))
-          .join(ordCust, col("l_orderkey") === col("dn_ok"), "left")
-          .join(ptype, col("l_partkey") === col("dn_pk"), "left")
-          .join(broadcast(snat), col("l_suppkey") === col("dn_sk"), "left")
-          .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-            col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-            col("l_shipdate"), col("l_returnflag"),
-            col("o_orderdate"), col("l_custkey"), col("l_cnation"),
-            col("l_cmkt"), col("l_ptype"), col("l_snation"),
-            (expr("to_unscaled64(l_extendedprice, 12, 4)") *
-              (lit(10000L) - expr("to_unscaled64(l_discount, 6, 4)")))
-              .as("l_rev_u"),
-            expr("to_unscaled64(l_extendedprice, 12, 4)").as("l_price_u"),
-            expr("to_unscaled64(l_discount, 6, 4)").as("l_disc_u"),
-            expr("to_unscaled64(l_quantity, 6, 4)").as("l_qty_u"))
-          // Two-level zone-map layout (the fixtures generate l_shipdate
-          // INDEPENDENT of o_orderdate — corr ≈ 0 measured — so one sort
-          // key cannot serve both date families): files are
-          // range-partitioned by o_orderdate (file-level zone maps prune
-          // the q05/q08/q10 windows), rows within each file are sorted by
-          // l_shipdate into small row groups (row-group zone maps prune
-          // the q06/q07/q14 windows inside every surviving file). 4
-          // files/core keeps file-level pruning at ~1% granularity while
-          // tasks stay ≫ scheduling cost; 16 MB row groups give ~4-8
-          // shipdate zones per file.
-          .repartitionByRange(math.max(1, nParts * 4 / slices),
-            col("o_orderdate"), col("l_orderkey"))
-          .sortWithinPartitions(col("l_shipdate"), col("o_orderdate"))
-          .write.mode(if (s == 0) "overwrite" else "append").format("parquet").option("compression", stagedCodec)
-          .option("parquet.block.size", (16L << 20).toString)
-          .saveAsTable(tdn)
-        releaseShuffles(slices)
-      }
+      // Batched ingest (see Staged.ingestSlices): slice s keeps the
+      // orderkeys with pmod(hash(k), slices) = s on BOTH join sides —
+      // equal keys hash equal, so the per-slice joins partition the full
+      // join exactly and the union of appends is the complete projection.
+      // Each slice covers the full o_orderdate range (hash slicing is
+      // date-uniform), so file-level zone-map pruning sees slices× more
+      // files at the same pruned fraction.
+      def inSlice(k: Column): Column =
+        if (slices == 1) lit(true) else pmod(hash(k), lit(slices)) === lit(s)
+      val ordCust = t(spark, dir, "orders")
+        .filter(inSlice(col("o_orderkey")))
+        .join(t(spark, dir, "customer")
+            .select(col("c_custkey").as("dn_ck"), col("c_nationkey"),
+              col("c_mktsegment")),
+          col("o_custkey") === col("dn_ck"), "left")
+        .select(col("o_orderkey").as("dn_ok"), col("o_orderdate"),
+          col("o_custkey").as("l_custkey"),
+          col("c_nationkey").as("l_cnation"),
+          col("c_mktsegment").as("l_cmkt"))
+      t(spark, dir, "lineitem")
+        .filter(inSlice(col("l_orderkey")))
+        .join(ordCust, col("l_orderkey") === col("dn_ok"), "left")
+        .join(ptype, col("l_partkey") === col("dn_pk"), "left")
+        .join(broadcast(snat), col("l_suppkey") === col("dn_sk"), "left")
+        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
+          col("l_quantity"), col("l_extendedprice"), col("l_discount"),
+          col("l_shipdate"), col("l_returnflag"),
+          col("o_orderdate"), col("l_custkey"), col("l_cnation"),
+          col("l_cmkt"), col("l_ptype"), col("l_snation"),
+          (expr("to_unscaled64(l_extendedprice, 12, 4)") *
+            (lit(10000L) - expr("to_unscaled64(l_discount, 6, 4)")))
+            .as("l_rev_u"),
+          expr("to_unscaled64(l_extendedprice, 12, 4)").as("l_price_u"),
+          expr("to_unscaled64(l_discount, 6, 4)").as("l_disc_u"),
+          expr("to_unscaled64(l_quantity, 6, 4)").as("l_qty_u"))
+        // Two-level zone-map layout (the fixtures generate l_shipdate
+        // INDEPENDENT of o_orderdate — corr ≈ 0 measured — so one sort
+        // key cannot serve both date families): files are
+        // range-partitioned by o_orderdate (file-level zone maps prune
+        // the q05/q08/q10 windows), rows within each file are sorted by
+        // l_shipdate into small row groups (row-group zone maps prune
+        // the q06/q07/q14 windows inside every surviving file). 4
+        // files/core keeps file-level pruning at ~1% granularity while
+        // tasks stay ≫ scheduling cost; 16 MB row groups give ~4-8
+        // shipdate zones per file.
+        .repartitionByRange(math.max(1, nParts * 4 / slices),
+          col("o_orderdate"), col("l_orderkey"))
+        .sortWithinPartitions(col("l_shipdate"), col("o_orderdate"))
     }
-    tdn
   }
 
   val twins: Seq[Twin] = Seq(

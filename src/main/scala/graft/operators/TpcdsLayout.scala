@@ -32,37 +32,18 @@ import graft.QueryDsl.{Q, Twin}
 object TpcdsLayout {
 
   /** Materialize the staged inventory table for `dir`; returns the table
-    * name. Same attach-or-build contract as the other layout writers.
-    * The tag folds in a hash of the FULL defining text (inventory CTE +
-    * its transitive dims), so an edit to the synthesis SQL rebuilds the
-    * stored table instead of silently attaching stale data that no longer
-    * matches the oracle's inlined CTE (round-11 advice). Superseded
-    * same-version dirs with an old def hash are pruned here (the global
-    * layoutVer pruner can't see them — their version segment is current). */
-  def writeStagedInventory(spark: SparkSession, dir: String): String = {
-    val tag = Skew.layoutVer + "_" + graft.queries.Tpcds.defHash("inventory") +
-      "_" + Integer.toHexString(dir.hashCode).take(8)
-    val tn = s"graft_inventory_$tag"
-    Skew.ensureStaged(spark, Seq(tn -> None)) {
-      // prune only THIS fixture dir's superseded builds (same dir-hash
-      // suffix, different def-hash) — other scale factors' staged tables
-      // stay attached across test/verify/bench JVMs. Pruning happens
-      // ONLY inside the build branch (round-12 advice): an attach-only
-      // JVM must never delete a dir a concurrently running sibling on an
-      // older jar may still be reading; when we get HERE, the def hash
-      // changed and this JVM is rebuilding anyway.
-      Skew.pruneSuperseded(spark, "graft_inventory_",
-        "_" + Integer.toHexString(dir.hashCode).take(8), keep = tn)
+    * name. The defining text is a hash of the FULL inventory definition
+    * (CTE + its transitive dims), so an edit to the synthesis SQL rebuilds
+    * the stored table instead of silently attaching stale data that no
+    * longer matches the oracle's inlined CTE (round-11 advice). */
+  def writeStagedInventory(spark: SparkSession, dir: String): String =
+    Staged.table(spark, "inventory", graft.queries.Tpcds.defHash("inventory"),
+        dir) { _ =>
       graft.queries.Tpcds.ensureStar(spark, dir)
       spark.table("inventory")
         .repartitionByRange(32, col("inv_date_sk"))
         .sortWithinPartitions(col("inv_date_sk"), col("inv_item_sk"))
-        .write.mode("overwrite").format("parquet")
-        .option("compression", Skew.stagedCodec)
-        .saveAsTable(tn)
     }
-    tn
-  }
 
   /** Run a tpcds query text with `inventory` pointing at the stored
     * layout (all other star views stay as ensureStar builds them). The
@@ -142,50 +123,27 @@ object TpcdsLayout {
     * avg_sales, main leg) — nine synthesis passes per run, the round-12
     * verdict's confirmed-structural 3.88x. A production deployment stores
     * the facts once; these writers are that CREATE TABLE AS, kept narrow
-    * because the q14-class reads exactly these four columns (column
-    * pruning would do the same on a full-width fact; narrow keeps the
-    * sandbox disk budget honest). Def-hash rides in the table name via
-    * `Tpcds.defHash`, so a synthesis edit rebuilds instead of attaching
-    * stale rows. */
+    * because `fusedQ14` reads exactly these four columns (column pruning
+    * would do the same on a full-width fact; narrow keeps the sandbox disk
+    * budget honest). The defining text is the fact's `Tpcds.defHash` plus
+    * the column list, so a synthesis edit or a changed projection rebuilds
+    * instead of attaching stale rows. */
   def writeStagedSalesPricing(spark: SparkSession, dir: String)
       : (String, String, String) = {
-    val dirH = Integer.toHexString(dir.hashCode).take(8)
-    // store_sales also carries the report-class columns (store_sk,
-    // sales_price, ext_sales_price) read by the since-retired q67/q98
-    // programs; catalog/web stay at the 4 cross-channel pricing columns
-    // the q14/q23 class reads
-    val cols = Map(
-      "ss" -> Seq("ss_sold_date_sk", "ss_item_sk", "ss_store_sk",
-        "ss_quantity", "ss_list_price", "ss_sales_price",
-        "ss_ext_sales_price"),
-      "cs" -> Seq("cs_sold_date_sk", "cs_item_sk", "cs_quantity",
-        "cs_list_price"),
-      "ws" -> Seq("ws_sold_date_sk", "ws_item_sk", "ws_quantity",
-        "ws_list_price"))
-    val specs = Seq(("ss", "store_sales"), ("cs", "catalog_sales"),
-      ("ws", "web_sales")).map { case (p, fact) =>
-      // def hash folds in the synthesis text AND the projection's column
-      // list, so widening the projection rebuilds it
-      val defH = Integer.toHexString((graft.queries.Tpcds.defHash(fact) +
-        cols(p).mkString(",")).hashCode).take(8)
-      val tn = s"graft_${p}price_${Skew.layoutVer}_${defH}_$dirH"
-      (p, fact, tn)
-    }
-    specs.foreach { case (p, fact, tn) =>
-      Skew.ensureStaged(spark, Seq(tn -> None)) {
-        Skew.pruneSuperseded(spark, s"graft_${p}price_${Skew.layoutVer}",
-          "_" + dirH, keep = tn)
+    val suffixes = Seq("sold_date_sk", "item_sk", "quantity", "list_price")
+    def channel(p: String, fact: String): String = {
+      val cols = suffixes.map(c => s"${p}_$c")
+      Staged.table(spark, s"${p}price",
+          graft.queries.Tpcds.defHash(fact) + cols.mkString(","), dir) { _ =>
         graft.queries.Tpcds.ensureStar(spark, dir)
         spark.table(fact)
-          .select(cols(p).map(col): _*)
+          .select(cols.map(col): _*)
           .repartitionByRange(32, col(s"${p}_sold_date_sk"))
           .sortWithinPartitions(col(s"${p}_sold_date_sk"), col(s"${p}_item_sk"))
-          .write.mode("overwrite").format("parquet")
-          .option("compression", Skew.stagedCodec)
-          .saveAsTable(tn)
       }
     }
-    (specs(0)._3, specs(1)._3, specs(2)._3)
+    (channel("ss", "store_sales"), channel("cs", "catalog_sales"),
+      channel("ws", "web_sales"))
   }
 
   /** q14 as a fused program over the staged pricing projections — the

@@ -1623,10 +1623,7 @@ object SltRunner {
           // purge stale managed locations (warehouse outlives the catalog)
           val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
           val f = new java.io.File(wh, name.replace("\"", "").toLowerCase)
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-          }
-          if (f.exists()) rm(f)
+          if (f.exists()) graft.Fs.rm(f)
           spark.sql(s"DROP TABLE IF EXISTS $name")
         }
         sql = createRe.replaceFirstIn(sql, s"CREATE TABLE $name")

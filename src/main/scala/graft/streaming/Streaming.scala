@@ -53,15 +53,12 @@ object Streaming {
     def hasParquet(f: java.io.File): Boolean =
       if (f.isFile) f.getName.endsWith(".parquet")
       else Option(f.listFiles()).exists(_.exists(hasParquet))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
     val tag = java.lang.Integer.toHexString(dir.hashCode)
     val d = new java.io.File(s"target/tmp_stream/$tag/$table")
     val src = Paths.get(s"$dir/$table.parquet")
     if (Files.isDirectory(src)) {
       if (!hasParquet(d)) {
-        rm(d)
+        graft.Fs.rm(d)
         d.getParentFile.mkdirs()
         val tmp = Files.createTempDirectory(d.getParentFile.toPath, s".$table.")
         val files = Files.walk(src)
@@ -129,10 +126,7 @@ object Streaming {
     * the floor of min(4, cores) rather than 1. */
   private def sizedStreamParts(staged: String): Int =
     sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
-      def size(x: java.io.File): Long =
-        if (x.isFile) x.length
-        else Option(x.listFiles()).map(_.map(size).sum).getOrElse(0L)
-      val bytes = size(new java.io.File(staged))
+      val bytes = graft.Fs.size(new java.io.File(staged))
       val cores = graft.Engine.defaultCpus
       math.max(math.min(4, cores), math.min(cores, (bytes >> 23).toInt))
     }

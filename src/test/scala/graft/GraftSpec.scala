@@ -803,9 +803,6 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fixture = java.nio.file.Files.createTempDirectory("graft-dir-layout").toFile
     val stage = new java.io.File("target/tmp_stream",
       java.lang.Integer.toHexString(fixture.getAbsolutePath.hashCode))
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-    }
     def rows(d: String): Set[Seq[Any]] = {
       val df = SparkEntry.queries("st01_stream_hourly")(spark, d)
       df.select(df.columns.sorted.toSeq.map(col): _*).collect().map(_.toSeq).toSet
@@ -816,7 +813,7 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
       val expected = rows(dir)
       assert(expected.nonEmpty)
       assert(rows(fixture.getAbsolutePath) === expected)
-    } finally { rm(fixture); rm(stage) }
+    } finally { Fs.rm(fixture); Fs.rm(stage) }
   }
 
   test("simhash64 is deterministic and order-sensitive only via token multiset") {

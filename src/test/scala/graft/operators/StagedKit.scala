@@ -1,0 +1,94 @@
+package graft.operators
+
+import java.io.File
+
+import org.apache.spark.sql.SparkSession
+
+/** Shared pieces of the staged-table specs: a session on a private temp
+  * warehouse, and the small three-slice table the cross-JVM specs build. */
+object StagedKit {
+
+  /** Run `body` on a fresh session whose warehouse is a new temp dir,
+    * deleting the dir afterwards. The warehouse dir is a STATIC conf, fixed
+    * when the SharedState is built, so any running session is stopped
+    * first (suites run sequentially; the next getOrCreate simply builds a
+    * fresh context). */
+  def withWarehouse[A](app: String)(body: (SparkSession, String) => A): A = {
+    val wh = java.nio.file.Files.createTempDirectory(app + "-wh").toFile
+    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.getDefaultSession.foreach(_.stop())
+    val spark = session(wh.getAbsolutePath, app)
+    try {
+      val conf = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+      assert(conf == wh.getAbsolutePath,
+        s"spec must run against its own temp warehouse, got $conf")
+      body(spark, conf)
+    } finally {
+      spark.stop()
+      graft.Fs.rm(wh)
+    }
+  }
+
+  def session(wh: String, app: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master("local[2]").appName(app)
+      .config("spark.sql.warehouse.dir", wh)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** The cross-JVM specs' table: three slices of `rowsPerSlice` ids. */
+  val slices = 3
+  val rowsPerSlice = 1000L
+  def specTable(spark: SparkSession)(slice: Int => Unit): String =
+    Staged.table(spark, "spec", "range ids:v1", "spec-fixture",
+        slices = slices) { s =>
+      slice(s)
+      spark.range(s * rowsPerSlice, (s + 1) * rowsPerSlice).toDF("id")
+    }
+
+  /** The warehouse's staged dirs of the spec table. */
+  def specDirs(wh: String): Seq[String] =
+    Option(new File(wh).listFiles()).getOrElse(Array.empty[File])
+      .map(_.getName).filter(_.startsWith("graft_spec_")).toSeq.sorted
+
+  /** Launch [[StagedChild]] in its own JVM with this JVM's class path and
+    * module opens; its output goes to `<signals>/child.log`. */
+  def launchChild(wh: String, mode: String, signals: File): Process = {
+    import scala.jdk.CollectionConverters._
+    val args = java.lang.management.ManagementFactory
+      .getRuntimeMXBean.getInputArguments.asScala.toSeq
+    val opens = args.sliding(2).collect {
+      case Seq("--add-opens", v) => Seq("--add-opens", v)
+    }.flatten.toSeq ++ args.filter(_.startsWith("--add-opens="))
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"),
+        "graft.operators.StagedChild", wh, mode, signals.getAbsolutePath)
+    new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(new File(signals, "child.log")).start()
+  }
+}
+
+/** Child JVM of the cross-JVM specs: builds the spec table on warehouse
+  * `args(0)`. Mode `halt` kills the JVM after slice 0 is written; mode
+  * `block` writes `<args(2)>/started` after slice 0 and waits for
+  * `<args(2)>/go` before writing the rest. */
+object StagedChild {
+  def main(args: Array[String]): Unit = {
+    val Array(wh, mode, signals) = args
+    val spark = StagedKit.session(wh, "staged-child")
+    StagedKit.specTable(spark) { s =>
+      if (s == 1) mode match {
+        case "halt" => Runtime.getRuntime.halt(3)
+        case "block" =>
+          new File(signals, "started").createNewFile()
+          while (!new File(signals, "go").exists()) Thread.sleep(50)
+        case other => sys.error(s"unknown mode $other")
+      }
+    }
+    spark.stop()
+  }
+}
