@@ -21,6 +21,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     defaultQueries ++ Twin.all.map(t => t.name -> t.build)
 
+  /** Catalog queries that read the reference checkout's test fixtures,
+    * each with the fixture path it reads: they can run only where that
+    * path exists. Built from the constants the queries themselves read. */
+  def referenceInputs: Map[String, String] =
+    graft.sources.DeltaQueries.referenceInputs ++
+      graft.sources.IcebergQueries.referenceInputs ++
+      graft.sources.ParquetMeta.referenceInputs
+
   def oracleSql: Map[String, String] = {
     val defaults = defaultOracles
     defaults ++ Twin.all.map(t => t.name -> defaults(t.of))

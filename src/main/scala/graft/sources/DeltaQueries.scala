@@ -18,6 +18,10 @@ object DeltaQueries {
 
   private val FixtureTable = "/root/reference/testdata/delta/table1"
 
+  /** The reference fixture each query that needs one reads. */
+  val referenceInputs: Map[String, String] =
+    Seq("delta01_read_simple", "delta04_time_travel").map(_ -> FixtureTable).toMap
+
   private def jsonEsc(s: String): String =
     org.json4s.jackson.JsonMethods.compact(org.json4s.JString(s))
 

@@ -15,6 +15,14 @@ object IcebergQueries {
   private val Base = "/root/reference/testdata/iceberg"
   private val Cities = s"$Base/wh/default.db/cities"
 
+  /** The reference fixture each query that needs one reads (ice09 builds
+    * its own table). */
+  val referenceInputs: Map[String, String] =
+    Seq("ice01_read_v1_simple", "ice02_read_v2_partitioned",
+      "ice03_partition_pruned", "ice04_read_versioned").map(_ -> Base).toMap ++
+      Seq("ice05_metadata", "ice06_snapshots", "ice07_manifest_list",
+        "ice08_data_files").map(_ -> Cities)
+
   val queries: Map[String, Q] = Map(
     // v1 format, unpartitioned read (glaredb_ext_iceberg/src/table/).
     "ice01_read_v1_simple" -> { (s, _) =>

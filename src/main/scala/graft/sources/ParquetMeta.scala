@@ -36,12 +36,17 @@ object ParquetMeta {
       file_offset: Long, num_values: Long, total_compressed_size: Long,
       total_uncompressed_size: Long, data_page_offset: Long)
 
-  /** Expand path / glob patterns to concrete file paths (sorted). */
+  /** Expand path / glob patterns to concrete file paths (sorted). A glob
+    * that matches nothing adds no file; an explicitly-listed (non-glob)
+    * path must exist, as in the reference and `GraftSession`'s scans. */
   private def expand(spark: SparkSession, patterns: Seq[String]): Seq[String] =
     patterns.flatMap { pattern =>
       val p = new org.apache.hadoop.fs.Path(pattern)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil).flatMap { st =>
+      val matched = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
+      if (matched.isEmpty && !pattern.exists("*?[{".contains(_)))
+        throw new java.io.FileNotFoundException(pattern)
+      matched.flatMap { st =>
         if (st.isDirectory)
           fs.listStatus(st.getPath).toSeq.filter(_.isFile)
             .filter(_.getPath.getName.endsWith(".parquet"))
@@ -144,6 +149,11 @@ object ParquetMeta {
     * on the same files (file_offset and def/rep levels excluded from the
     * oracle projection — DuckDB does not surface them faithfully). */
   private val fixDir = "/root/reference/testdata/parquet"
+
+  /** The reference fixture each query below reads. */
+  val referenceInputs: Map[String, String] =
+    Seq("pm01_parquet_file_meta", "pm02_parquet_rowgroup_meta",
+      "pm03_parquet_column_meta").map(_ -> fixDir).toMap
 
   val queries: Map[String, Q] = Map(
     "pm01_parquet_file_meta" -> { (s, _) =>

@@ -15,6 +15,7 @@ class DeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("fixture table1: schema + rows match slt/delta/simple.slt") {
+    Reference.assumeExists("/root/reference/testdata/delta/table1")
     val df = sources.Delta.read(spark, "/root/reference/testdata/delta/table1")
     assert(df.schema.fieldNames.toSeq == Seq("a", "b"))
     val rows = df.orderBy("a").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
@@ -36,6 +37,7 @@ class DeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sql sugar: quoted delta dir resolves as table") {
+    Reference.assumeExists("/root/reference/testdata/delta/table1")
     val df = sources.GraftSession.sql(spark,
       "SELECT count(*) AS n FROM '/root/reference/testdata/delta/table1'")
     assert(df.collect().head.getLong(0) == 2L)
@@ -43,6 +45,7 @@ class DeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("time travel: read_delta(path, version) replays to that commit") {
     val t1 = "/root/reference/testdata/delta/table1"
+    Reference.assumeExists(t1)
     def at(v: Long): Long =
       sources.Delta.read(spark, t1, versionAsOf = Some(v)).count()
     assert(at(0) == 0L) // v0: metadata only

@@ -74,11 +74,36 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("every catalog query executes and returns rows at sf0.001") {
-    val empties = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    // queries that read the reference checkout's fixtures run where the
+    // fixture exists; the rest are named
+    val refs = SparkEntry.referenceInputs
+    val unknown = refs.keySet -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"reference inputs declared for unknown queries: $unknown")
+    val (runnable, absent) = SparkEntry.queries.toSeq.sortBy(_._1).partition {
+      case (name, _) => refs.get(name).forall(p => new java.io.File(p).exists)
+    }
+    if (absent.nonEmpty)
+      info("not run, reference input absent: " +
+        absent.map { case (name, _) => s"$name (${refs(name)})" }.mkString(", "))
+    val empties = runnable.flatMap { case (name, fn) =>
       val n = fn(spark, dir).count()
       if (n == 0 && !emptyOk(name)) Some(name) else None
     }
     assert(empties.isEmpty, s"queries with empty results: $empties")
+  }
+
+  test("parquet metadata TVFs: a missing non-glob path throws, an unmatched glob is empty") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_pm").toString
+    val missing = s"$tmp/no_such.parquet"
+    Seq("rowgroup_metadata", "column_metadata").foreach { fn =>
+      val e = intercept[java.io.FileNotFoundException] {
+        sources.GraftSession.sql(spark, s"SELECT * FROM parquet.$fn('$missing')")
+      }
+      assert(e.getMessage.contains(missing), e.getMessage)
+    }
+    assert(sources.GraftSession.sql(spark,
+      s"SELECT * FROM parquet.rowgroup_metadata('$tmp/*.parquet')").count() == 0)
+    Fs.rm(new java.io.File(tmp))
   }
 
   test("entry() returns rows") {

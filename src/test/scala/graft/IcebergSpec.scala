@@ -15,6 +15,7 @@ class IcebergSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("v1 simple: schema + row count") {
+    Reference.assumeExists(s"$Base/tables-v1/lineitem_simple")
     val df = sources.Iceberg.read(spark, s"$Base/tables-v1/lineitem_simple")
     assert(df.schema.fieldNames.length == 16)
     assert(df.schema("l_quantity").dataType.typeName.startsWith("decimal"))
@@ -22,12 +23,14 @@ class IcebergSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("v2 partitioned: all 7 shipmodes, 1000 rows total") {
+    Reference.assumeExists(s"$Base/tables-v2/lineitem_partitioned")
     val df = sources.Iceberg.read(spark, s"$Base/tables-v2/lineitem_partitioned")
     assert(df.count() == 1000)
     assert(df.select("l_shipmode").distinct().count() == 7)
   }
 
   test("manifest-level partition pruning reads only the AIR file") {
+    Reference.assumeExists(s"$Base/tables-v1/lineitem_partitioned")
     val t = sources.Iceberg.load(s"$Base/tables-v1/lineitem_partitioned")
     val all = sources.Iceberg.liveDataFiles(t)
     val air = sources.Iceberg.liveDataFiles(t, Map("l_shipmode" -> "AIR"))
@@ -39,6 +42,7 @@ class IcebergSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("versioned: current snapshot resolves via version-hint") {
+    Reference.assumeExists(s"$Base/tables-v1/lineitem_versioned")
     val t = sources.Iceberg.load(s"$Base/tables-v1/lineitem_versioned")
     assert(t.snapshots.length == 2)
     val files = sources.Iceberg.liveDataFiles(t)
@@ -49,6 +53,7 @@ class IcebergSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("time travel: read_iceberg(path, snapshot_id) pins that snapshot") {
     val t = s"$Base/tables-v1/lineitem_versioned"
+    Reference.assumeExists(t)
     val loaded = sources.Iceberg.load(t)
     val Seq(old, cur) = loaded.snapshots.map(_._1)
     assert(loaded.currentSnapshotId.contains(cur))
@@ -67,6 +72,7 @@ class IcebergSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cities metadata TVFs match slt/iceberg expected values") {
+    Reference.assumeExists(s"$Base/wh/default.db/cities")
     val meta = sources.Iceberg.metadataDf(spark, s"$Base/wh/default.db/cities").collect()
     assert(meta.map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq ==
       Seq((2, "3e7c486c-5e5a-426e-aed7-a022fe2b52b6", "file://wh/default.db/cities")))
@@ -181,6 +187,8 @@ class IcebergSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sql sugar: iceberg TVFs and read_iceberg resolve") {
+    Reference.assumeExists(s"$Base/tables-v1/lineitem_simple",
+      s"$Base/wh/default.db/cities")
     val n = sources.GraftSession.sql(spark,
       s"SELECT count(*) AS n FROM read_iceberg('$Base/tables-v1/lineitem_simple')")
       .collect().head.getLong(0)

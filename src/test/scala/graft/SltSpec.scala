@@ -154,6 +154,7 @@ class SltSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test(s"tpchbench SLT suite passes (${tpchbenchFiles.size} files; " +
     "data goldens execute-only)") {
+    Reference.assumeExists(tpchbenchFiles.map(f => s"$tpchbenchRoot/$f"): _*)
     // child session: the 8 benchmark temp views must not leak into the
     // shared catalog (slt/standard system_join counts list_tables())
     val s = spark.newSession()
@@ -245,6 +246,8 @@ class SltSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test(s"tpcds SLT suite passes (describe_files + " +
     s"${tpcdsSltAllowlist.size} q-files; data goldens execute-only)") {
+    Reference.assumeExists((Seq("describe_files.slt") ++ tpcdsSltAllowlist)
+      .map(f => s"$tpcdsSltRoot/$f"): _*)
     val s = spark.newSession()
     graft.functions.GraftFunctions.register(s)
     graft.functions.GlareCompat.register(s)
@@ -260,6 +263,9 @@ class SltSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test(s"connector SLT allowlist passes (${connectorAllowlist.size} files)") {
+    // records also read fixtures under testdata/ through the '../ rewrite
+    Reference.assumeExists(
+      connectorAllowlist.map(f => s"$connectorRoot/$f") :+ "/root/reference/testdata": _*)
     graft.functions.GraftFunctions.register(spark)
     graft.functions.GlareCompat.register(spark)
     val bad = connectorAllowlist.flatMap { rel =>
