@@ -5,8 +5,9 @@ reference ships as its own package (reference: `crates/glaredb_python`,
 graft is a JVM library; this module is pure glue over the py4j gateway:
 given any PySpark ``SparkSession`` whose JVM classpath carries the graft
 classes (``--jars graft.jar`` or ``--driver-class-path target/scala-2.13/
-classes``), it registers the engine's compat functions, aggregate sketches,
-and TVFs, and exposes the path-as-table / ``read_*`` SQL sugar.
+classes``), it installs the engine's functions (``connect()`` sets the
+``graft.GraftExtensions`` session extension, which also reaches every
+``newSession()`` child) and exposes the path-as-table / ``read_*`` sugar.
 
 Typical use::
 
@@ -33,20 +34,12 @@ def _jvm(spark: SparkSession):
 
 
 def register(spark: SparkSession) -> SparkSession:
-    """Register graft's full function surface on this session.
-
-    Installs the GlareDB-compat scalar/table functions, the native vector
-    expressions (l2_distance & friends), the sketch aggregates
-    (hll_sketch/topk_sketch), and the exact-decimal-sum optimizer rule.
-    Idempotent; returns the session for chaining.
+    """Ready this session for graft (``graft.Graft.install``): add the
+    extension's functions if the session lacks them, switch it to the
+    GlareDB dialect (the reference's trim, regexp_replace, ...) and add the
+    optimizer rules. Idempotent; returns the session for chaining.
     """
-    jvm = _jvm(spark)
-    js = spark._jsparkSession
-    jvm.graft.functions.GlareCompat.register(js)
-    jvm.graft.functions.GraftFunctions.register(js)
-    jvm.graft.functions.Aggregators.register(js)
-    jvm.graft.functions.HeavyHitters.register(js)
-    jvm.graft.Engine.ensureOptimizations(js)
+    _jvm(spark).graft.Graft.install(spark._jsparkSession)
     return spark
 
 
@@ -72,8 +65,10 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def connect(app_name: str = "graft", master: str = None) -> SparkSession:
     """Convenience mirror of the reference's ``glaredb.connect()``: build
-    (or reuse) a SparkSession and register the graft surface on it."""
-    builder = SparkSession.builder.appName(app_name)
+    (or reuse) a SparkSession carrying ``graft.GraftExtensions`` and
+    register the graft surface on it."""
+    builder = (SparkSession.builder.appName(app_name)
+               .config("spark.sql.extensions", "graft.GraftExtensions"))
     if master:
         builder = builder.master(master)
     return register(builder.getOrCreate())

@@ -5,7 +5,8 @@
 
 Exercises the binding end-to-end: registration, path-as-table sugar (the
 s04 shape), compat scalar functions (the q69 shape), a TVF, a sketch
-aggregate, and the fixture-table reader.
+aggregate, a decimal kernel in a child session (the session extension),
+and the fixture-table reader.
 """
 import os
 import sys
@@ -28,6 +29,7 @@ sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
 spark = (SparkSession.builder.master("local[4]")
          .appName("graft-python-smoke")
+         .config("spark.sql.extensions", "graft.GraftExtensions")
          .config("spark.sql.shuffle.partitions", "4")
          .config("spark.ui.enabled", "false")
          .getOrCreate())
@@ -74,6 +76,11 @@ graft.table(spark, sf_dir, "events")
 rows = spark.sql(
     "SELECT size(topk_sketch(user_id, 5, 64)) AS k FROM events").collect()
 check("topk_sketch_agg", rows[0]["k"], lambda k: k == 5)
+
+# the extension reaches a child session that registers nothing itself
+child = spark.newSession()
+row = child.sql("SELECT to_unscaled64(1.25D, 12, 4) AS u").collect()[0]
+check("child_to_unscaled64", row["u"], lambda u: u == 12500)
 
 # fixture-table reader returns a usable DataFrame
 n = graft.table(spark, sf_dir, "nation").count()

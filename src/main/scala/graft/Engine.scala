@@ -22,9 +22,11 @@ object Engine {
     configure(b, cpus).getOrCreate()
   }
 
-  /** Apply graft's standard configs to any builder (shared by Bench/Verify). */
+  /** Apply graft's standard configs and [[GraftExtensions]] to any builder
+    * (shared by Bench/Verify). */
   def configure(b: SparkSession.Builder, cpus: Int = defaultCpus): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", cpus.toString)
+    b.withExtensions(new GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // Coalesce respecting parallelism (Spark's default): with
@@ -147,29 +149,26 @@ object Engine {
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
       org.apache.spark.sql.types.StructType]()
 
-  /** Per-session query-plan extensions, installed idempotently on first
-    * fixture-table access: the Decimal64-style exact-sum fast path
-    * (`functions/DecimalSum.scala`). */
+  /** Graft's optimizer rules, installed idempotently on first
+    * fixture-table access. They stay in `extraOptimizations`, the final
+    * optimizer batch: an extension's rule runs in the operator-optimization
+    * batches instead, where each of them plans differently. */
   def ensureOptimizations(spark: SparkSession): Unit = {
+    val rules = Seq(
+      // exact-decimal sum fast path (functions/DecimalSum.scala); before
+      // Spark's DecimalAggregates it also takes the decimal(6,4) sums
+      graft.functions.DecimalSumRewrite,
+      // push selective joins below tiny constant cross joins, which earns
+      // the pure SQL of tpch_q16/q20 the twins' filtered-generator plan;
+      // in the operator-optimization batch it misses tpch_q16
+      graft.plans.PushJoinThroughTinyCross,
+      // drops injected blooms whose creation side keeps >25% of rows, so
+      // it must follow InjectRuntimeFilter, which follows every batch an
+      // extension's rule can join
+      graft.plans.PruneWeakBloom)
     val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(graft.functions.DecimalSumRewrite))
-      spark.experimental.extraOptimizations =
-        opts :+ graft.functions.DecimalSumRewrite
-    // generator cross-join reorder: push selective joins below tiny
-    // constant cross joins (see plans/PushJoinThroughTinyCross.scala) —
-    // this is what lets the pure SQL texts of tpch_q16/q20 earn the
-    // filtered-generator plan the fused twins hand-build
-    val opts1 = spark.experimental.extraOptimizations
-    if (!opts1.contains(graft.plans.PushJoinThroughTinyCross))
-      spark.experimental.extraOptimizations =
-        opts1 :+ graft.plans.PushJoinThroughTinyCross
-    val opts2 = spark.experimental.extraOptimizations
-    // runs after Spark's InjectRuntimeFilter (extraOptimizations are the
-    // final optimizer batch): removes injected blooms whose creation-side
-    // filter provably keeps >25% of rows (see plans/PruneWeakBloom.scala)
-    if (!opts2.contains(graft.plans.PruneWeakBloom))
-      spark.experimental.extraOptimizations =
-        opts2 :+ graft.plans.PruneWeakBloom
+    val missing = rules.filterNot(opts.contains)
+    if (missing.nonEmpty) spark.experimental.extraOptimizations = opts ++ missing
   }
 
   /** Read one driver fixture table and register it as a temp view. */

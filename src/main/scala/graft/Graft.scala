@@ -4,22 +4,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The library's one-call public entry point.
   *
-  * Everything the engine installs piecemeal across the internal layers —
-  * session defaults ([[Engine.configure]]), the custom optimizer rules
-  * (decimal-sum fast path, generator cross-join reorder, weak-bloom
-  * pruning), the GlareDB-compat scalar/aggregate/table-function surface,
-  * and the path-as-table SQL sugar — comes up through this façade, so a
-  * user of the reference engine needs exactly two lines to run their
-  * queries on Spark:
+  * Everything the engine installs — session defaults and the
+  * GlareDB-compat scalar/aggregate/table-function surface
+  * ([[Engine.configure]] adds [[GraftExtensions]]), the custom optimizer
+  * rules (decimal-sum fast path, generator cross-join reorder, weak-bloom
+  * pruning), and the path-as-table SQL sugar — comes up through this
+  * façade, so a user of the reference engine needs exactly two lines to
+  * run their queries on Spark:
   *
   * {{{
   * val spark = graft.Graft.session()
   * graft.Graft.sql(spark, "SELECT count(*) FROM 'data/lineitem.parquet'").show()
   * }}}
   *
-  * On a cluster, the session comes from the environment instead —
-  * [[install]] bolts the same surface onto any existing SparkSession
-  * without touching its master/conf.
+  * On a cluster, the session comes from the environment instead — start
+  * it with `spark.sql.extensions=graft.GraftExtensions`, or [[install]]
+  * the same surface onto it without touching its master/conf.
   */
 object Graft {
 
@@ -29,18 +29,14 @@ object Graft {
       appName: String = "graft"): SparkSession =
     install(Engine.session(cpus, appName))
 
-  /** Install graft's surface on an EXISTING session (idempotent):
-    * optimizer rules, sketch/vector kernels (simhash64, minhash_sig,
-    * l2_distance, ...), the GlareDB compat function names + TVFs, the
-    * SpaceSaving heavy-hitter and custom aggregators, and the exact
-    * decimal-sum kernels. Returns the same session for chaining. */
+  /** Install graft's surface on an EXISTING session (idempotent): the
+    * [[GraftExtensions]] functions if it was built without them, the GlareDB
+    * dialect (the reference's trim, regexp_replace, concat, ...) and the
+    * optimizer rules. Returns the same session for chaining. */
   def install(spark: SparkSession): SparkSession = {
+    GraftExtensions.install(spark)
+    GraftExtensions.glareDialect(spark)
     Engine.ensureOptimizations(spark)
-    functions.GraftFunctions.register(spark)
-    functions.GlareCompat.register(spark)
-    functions.DecimalFunctions.register(spark)
-    functions.HeavyHitters.register(spark)
-    functions.Aggregators.register(spark)
     spark
   }
 

@@ -14,8 +14,7 @@ object Shell {
   def main(args: Array[String]): Unit = {
     val spark = Engine.session(appName = "graft-shell")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GlareCompat.register(spark)
+    GraftExtensions.glareDialect(spark)
     args.headOption.foreach(dir => Engine.registerAll(spark, dir))
     println("graft shell — SQL, or .tables/.schema <t>/.explain <sql>/.quit")
     var line = ""

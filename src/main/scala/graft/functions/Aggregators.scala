@@ -1,9 +1,10 @@
 package graft.functions
 
 import graft.QueryDsl._
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
 
 /** Typed UDAF extension surface (SURVEY.md §2.7: GlareDB
   * `UnaryAggregate`/`BinaryAggregate` traits with update/combine/finalize ≙
@@ -28,13 +29,15 @@ object RangeAgg extends Aggregator[Double, (Double, Double), Double] {
 }
 
 object Aggregators {
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("range_agg", udaf(RangeAgg))
+  // what `spark.udf.register("range_agg", udaf(RangeAgg))` builds
+  val functions: Seq[Declare.Fn] = Seq(
+    Declare.fn("range_agg")(es => ScalaAggregator(es, RangeAgg,
+      encoderFor(Encoders.scalaDouble), encoderFor(RangeAgg.bufferEncoder),
+      aggregatorName = Some("range_agg"))))
 
   val queries: Map[String, Q] = Map(
     // UDAF through the SQL registry: custom Aggregator usable by name.
     "a01_custom_aggregator" -> { (s, dir) =>
-      register(s)
       t(s, dir, "customer")
       s.sql("""
         SELECT c_nationkey, range_agg(c_acctbal) AS bal_range, COUNT(*) AS n
@@ -51,7 +54,6 @@ object Aggregators {
     // and the sketch is exact (err 0) — the oracle is the exact top-10.
     // The undersized-capacity error contract is spec-checked in GraftSpec.
     "a02_topk_sketch" -> { (s, dir) =>
-      HeavyHitters.register(s)
       t(s, dir, "events")
       s.sql("""
         SELECT key AS user_id, cnt AS n_events, err,

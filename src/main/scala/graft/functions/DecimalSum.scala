@@ -481,7 +481,7 @@ object DecimalSumRewrite extends Rule[LogicalPlan] {
   }
 }
 
-/** SQL registration for the unscaled-long kernels, for STORED-unscaled
+/** SQL declarations for the unscaled-long kernels, for STORED-unscaled
   * layouts (operators/Skew.writeBucketedTpch stages the q01 money/rate
   * columns as unscaled i64 at ingest — the Decimal64 storage idea applied
   * where the scan IS the query):
@@ -495,21 +495,12 @@ object DecimalSumRewrite extends Rule[LogicalPlan] {
   *     plans they replace.
   */
 object DecimalFunctions {
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]())
-
   private def intArg(e: Expression): Int =
     e.eval().asInstanceOf[Number].intValue()
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) != null) return
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("to_unscaled64",
-      es => ToUnscaledLong(Cast(es(0), DoubleType), intArg(es(1)), intArg(es(2)),
-        ansi = false), "built-in")
-    reg.createOrReplaceTempFunction("sum_unscaled128",
-      es => SumUnscaled128(es(0), intArg(es(1)), intArg(es(2)))
-        .toAggregateExpression(), "built-in")
-  }
+  val functions: Seq[Declare.Fn] = Seq(
+    Declare.fn("to_unscaled64")(es => ToUnscaledLong(Cast(es(0), DoubleType),
+      intArg(es(1)), intArg(es(2)), ansi = false)),
+    Declare.fn("sum_unscaled128")(es =>
+      SumUnscaled128(es(0), intArg(es(1)), intArg(es(2))).toAggregateExpression()))
 }

@@ -273,7 +273,7 @@ case class Lcm(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Function-name compatibility layer: registers the reference's function
+/** Function-name compatibility layer: declares the reference's function
   * surface (SURVEY.md §2.4/2.5) under GlareDB's names, so a query written
   * for the reference resolves unchanged. Aliases map to Spark built-in
   * expressions (codegen preserved); only gcd/lcm are new expressions.
@@ -284,10 +284,14 @@ object GlareCompat {
   private def ninf = Literal(Double.NegativeInfinity)
   private def dbl(e: Expression) = Cast(e, DoubleType)
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
+  /** Scalar and aggregate functions under the reference's names. Some
+    * redefine a name Spark already has (trim, regexp_replace, concat, ...);
+    * [[graft.GraftExtensions]] installs those only in GlareDB-dialect
+    * sessions. */
+  val functions: Seq[Declare.Fn] = {
+    val decls = Seq.newBuilder[Declare.Fn]
     def f(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      decls += Declare.fn(name)(builder)
 
     // string (string/strpos.rs, trim.rs, case.rs, ...)
     f("strpos")(es => StringLocate(es(1), es(0), Literal(1)))
@@ -454,12 +458,15 @@ object GlareCompat {
     f("to_string")(es => Cast(es.head, StringType))
     f("to_binary")(es => Cast(es.head, BinaryType))
     f("to_date")(es => Cast(es.head, DateType))
+    decls.result()
+  }
 
+  /** Table functions: generate_series plus [[fileAndCatalogTvfs]]. */
+  val tableFunctions: Seq[Declare.Tvf] = fileAndCatalogTvfs :+
     // generate_series(start, stop[, step]) — inclusive-stop table function
     // (reference functions/table/builtin/series.rs:19). Registered as a
     // real Spark TVF resolving to a Range logical node.
-    val tvfReg = spark.sessionState.tableFunctionRegistry
-    tvfReg.createOrReplaceTempFunction("generate_series", { es: Seq[Expression] =>
+    Declare.tvf("generate_series") { es =>
       if (es.length < 2 || es.length > 3)
         throw new org.apache.spark.sql.AnalysisException(
           errorClass = "_LEGACY_ERROR_TEMP_2300",
@@ -483,10 +490,7 @@ object GlareCompat {
       // Range is exclusive of end; generate_series is inclusive
       val end = if (step > 0) stop + 1 else stop - 1
       org.apache.spark.sql.catalyst.plans.logical.Range(start, end, step, None)
-    }, "built-in")
-
-    registerTableFunctions(spark, tvfReg)
-  }
+    }
 
   // -- system/file table functions (reference functions/table/builtin/) ------
 
@@ -549,14 +553,15 @@ object GlareCompat {
   /** System-catalog and file TVFs, resolvable from plain `spark.sql` text
     * (reference `functions/table/builtin/`: glob.rs, read_text.rs,
     * system/list_tables… — evaluated eagerly at analysis time, which is the
-    * same binding point the reference uses).
+    * same binding point the reference uses). The catalog TVFs read the
+    * session analysing the query.
     */
-  private def registerTableFunctions(
-      spark: SparkSession,
-      tvfReg: org.apache.spark.sql.catalyst.analysis.TableFunctionRegistry): Unit = {
+  private def fileAndCatalogTvfs: Seq[Declare.Tvf] = {
     import org.apache.spark.sql.catalyst.plans.logical._
+    val decls = Seq.newBuilder[Declare.Tvf]
     def tf(name: String)(b: Seq[Expression] => LogicalPlan): Unit =
-      tvfReg.createOrReplaceTempFunction(name, b, "built-in")
+      decls += Declare.tvf(name)(b)
+    def session = SparkSession.active
     def evalString(e: Expression): String =
       e.eval() match {
         case s: org.apache.spark.unsafe.types.UTF8String => s.toString
@@ -612,7 +617,7 @@ object GlareCompat {
     }
 
     tf("list_tables") { _ =>
-      val rows = spark.sessionState.catalog.listTables("default")
+      val rows = session.sessionState.catalog.listTables("default")
         .filterNot(_.table.startsWith("graft_path_")) // internal scan views
         .map(t => Seq(t.table, "temp"))
       localRel(Seq("table_name" -> StringType,
@@ -620,7 +625,7 @@ object GlareCompat {
     }
 
     tf("list_views") { _ =>
-      val cat = spark.sessionState.catalog
+      val cat = session.sessionState.catalog
       val temp = cat.getTempViewNames()
         .filterNot(_.startsWith("graft_path_")).map(n => Seq(n))
       localRel(Seq("view_name" -> StringType), temp)
@@ -637,7 +642,7 @@ object GlareCompat {
       val aliasOf = Map("ceiling" -> "ceil", "char_length" -> "length",
         "character_length" -> "length", "lcase" -> "lower",
         "ucase" -> "upper", "pow" -> "power", "sign" -> "signum")
-      val names = spark.sessionState.functionRegistry.listFunction()
+      val names = session.sessionState.functionRegistry.listFunction()
         .map(_.funcName).distinct.sorted
       val rows = names.map { n =>
         val typ = if (aggNames.contains(n)) "aggregate" else "scalar"
@@ -646,5 +651,6 @@ object GlareCompat {
       localRel(Seq("function_name" -> StringType, "function_type" -> StringType,
         "alias_of" -> StringType), rows)
     }
+    decls.result()
   }
 }

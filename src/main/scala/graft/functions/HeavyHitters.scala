@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -185,12 +184,9 @@ case class TopKSketch(child: Expression, k: Int, capacity: Int,
 }
 
 object HeavyHitters {
-  /** SQL registration: `topk_sketch(key, k, capacity)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_sketch",
-      es => TopKSketch(es(0),
-        es(1).eval().asInstanceOf[Number].intValue(),
-        es(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+  /** SQL declaration: `topk_sketch(key, k, capacity)`. */
+  val functions: Seq[Declare.Fn] = Seq(
+    Declare.fn("topk_sketch")(es => TopKSketch(es(0),
+      es(1).eval().asInstanceOf[Number].intValue(),
+      es(2).eval().asInstanceOf[Number].intValue())))
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -434,45 +433,24 @@ case class SortedFingerprint(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** SQL registration so queries can use these via `expr("cosine_sim(a,b)")`. */
+/** SQL declarations so queries can use these via `expr("cosine_sim(a,b)")`. */
 object GraftFunctions {
-  // Sessions already registered (weak keys: sessions are GC-able). Every
-  // query entry point calls register defensively; re-registering in the
-  // same session is a no-op semantically but logs a "replaced a previously
-  // registered function" warning per function per query — dozens of lines
-  // in a bench/verify tail.
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  // SQL callers may pass array<double>/array<decimal> literals; the
+  // kernels read float arrays, so coerce at the boundary (no-op when the
+  // input is already array<float>).
+  private def farr(e: Expression) = Cast(e, ArrayType(FloatType))
 
-  def register(spark: SparkSession): Unit = {
-    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) != null) return
-    val reg = spark.sessionState.functionRegistry
-    // SQL callers may pass array<double>/array<decimal> literals; the
-    // kernels read float arrays, so coerce at the boundary (no-op when the
-    // input is already array<float>).
-    def farr(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-      org.apache.spark.sql.catalyst.expressions.Cast(e,
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
-    reg.createOrReplaceTempFunction("cosine_sim",
-      es => CosineSimilarity(farr(es(0)), farr(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("dot_product",
-      es => DotProduct(farr(es(0)), farr(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("l2_distance",
-      es => L2Distance(farr(es(0)), farr(es(1))), "built-in")
+  val functions: Seq[Declare.Fn] = Seq(
+    Declare.fn("cosine_sim")(es => CosineSimilarity(farr(es(0)), farr(es(1)))),
+    Declare.fn("dot_product")(es => DotProduct(farr(es(0)), farr(es(1)))),
+    Declare.fn("l2_distance")(es => L2Distance(farr(es(0)), farr(es(1)))),
     // reference alias (similarity/l2_distance.rs registers both names)
-    reg.createOrReplaceTempFunction("array_distance",
-      es => L2Distance(farr(es(0)), farr(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSignature(es(0),
-        es(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      es => ShingleHashes(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_est",
-      es => MinHashEstimate(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("sorted_fingerprint",
-      es => SortedFingerprint(es.head), "built-in")
-  }
+    Declare.fn("array_distance")(es => L2Distance(farr(es(0)), farr(es(1)))),
+    Declare.fn("simhash64")(es => SimHash64(es.head)),
+    Declare.fn("minhash_sig")(es => MinHashSignature(es(0),
+      es(1).eval().asInstanceOf[Number].intValue())),
+    Declare.fn("shingle_hashes")(es => ShingleHashes(es(0), es(1))),
+    Declare.fn("minhash_est")(es => MinHashEstimate(es(0), es(1))),
+    Declare.fn("sorted_fingerprint")(es => SortedFingerprint(es.head)))
 }
+

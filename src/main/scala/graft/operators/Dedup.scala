@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.QueryDsl._
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,7 +45,6 @@ object Dedup {
     */
   def minhashPairs(docsIn: DataFrame, minJaccard: Double): DataFrame = {
     val spark = docsIn.sparkSession
-    GraftFunctions.register(spark)
     val k = 24; val bands = 8; val rows = k / bands
     val normShingles =
       "shingle_hashes(regexp_replace(lower(trim(text)), '\\\\s+', ' '), 9)"
@@ -134,7 +132,7 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs (banded Hamming join) over any (doc_id, text)
-    * frame. Requires GraftFunctions.register on the session.
+    * frame. Needs a session carrying [[graft.GraftExtensions]] (simhash64).
     *
     * CONTRACT: banding the 64-bit signature into B keys of W bits
     * guarantees a shared band only for pairs within Hamming distance B-1
@@ -271,7 +269,6 @@ object Dedup {
     // band-join pipeline — signatures, 16-bit band keys, Hamming
     // distance — is value-checked end to end, not just spec-checked.
     "d04_simhash_pairs" -> { (s, dir) =>
-      GraftFunctions.register(s)
       simhashPairs(t(s, dir, "documents"), 16)
         .orderBy(asc("hamming"), asc("id1"), asc("id2"))
         .limit(200)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.QueryDsl._
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,7 +40,6 @@ object Similarity {
   val queries: Map[String, Q] = Map(
     // Brute-force cosine top-5 for 10 probes (baseline / ground truth).
     "n01_knn_cosine" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val e = t(s, dir, "embeddings")
       val probes = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
@@ -80,7 +78,6 @@ object Similarity {
 
     // ANN via LSH buckets: probes search only their own bucket.
     "n03_knn_lsh" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), bucket(col("embedding")).as("bkt"))
       val probes = e.filter(col("vec_id") < 10)
@@ -100,7 +97,6 @@ object Similarity {
     // Embedding near-duplicate candidates: bucket-join (never cross join),
     // ranked by exact cosine within buckets.
     "d06_embedding_neardup" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), bucket(col("embedding")).as("bkt"))
       e.as("a").join(e.as("b"),
@@ -129,7 +125,6 @@ object Similarity {
     // (measured 0.90–1.00 across sf0.001/0.01/0.1; single-assignment was
     // 0.62–0.66, 2-nearest replication 0.82–0.90).
     "n05_knn_ivf" -> { (s, dir) =>
-      GraftFunctions.register(s)
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       import org.apache.spark.ml.linalg.Vector
@@ -197,7 +192,6 @@ object Similarity {
     // l2_distance parity with the reference's similarity function
     // (l2_distance.rs:25): nearest neighbors by Euclidean distance.
     "n04_l2_nearest" -> { (s, dir) =>
-      GraftFunctions.register(s)
       val e = t(s, dir, "embeddings")
       val probes = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))

@@ -140,7 +140,6 @@ object Skew {
         Some((nBuckets, "l_orderkey")), Staged.ingestSlices(dir, "lineitem")) {
       _ =>
         t(spark, dir, "lineitem")
-        graft.functions.DecimalFunctions.register(spark)
         spark.sql(lineitemSql)
     }
     // c_nationkey denormalized into orders at ingest (a materialized join
@@ -280,7 +279,6 @@ object Skew {
     Staged.table(spark, s"dnm_lineitem_$nParts",
         "lineitem+orders+customer+part+supplier:v1", dir, slices = slices,
         rowGroupBytes = Some(16L << 20)) { s =>
-      graft.functions.DecimalFunctions.register(spark)
       val ptype = t(spark, dir, "part")
         .select(col("p_partkey").as("dn_pk"), col("p_type").as("l_ptype"))
       // supplier nation folded in like the customer's: one more i32 turns
@@ -528,7 +526,6 @@ object Skew {
     Twin("k08_staged_q11", "tpch_q11", { (s, dir) =>
       staticPlan(s)
       val (tps, _) = writeStagedPartsupp(s, dir, defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       val sup = t(s, dir, "supplier")
         .join(t(s, dir, "nation").filter(col("n_name") === "NATION_7"),
           col("s_nationkey") === col("n_nationkey"))
@@ -785,7 +782,6 @@ object Skew {
     // as tpch_q01 (shared oracle).
     Twin("k16_staged_q01", "tpch_q01", { (s, dir) =>
       val (tli, _) = writeBucketedTpch(s, dir, defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       s.table(tli)
         .filter(col("l_shipdate") <= lit("1998-09-02 00:00:00").cast("timestamp"))
         .select(col("l_returnflag"), col("l_linestatus"),
@@ -857,7 +853,6 @@ object Skew {
     // exchanged beyond the tiny per-partkey partials. Same values as
     // tpch_q14 (shared oracle).
     Twin("k18_fused_q14", "tpch_q14", { (s, dir) =>
-      graft.functions.DecimalFunctions.register(s)
       val la = t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-09-01 00:00:00").cast("timestamp") &&
           col("l_shipdate") < lit("1996-10-01 00:00:00").cast("timestamp"))
@@ -911,7 +906,6 @@ object Skew {
     // values as tpch_q05 (shared oracle).
     Twin("k19_denorm_q05", "tpch_q05", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       // With the supplier nation STORED on the fact row (l_snation), the
       // whole query is scan-side predicates: orderdate window (zone-map
       // pruned), supplier-nation ∈ ASIA (5-key IN, pushed to the scan),
@@ -949,7 +943,6 @@ object Skew {
     // |2 pairs × years| rows. Same values as tpch_q07 (shared oracle).
     Twin("k20_denorm_q07", "tpch_q07", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       val twoN = Seq("NATION_5", "NATION_10")
       // nation-name literals for the two keys (bounded-dim enumeration:
       // 2 rows), so BOTH nation constraints become scan-pushable IN
@@ -986,7 +979,6 @@ object Skew {
     // tpch_q03 (shared oracle).
     Twin("k21_denorm_q03", "tpch_q03", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       s.table(tdn)
         .filter(col("l_cmkt") === "BUILDING" &&
           col("o_orderdate") < lit("1996-03-15 00:00:00").cast("timestamp") &&
@@ -1006,7 +998,6 @@ object Skew {
     // tpch_q06 (shared oracle).
     Twin("k22_denorm_q06", "tpch_q06", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       s.table(tdn)
         .filter(col("l_shipdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01 00:00:00").cast("timestamp") &&
@@ -1023,7 +1014,6 @@ object Skew {
     // minus supplycost_u(4) × qty_u(4)). Same values as tpch_q09.
     Twin("k23_denorm_q09", "tpch_q09", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       val redParts = t(s, dir, "part")
         .filter(col("p_name").like("%red%")).select(col("p_partkey"))
       val supN = t(s, dir, "supplier")
@@ -1068,7 +1058,6 @@ object Skew {
     // is ever shuffled. Same values as tpch_q10 (shared oracle).
     Twin("k24_denorm_q10", "tpch_q10", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       val rev = s.table(tdn)
         .filter(col("l_returnflag") === "R" &&
           col("o_orderdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
@@ -1101,7 +1090,6 @@ object Skew {
     // (shared oracle; k17 is the bucketed variant of the same query).
     Twin("k25_denorm_q08", "tpch_q08", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       val amKeys = t(s, dir, "nation")
         .join(t(s, dir, "region").filter(col("r_name") === "AMERICA"),
           col("n_regionkey") === col("r_regionkey"))
@@ -1139,7 +1127,6 @@ object Skew {
     // at ingest instead (same caveat applies to k25's l_ptype equality).
     Twin("k26_denorm_q14", "tpch_q14", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       s.table(tdn)
         .filter(col("l_shipdate") >= lit("1996-09-01 00:00:00").cast("timestamp") &&
           col("l_shipdate") < lit("1996-10-01 00:00:00").cast("timestamp") &&

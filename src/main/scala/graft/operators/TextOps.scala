@@ -106,7 +106,6 @@ object TextOps {
     // allocated and sorted a fresh UTF8String array per document (was 26%
     // of the whole sf0.1 bench).
     "t04_fingerprint" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val nc = norm(col("text"))
       t(s, dir, "documents")
         .select(col("doc_id"),

@@ -91,9 +91,11 @@ object Extended {
 
     // GlareDB-name function surface through the compat layer: the SQL text
     // below uses the reference's names (strpos, list_extract, epoch,
-    // isfinite, csc, gcd, lcm, to_int32) yet runs on Spark unchanged.
+    // isfinite, csc, gcd, lcm, to_int32) yet runs on Spark unchanged. csc
+    // is also a Spark name; the dialect switch gives it the reference's
+    // definition.
     "q69_compat_functions" -> { (s, dir) =>
-      graft.functions.GlareCompat.register(s)
+      graft.GraftExtensions.glareDialect(s)
       t(s, dir, "part"); t(s, dir, "embeddings")
       s.sql("""
         SELECT p_partkey,

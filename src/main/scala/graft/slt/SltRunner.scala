@@ -1462,6 +1462,9 @@ object SltRunner {
     val lines = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
       java.nio.charset.StandardCharsets.UTF_8).linesIterator.toVector
+    // the reference's definitions of Spark-named functions (trim(src,
+    // chars), first-match regexp_replace, ...)
+    graft.GraftExtensions.glareDialect(spark)
     // GlareDB/Postgres string literals are raw (no backslash escapes)
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     // "quoted" identifiers are identifiers (not string literals); unquoted
@@ -1873,8 +1876,6 @@ object SltSweep {
   def main(args: Array[String]): Unit = {
     val spark = graft.Engine.session(cpus = 8, appName = "slt-sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GlareCompat.register(spark)
     val root = args.headOption.getOrElse("/root/reference/slt/standard")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().sortBy(_.getName).flatMap(walk).toSeq

@@ -37,7 +37,8 @@ object GraftSession {
   private val TpchGenTvfPattern =
     raw"""(?i)tpch_gen\.(region|nation|customer|supplier|part|partsupp|orders|lineitem)\s*\(\s*([0-9.eE+-]*)\s*\)""".r
   // A quoted directory used as a table resolves to Delta when it has a log,
-  // or to Iceberg when it has a metadata/ dir with *.metadata.json.
+  // or to Iceberg when it has a metadata/ dir with *.metadata.json; a local
+  // one that does not exist throws FileNotFoundException naming it.
   private val DirPattern =
     raw"""(?i)(from|join)\s+'([^']+)'""".r
   // iceberg.metadata/snapshots/manifest_list/data_files('<path>') TVFs +
@@ -408,8 +409,23 @@ object GraftSession {
         val v = viewName(path)
         Iceberg.read(spark, path).createOrReplaceTempView(v)
         java.util.regex.Matcher.quoteReplacement(s"$kw $v")
-      } else m.matched
+      } else if (!path.contains("://") && !new java.io.File(path).exists &&
+          namesRelation(m.source.toString, m.start))
+        throw new java.io.FileNotFoundException(path)
+      else m.matched
     })
     rewritten
+  }
+
+  /** Whether the FROM/JOIN at `at` takes a relation: outside every
+    * parenthesis or in a subquery's, not in `trim(both 'x' FROM 'xax')`. */
+  private def namesRelation(sql: String, at: Int): Boolean = {
+    val before = sql.take(at).replaceAll("'[^']*'", "''")
+    var depth = 0
+    val open = before.lastIndexWhere { c =>
+      if (c == ')') depth += 1 else if (c == '(') depth -= 1
+      depth < 0
+    }
+    open < 0 || "(?i)\\bselect\\b".r.findFirstIn(before.drop(open)).isDefined
   }
 }

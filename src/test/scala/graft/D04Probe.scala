@@ -22,7 +22,6 @@ object D04Probe {
     val dir = args.headOption.getOrElse("/root/repo/target/sf100")
     val spark = Engine.session(cpus = 32, appName = "d04-probe")
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val t0 = System.nanoTime()
     SparkEntry.queries("d04_simhash_pairs")(spark, dir)
       .coalesce(1).write.mode("overwrite").parquet("target/d04_sf100/pairs")

@@ -18,7 +18,6 @@ object ExpMain {
     * is expected to be reused by ReuseExchangeAndSubquery/AQE. */
   val q11OneDag: Q = { (s, dir) =>
     val (tps, _) = graft.operators.Skew.writeStagedPartsupp(s, dir, 32)
-    graft.functions.DecimalFunctions.register(s)
     val sup = t(s, dir, "supplier")
       .join(t(s, dir, "nation").filter(col("n_name") === "NATION_7"),
         col("s_nationkey") === col("n_nationkey"))

@@ -106,6 +106,58 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     Fs.rm(new java.io.File(tmp))
   }
 
+  test("quoted FROM dir: a missing path throws, a function-form FROM is left alone") {
+    val e = intercept[java.io.FileNotFoundException] {
+      sources.GraftSession.sql(spark, "SELECT count(*) AS n FROM '/no/such/dir/table1'")
+    }
+    assert(e.getMessage.contains("/no/such/dir/table1"), e.getMessage)
+    // the FROM inside trim(...) takes a string, not a relation
+    val r = sources.GraftSession.sql(spark,
+      "SELECT trim(BOTH '/' FROM '/no/such/dir/') AS t").collect()(0)
+    assert(r.getAs[String]("t") == "no/such/dir")
+  }
+
+  test("extension: a bare child session resolves every function family") {
+    // never passes through Graft.install or Engine.table
+    val a = spark.newSession()
+    val r = a.sql("""SELECT
+        cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS cs,
+        strpos('graftspark', 'spark') AS sp,
+        to_unscaled64(1.25D, 12, 4) AS u""").collect()(0)
+    assert(math.abs(r.getAs[Double]("cs") - 1.0) < 1e-9)
+    assert(r.getAs[Int]("sp") == 6)
+    assert(r.getAs[Long]("u") == 12500L)
+    val agg = a.sql("""SELECT
+        sum_unscaled128(to_unscaled64(CAST(id AS DOUBLE) / 4, 12, 4), 4, 4) AS s,
+        size(topk_sketch(id % 3, 2, 16)) AS k,
+        range_agg(CAST(id AS DOUBLE)) AS rg
+      FROM range(10)""").collect()(0)
+    assert(agg.getAs[Double]("s") == 11.25)
+    assert(agg.getAs[Int]("k") == 2)
+    assert(agg.getAs[Double]("rg") == 9.0)
+    assert(a.sql("SELECT count(*) FROM generate_series(1, 5)").head().getLong(0) == 5)
+  }
+
+  test("extension: list_views() reads the session that runs the query") {
+    val (a, b) = (spark.newSession(), spark.newSession())
+    a.range(1).createOrReplaceTempView("graft_only_in_a")
+    def views(s: SparkSession) =
+      s.sql("SELECT view_name FROM list_views()").collect().map(_.getString(0)).toSet
+    assert(views(a).contains("graft_only_in_a"))
+    assert(!views(b).contains("graft_only_in_a"))
+  }
+
+  test("dialect: Spark's own names keep Spark's semantics until a session switches") {
+    val q = "SELECT regexp_replace('a  b  c', ' +', ' ') AS r"
+    val plain = spark.newSession()
+    assert(plain.sql(q).head().getString(0) == "a b c")
+    val glare = spark.newSession()
+    GraftExtensions.glareDialect(glare)
+    // the reference replaces the first match only, unless flags hold 'g'
+    assert(glare.sql(q).head().getString(0) == "a b  c")
+    assert(plain.sql(q).head().getString(0) == "a b c")
+  }
+
   test("entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -201,7 +253,6 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cosine_sim: self-similarity is 1, matches scala computation") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = Engine.table(spark, dir, "embeddings")
       .filter(col("vec_id") < 3)
       .select(col("vec_id"), col("embedding"),
@@ -218,7 +269,6 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("l2_distance: zero for self, symmetric") {
-    graft.functions.GraftFunctions.register(spark)
     val e = Engine.table(spark, dir, "embeddings").filter(col("vec_id") < 5)
     val a = e.select(col("vec_id").as("ida"), col("embedding").as("va"))
     val b = e.select(col("vec_id").as("idb"), col("embedding").as("vb"))
@@ -459,7 +509,6 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("topk sketch: undersized capacity keeps the SpaceSaving contract") {
-    graft.functions.HeavyHitters.register(spark)
     Engine.table(spark, dir, "events")
     val truth = spark.sql("SELECT user_id, COUNT(*) c FROM events GROUP BY 1")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -536,7 +585,6 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("simhash: planted near-duplicates land within small hamming distance") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Engine.table(spark, dir, "documents")
       .select(col("doc_id"), col("text")).limit(50)
     val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
@@ -842,7 +890,6 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("simhash64 is deterministic and order-sensitive only via token multiset") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val r = Seq(("a b c d e f g h", "a b c d e f g h", "x y z w q r s t"))
       .toDF("t1", "t2", "t3")

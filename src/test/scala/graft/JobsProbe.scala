@@ -89,7 +89,6 @@ object JobsProbe {
       s.conf.set("spark.sql.adaptive.enabled", "false")
       val (tps, _) = graft.operators.Skew.writeStagedPartsupp(s, dir,
         graft.operators.Skew.defaultBuckets)
-      graft.functions.DecimalFunctions.register(s)
       val sup = Engine.table(s, dir, "supplier")
         .join(Engine.table(s, dir, "nation").filter(col("n_name") === "NATION_7"),
           col("s_nationkey") === col("n_nationkey"))

@@ -158,8 +158,6 @@ class SltSpec extends AnyFunSuite with BeforeAndAfterAll {
     // child session: the 8 benchmark temp views must not leak into the
     // shared catalog (slt/standard system_join counts list_tables())
     val s = spark.newSession()
-    graft.functions.GraftFunctions.register(s)
-    graft.functions.GlareCompat.register(s)
     setupTpchBench(s)
     val results = tpchbenchFiles.map { rel =>
       rel -> graft.slt.SltRunner.runFile(s, s"$tpchbenchRoot/$rel",
@@ -249,8 +247,6 @@ class SltSpec extends AnyFunSuite with BeforeAndAfterAll {
     Reference.assumeExists((Seq("describe_files.slt") ++ tpcdsSltAllowlist)
       .map(f => s"$tpcdsSltRoot/$f"): _*)
     val s = spark.newSession()
-    graft.functions.GraftFunctions.register(s)
-    graft.functions.GlareCompat.register(s)
     val describeFile = setupTpcdsTwins(s)
     val files = Seq("describe_files.slt" -> describeFile) ++
       tpcdsSltAllowlist.map(f => f -> s"$tpcdsSltRoot/$f")
@@ -266,8 +262,6 @@ class SltSpec extends AnyFunSuite with BeforeAndAfterAll {
     // records also read fixtures under testdata/ through the '../ rewrite
     Reference.assumeExists(
       connectorAllowlist.map(f => s"$connectorRoot/$f") :+ "/root/reference/testdata": _*)
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GlareCompat.register(spark)
     val bad = connectorAllowlist.flatMap { rel =>
       val r = graft.slt.SltRunner.runFile(spark, s"$connectorRoot/$rel")
       if (r.passed) None else Some(s"$rel: ${r.failures.headOption.getOrElse("")}")
@@ -276,8 +270,6 @@ class SltSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test(s"reference SLT allowlist passes (${allowlist.size} files)") {
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GlareCompat.register(spark)
     val bad = allowlist.flatMap { rel =>
       val r = graft.slt.SltRunner.runFile(spark, s"$root/$rel")
       if (r.passed) None else Some(s"$rel: ${r.failures.headOption.getOrElse("")}")

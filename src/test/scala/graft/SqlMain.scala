@@ -5,8 +5,7 @@ object SqlMain {
   def main(args: Array[String]): Unit = {
     val spark = Engine.session(cpus = 4, appName = "sql-scratch")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GlareCompat.register(spark)
+    GraftExtensions.glareDialect(spark)
     val src = scala.io.Source.fromInputStream(System.in).mkString
     src.split(";;").map(_.trim).filter(_.nonEmpty).foreach { sql =>
       try {

@@ -31,6 +31,7 @@ object StagedKit {
 
   def session(wh: String, app: String): SparkSession = {
     val spark = SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions)
       .master("local[2]").appName(app)
       .config("spark.sql.warehouse.dir", wh)
       .config("spark.sql.session.timeZone", "UTC")
