@@ -19,6 +19,7 @@ Typical use::
     graft.sql(spark, "SELECT count(*) FROM 'data/lineitem.parquet'").show()
 """
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["register", "sql", "table", "connect"]
@@ -66,9 +67,17 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def connect(app_name: str = "graft", master: str = None) -> SparkSession:
     """Convenience mirror of the reference's ``glaredb.connect()``: build
     (or reuse) a SparkSession carrying ``graft.GraftExtensions`` and
-    register the graft surface on it."""
+    register the graft surface on it. The extension is appended to the
+    ``spark.sql.extensions`` the JVM's defaults already name
+    (spark-defaults.conf, ``--conf``), so those still apply."""
+    # start the JVM so SparkConf() reads its defaults
+    SparkContext._ensure_initialized()
+    exts = [e for e in SparkConf().get("spark.sql.extensions", "").split(",")
+            if e.strip()]
+    if "graft.GraftExtensions" not in exts:
+        exts.append("graft.GraftExtensions")
     builder = (SparkSession.builder.appName(app_name)
-               .config("spark.sql.extensions", "graft.GraftExtensions"))
+               .config("spark.sql.extensions", ",".join(exts)))
     if master:
         builder = builder.master(master)
     return register(builder.getOrCreate())

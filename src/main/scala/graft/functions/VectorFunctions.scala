@@ -453,4 +453,3 @@ object GraftFunctions {
     Declare.fn("minhash_est")(es => MinHashEstimate(es(0), es(1))),
     Declare.fn("sorted_fingerprint")(es => SortedFingerprint(es.head)))
 }
-

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.functions._
 
 /** SQL front-end sugar matching the reference's resolver behavior:
@@ -37,8 +38,7 @@ object GraftSession {
   private val TpchGenTvfPattern =
     raw"""(?i)tpch_gen\.(region|nation|customer|supplier|part|partsupp|orders|lineitem)\s*\(\s*([0-9.eE+-]*)\s*\)""".r
   // A quoted directory used as a table resolves to Delta when it has a log,
-  // or to Iceberg when it has a metadata/ dir with *.metadata.json; a local
-  // one that does not exist throws FileNotFoundException naming it.
+  // or to Iceberg when it has a metadata/ dir with *.metadata.json.
   private val DirPattern =
     raw"""(?i)(from|join)\s+'([^']+)'""".r
   // iceberg.metadata/snapshots/manifest_list/data_files('<path>') TVFs +
@@ -313,9 +313,21 @@ object GraftSession {
     "graft_path_" + java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(path).toLong & 0xffffffffL)
 
-  /** Run SQL with path-as-table / read_* TVF sugar resolved. */
-  def sql(spark: SparkSession, query: String): DataFrame =
-    spark.sql(rewrite(spark, query))
+  /** Run SQL with path-as-table / read_* TVF sugar resolved. When Spark
+    * cannot parse the result and a quoted `FROM`/`JOIN '<path>'` in it
+    * names a local path that does not exist, that path is the error
+    * (FileNotFoundException), not the parse error it causes. */
+  def sql(spark: SparkSession, query: String): DataFrame = {
+    val q = rewrite(spark, query)
+    try spark.sql(q)
+    catch {
+      case e: ParseException =>
+        throw DirPattern.findAllMatchIn(q).map(_.group(2))
+          .find(p => !p.contains("://") && !new java.io.File(p).exists)
+          .map(p => new java.io.FileNotFoundException(p).initCause(e))
+          .getOrElse(e)
+    }
+  }
 
   /** Resolve the path-as-table / TVF sugar, registering temp views for
     * each referenced source, and return plain Spark SQL. (Also used by the
@@ -409,23 +421,8 @@ object GraftSession {
         val v = viewName(path)
         Iceberg.read(spark, path).createOrReplaceTempView(v)
         java.util.regex.Matcher.quoteReplacement(s"$kw $v")
-      } else if (!path.contains("://") && !new java.io.File(path).exists &&
-          namesRelation(m.source.toString, m.start))
-        throw new java.io.FileNotFoundException(path)
-      else m.matched
+      } else m.matched
     })
     rewritten
-  }
-
-  /** Whether the FROM/JOIN at `at` takes a relation: outside every
-    * parenthesis or in a subquery's, not in `trim(both 'x' FROM 'xax')`. */
-  private def namesRelation(sql: String, at: Int): Boolean = {
-    val before = sql.take(at).replaceAll("'[^']*'", "''")
-    var depth = 0
-    val open = before.lastIndexWhere { c =>
-      if (c == ')') depth += 1 else if (c == '(') depth -= 1
-      depth < 0
-    }
-    open < 0 || "(?i)\\bselect\\b".r.findFirstIn(before.drop(open)).isDefined
   }
 }

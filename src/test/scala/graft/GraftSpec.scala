@@ -106,15 +106,19 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     Fs.rm(new java.io.File(tmp))
   }
 
-  test("quoted FROM dir: a missing path throws, a function-form FROM is left alone") {
+  test("quoted FROM dir: a missing path throws, FROM before a string literal still runs") {
     val e = intercept[java.io.FileNotFoundException] {
       sources.GraftSession.sql(spark, "SELECT count(*) AS n FROM '/no/such/dir/table1'")
     }
     assert(e.getMessage.contains("/no/such/dir/table1"), e.getMessage)
-    // the FROM inside trim(...) takes a string, not a relation
-    val r = sources.GraftSession.sql(spark,
-      "SELECT trim(BOTH '/' FROM '/no/such/dir/') AS t").collect()(0)
-    assert(r.getAs[String]("t") == "no/such/dir")
+    // each FROM below is followed by a string, not a relation
+    def one(q: String): String =
+      sources.GraftSession.sql(spark, q).collect().map(_.getString(0)).mkString(",")
+    assert(one("SELECT trim(BOTH '/' FROM '/no/such/dir/') AS t") == "no/such/dir")
+    assert(one("""SELECT name FROM VALUES ('bob'), ('al') AS t(name)
+      WHERE name IS DISTINCT FROM 'bob'""") == "al")
+    assert(one("SELECT 'copied from ' || a || '!' AS s FROM VALUES ('x') AS t(a)") ==
+      "copied from x!")
   }
 
   test("extension: a bare child session resolves every function family") {
