@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.classic.ClassicConversions._
+import org.apache.spark.sql.execution.command.ViewHelper
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Session factory + table registry for the graft engine.
   *
@@ -115,6 +119,14 @@ object Engine {
       // (q06 @sf1: ~600 ms -> ~140 ms). The engine never uses session
       // artifacts (addArtifact), so isolation buys nothing here.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // The codegen cache (a Guava cache of maxEntries, default 100) is
+      // split into 4 LRU segments of ~25, and its key hashes the class
+      // loader's identity hash. So whether one workload's generated classes
+      // (77 for four TPC-H queries) overflow a segment was decided per JVM
+      // by chance; an overflowing segment thrashes on a pass's cyclic
+      // order, recompiling 15-26 classes a warm pass that then run
+      // JIT-cold. Static: read once when CodeGenerator initialises.
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
       // Report bucketed scans' write-time sort order (Spark gates this
       // behind a legacy flag; it only ever applies when each bucket is a
       // single file, which the staged writers guarantee by repartitioning
@@ -138,17 +150,6 @@ object Engine {
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
     "events", "documents", "embeddings")
 
-  /** Schema catalog: parquet schema per fixture file, validated by
-    * (mtime, size). `spark.read.parquet` infers the schema EAGERLY from the
-    * footer on every call — ~100 ms of per-table, per-session overhead that
-    * a production engine never pays because its catalog stores the schema.
-    * One stat() call replaces the footer read; a rewritten file (different
-    * mtime/size) re-infers, so non-fixture uses stay correct.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
-      org.apache.spark.sql.types.StructType]()
-
   /** Graft's optimizer rules, installed idempotently on first
     * fixture-table access. They stay in `extraOptimizations`, the final
     * optimizer batch: an extension's rule runs in the operator-optimization
@@ -171,36 +172,57 @@ object Engine {
     if (missing.nonEmpty) spark.experimental.extraOptimizations = opts ++ missing
   }
 
-  /** Read one driver fixture table and register it as a temp view. */
+  /** The fixture catalog: one resolved relation per parquet path, with the
+    * signature it was resolved at. `spark.read.parquet` lists the files and
+    * reads a footer on every call (11-14 ms warm on a 4-vCPU VM); a
+    * production engine keeps that in its catalog. A rewritten file or flat
+    * directory changes its signature and is resolved again, replacing its
+    * entry; so is an entry whose resolving session's context has stopped. */
+  private val relations =
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), HadoopFsRelation)]()
+
+  /** `(mtime, size)` of a file; of a flat (all-regular-file) directory, its
+    * mtime and its children's aggregate (size, mtime). None for anything
+    * else: a nested or partitioned layout can be rewritten in place without
+    * changing the subdirectories' own length/mtime. */
+  private def signature(f: java.io.File): Option[(Long, Long)] =
+    if (f.isFile) Some((f.lastModified(), f.length()))
+    else if (f.isDirectory) {
+      val parts = f.listFiles()
+      if (parts.forall(_.isFile))
+        Some((f.lastModified(), parts.foldLeft(0L)((a, p) =>
+          a ^ java.lang.Long.rotateLeft(p.length() + p.lastModified(), 17))))
+      else None
+    } else None
+
+  /** Read one driver fixture table and register it as a temp view. The
+    * cached relation is copied onto the caller, so parquet reading follows
+    * that session's conf, and bound by a catalog insert: the steps of
+    * `CreateViewCommand.run` without the SQL execution (planning, a
+    * listener event, a retained UI record) around them. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     ensureOptimizations(spark)
     val path = s"$dir/$name.parquet"
-    val f = new java.io.File(path)
-    val df =
-      if (f.isFile) {
-        val key = (path, f.lastModified(), f.length())
-        val schema = schemaCache.computeIfAbsent(key,
-          _ => spark.read.parquet(path).schema)
-        spark.read.schema(schema).parquet(path)
-      } else if (f.isDirectory) {
-        // directory outputs (multi-file tables, e.g. ScaleGen's): validate
-        // by the children's aggregate (size, mtime) — without this, every
-        // query re-reads footers for every table (~70 ms/table at sf1).
-        // Flat (all-regular-file) directories only: a nested/partitioned
-        // layout can be rewritten in place without changing the
-        // subdirectories' own length/mtime, which would serve a stale schema.
-        val parts = f.listFiles()
-        if (parts.forall(_.isFile)) {
-          val sig = parts.foldLeft(0L)((a, p) =>
-            a ^ java.lang.Long.rotateLeft(p.length() + p.lastModified(), 17))
-          val key = (path, f.lastModified(), sig)
-          val schema = schemaCache.computeIfAbsent(key,
-            _ => spark.read.parquet(path).schema)
-          spark.read.schema(schema).parquet(path)
-        } else spark.read.parquet(path)
-      } else spark.read.parquet(path)
-    df.createOrReplaceTempView(name)
-    df
+    signature(new java.io.File(path)) match {
+      case Some(sig) =>
+        val (_, rel) = relations.compute(path, (_, old) =>
+          if (old != null && old._1 == sig && !old._2.sparkSession.sparkContext.isStopped) old
+          else (sig, spark.read.parquet(path).queryExecution.analyzed.collectFirst {
+            case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+          }.get))
+        val df = spark.baseRelationToDataFrame(rel.copy()(spark))
+        val plan = df.queryExecution.analyzed
+        val catalog = spark.sessionState.catalog
+        catalog.createTempView(name, ViewHelper.createTemporaryViewRelation(
+          TableIdentifier(name), spark, replace = true, catalog.getRawTempView,
+          originalText = None, analyzedPlan = plan, aliasedPlan = plan,
+          referredTempFunctions = Nil), overrideIfExists = true)
+        df
+      case None =>
+        val df = spark.read.parquet(path)
+        df.createOrReplaceTempView(name)
+        df
+    }
   }
 
   /** Register every fixture table as a temp view (for spark.sql queries). */

@@ -162,6 +162,93 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plain.sql(q).head().getString(0) == "a b c")
   }
 
+  test("fixture binding: every table's rows equal spark.read.parquet's") {
+    val s = spark.newSession()
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    Engine.tableNames.foreach { t =>
+      val direct = rows(spark.read.parquet(s"$dir/$t.parquet"))
+      assert(rows(Engine.table(s, dir, t)) == direct, t)
+      assert(rows(s.table(t)) == direct, s"view $t")
+    }
+  }
+
+  test("fixture binding: a rewritten file or directory is read fresh") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-rebind").toFile
+    val s = spark.newSession()
+    try {
+      val file = new java.io.File(tmp, "f.parquet")
+      def writeFile(n: Int): Unit = {
+        val out = new java.io.File(tmp, "out")
+        spark.range(n).toDF("id").coalesce(1).write.mode("overwrite").parquet(out.getPath)
+        val part = out.listFiles().find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath, file.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
+      def writeDir(n: Int): Unit =
+        spark.range(n).toDF("id").write.mode("overwrite").parquet(s"$tmp/d.parquet")
+      writeFile(3); writeDir(4)
+      assert(Engine.table(s, tmp.getPath, "f").count() == 3)
+      assert(Engine.table(s, tmp.getPath, "d").count() == 4)
+      val mtime = file.lastModified()
+      writeFile(5); writeDir(6)
+      file.setLastModified(mtime + 2000)
+      assert(Engine.table(s, tmp.getPath, "f").count() == 5)
+      assert(s.table("f").count() == 5)
+      assert(Engine.table(s, tmp.getPath, "d").count() == 6)
+      assert(s.table("d").count() == 6)
+    } finally Fs.rm(tmp)
+  }
+
+  test("fixture binding: each session's scan follows its own parquet conf") {
+    def columnar(s: SparkSession): Boolean = {
+      Engine.table(s, dir, "lineitem")
+      s.table("lineitem").queryExecution.sparkPlan.collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f.supportsColumnar
+      }.get
+    }
+    val sibling = spark.newSession()
+    assert(columnar(sibling))
+    val rowwise = spark.newSession()
+    rowwise.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    assert(!columnar(rowwise))
+    assert(columnar(sibling))
+  }
+
+  test("fixture binding: binding tables runs no SQL execution") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd}
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          starts.incrementAndGet()
+        case _ =>
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    // a plain RDD job posts no SQL event; once its end is delivered, so is
+    // every event posted before it
+    def drain(): Unit = {
+      val job = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
+      job.get()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!job.jobIds.forall(ended.contains) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(job.jobIds.forall(ended.contains), "listener bus did not drain")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      drain()
+      starts.set(0)
+      val s = spark.newSession()
+      Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
+        .foreach(Engine.table(s, dir, _))
+      drain()
+      assert(starts.get == 0, s"${starts.get} SQL executions posted")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

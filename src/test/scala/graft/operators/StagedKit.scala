@@ -56,21 +56,11 @@ object StagedKit {
     Option(new File(wh).listFiles()).getOrElse(Array.empty[File])
       .map(_.getName).filter(_.startsWith("graft_spec_")).toSeq.sorted
 
-  /** Launch [[StagedChild]] in its own JVM with this JVM's class path and
-    * module opens; its output goes to `<signals>/child.log`. */
-  def launchChild(wh: String, mode: String, signals: File): Process = {
-    import scala.jdk.CollectionConverters._
-    val args = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val opens = args.sliding(2).collect {
-      case Seq("--add-opens", v) => Seq("--add-opens", v)
-    }.flatten.toSeq ++ args.filter(_.startsWith("--add-opens="))
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ opens ++
-      Seq("-cp", System.getProperty("java.class.path"),
-        "graft.operators.StagedChild", wh, mode, signals.getAbsolutePath)
-    new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      .redirectOutput(new File(signals, "child.log")).start()
-  }
+  /** Launch [[StagedChild]] in its own JVM; its output goes to
+    * `<signals>/child.log`. */
+  def launchChild(wh: String, mode: String, signals: File): Process =
+    graft.ChildJvm.launch("graft.operators.StagedChild",
+      Seq(wh, mode, signals.getAbsolutePath), new File(signals, "child.log"))
 }
 
 /** Child JVM of the cross-JVM specs: builds the spec table on warehouse
