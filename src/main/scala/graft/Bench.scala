@@ -157,13 +157,9 @@ object Bench {
       graft.operators.Skew.writeBucketed(spark, sfDir, graft.operators.Skew.defaultBuckets)
 
     // Suite isolation (round-2 verdict: suite-position contamination made
-    // tpch_q01 read 4x slower than its identical DataFrame twin; round-5:
-    // 20 cached star tables alive across the suite put late queries under
-    // storage-memory eviction — tpcds_q65 6.4 s in-suite vs 0.9 s isolated):
+    // tpch_q01 read 4x slower than its identical DataFrame twin):
     //  - each query runs in a FRESH child session (same executors/context,
     //    fresh temp catalog — query-registered temp views don't pile up);
-    //  - ALL cached relations are dropped after each query's runs; the next
-    //    query's warmup re-caches only what it needs;
     //  - a GC pulse between queries levels heap pressure and lets the
     //    ContextCleaner reap localCheckpoint RDDs;
     //  - median of 5 timed runs with per-run values recorded, so outliers
@@ -192,14 +188,11 @@ object Bench {
     // enough for queries early in the suite — C2 is still compiling the
     // parquet reader / Tungsten hot loops during their timed runs (measured:
     // q01 at suite position 1 ran 1.26 s vs its identical twin tpch_q01 at
-    // position 24 running 0.79 s). Same hygiene as the timed loop so the
-    // warmup pass can't re-introduce cache contamination.
+    // position 24 running 0.79 s). Same hygiene as the timed loop.
     if (!sys.env.contains("SPARK_GRAFT_BENCH_NOWARM")) {
       selected.foreach { name =>
         try runOnce(spark.newSession(), name)
         catch { case _: Throwable => () }
-        try graft.queries.Tpcds.clearStarCache(spark)
-        catch { case _: Throwable => }
         // release this warmup's shuffle files; grace for the async cleaner
         gcPulse()
       }
@@ -234,10 +227,6 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           name -> (-1.0, Seq.empty[Double])
       }
-      // hygiene runs even when the query failed — a broken query must not
-      // leave its caches behind to contaminate the next one
-      try graft.queries.Tpcds.clearStarCache(spark)
-      catch { case _: Throwable => }
       System.gc()
       // per-timed-window executor metrics (post-GC so the async listener
       // bus has drained); normalized per run in the artifact

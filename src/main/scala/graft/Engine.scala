@@ -68,6 +68,15 @@ object Engine {
       // wrong plan shape to scale up. AQE still broadcasts runtime-small
       // intermediates.
       .config("spark.sql.autoBroadcastJoinThreshold", (8L << 20).toString)
+      // Size-based join planning reads a file table's bytes on disk, and
+      // parquet's compressed bytes understate the rows a scan decodes:
+      // the staged TPC-DS store_sales is 31 MB of zstd parquet at sf0.1 and
+      // 86 MB in Spark's columnar cache. At 1x, sf0.1 catalog_sales (600k
+      // rows) became a broadcast build side in tpcds_q25 (+25% warm); at
+      // 3x it is a sort-merge join again, and the TPC-H plans that change
+      // at sf0.1 (q03, q05, q10) ran 25-40% faster (4-vCPU VM). No sf0.01
+      // TPC-H plan changes.
+      .config("spark.sql.sources.fileCompressionFactor", "3")
       // Runtime Bloom-filter join reduction (the reference's scan-filter
       // story — bloom-filtered row-group pruning — expressed at cluster
       // scale): a selective filter on one join side builds a bloom over
@@ -104,9 +113,8 @@ object Engine {
       // the 1 MB filter beats FPP-optimal 4 MB sizing (3.01 s vs 3.67 s)
       // and a k=1 same-memory variant (3.20 s) — the probe loop is
       // L2-resident at 1 MB and the residual false-pass rows are cheap
-      // SMJ skips. GRAFT_BLOOM=false turns the rewrite off for A/B runs.
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled",
-        sys.env.getOrElse("GRAFT_BLOOM", "true"))
+      // SMJ skips.
+      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       // Sort-merge stays the default join. Shuffled-hash was measured both
       // ways at sf10: -30% on the dim-heavy shapes (q03 3.3->2.4 s, q05
       // 4.7->3.3 s) but +10-30% on the 4+-way fact joins (q07/q08/q10/q13,
@@ -195,14 +203,15 @@ object Engine {
       else None
     } else None
 
-  /** Read one driver fixture table and register it as a temp view. The
-    * cached relation is copied onto the caller, so parquet reading follows
-    * that session's conf, and bound by a catalog insert: the steps of
-    * `CreateViewCommand.run` without the SQL execution (planning, a
-    * listener event, a retained UI record) around them. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+  /** Read one fixture table and register it as a temp view. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    bind(spark, name, s"$dir/$name.parquet")
+
+  /** Register the parquet file or directory at `path` as temp view `name`.
+    * The cached relation is copied onto the caller, so parquet reading
+    * follows that session's conf. */
+  def bind(spark: SparkSession, name: String, path: String): DataFrame = {
     ensureOptimizations(spark)
-    val path = s"$dir/$name.parquet"
     signature(new java.io.File(path)) match {
       case Some(sig) =>
         val (_, rel) = relations.compute(path, (_, old) =>
@@ -210,19 +219,25 @@ object Engine {
           else (sig, spark.read.parquet(path).queryExecution.analyzed.collectFirst {
             case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
           }.get))
-        val df = spark.baseRelationToDataFrame(rel.copy()(spark))
-        val plan = df.queryExecution.analyzed
-        val catalog = spark.sessionState.catalog
-        catalog.createTempView(name, ViewHelper.createTemporaryViewRelation(
-          TableIdentifier(name), spark, replace = true, catalog.getRawTempView,
-          originalText = None, analyzedPlan = plan, aliasedPlan = plan,
-          referredTempFunctions = Nil), overrideIfExists = true)
-        df
+        view(spark, name, spark.baseRelationToDataFrame(rel.copy()(spark)))
       case None =>
         val df = spark.read.parquet(path)
         df.createOrReplaceTempView(name)
         df
     }
+  }
+
+  /** Register `df`'s analyzed plan as temp view `name` by a catalog insert:
+    * the steps of `CreateViewCommand.run` without the SQL execution
+    * (planning, a listener event, a retained UI record) around them. */
+  def view(spark: SparkSession, name: String, df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed
+    val catalog = spark.sessionState.catalog
+    catalog.createTempView(name, ViewHelper.createTemporaryViewRelation(
+      TableIdentifier(name), spark, replace = true, catalog.getRawTempView,
+      originalText = None, analyzedPlan = plan, aliasedPlan = plan,
+      referredTempFunctions = Nil), overrideIfExists = true)
+    df
   }
 
   /** Register every fixture table as a temp view (for spark.sql queries). */

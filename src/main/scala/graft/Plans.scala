@@ -13,7 +13,7 @@ import graft.QueryDsl.Twin
   * intended ones. A scale-assertion table leads the file:
   *
   *  - `fact_bcast`: no BroadcastExchange anywhere above a lineitem/orders
-  *    scan — fact tables must never be a broadcast build side (the round-1
+  *    or staged TPC-DS fact scan — fact tables must never be a broadcast build side (the round-1
   *    scale hazard);
   *  - `topk`: ORDER BY + LIMIT plans use TakeOrderedAndProject (no global
   *    sort of the full input).
@@ -23,11 +23,13 @@ import graft.QueryDsl.Twin
 object Plans {
 
   private val factTables = Seq("lineitem", "orders")
-  // synthesized TPC-DS facts live as cached in-memory tables, not files
-  private val cachedFactTables =
-    Seq("store_sales", "catalog_sales", "web_sales", "inventory")
+  // the staged TPC-DS facts, by the family in their staged dir's name
+  // (`graft_<family>_...`): the star's sales channels, the layout twins'
+  // inventory and sales-pricing projections
+  private val stagedFacts = Seq("ds_store_sales", "ds_catalog_sales",
+    "ds_web_sales", "inventory", "ssprice", "csprice", "wsprice")
 
-  /** Fact-table scans (parquet or cached star facts) whose RAW ROWS are the
+  /** Fact-table scans (fixture or staged star facts) whose RAW ROWS are the
     * payload of a broadcast exchange. Traversal stops at aggregates: an
     * aggregation below the exchange bounds the broadcast payload by its
     * group cardinality, so a fact scan under it ships group rows, not fact
@@ -39,10 +41,8 @@ object Plans {
         Nil // payload bounded by group count, not input rows
       case f: FileSourceScanExec =>
         val loc = f.relation.location.rootPaths.mkString(",")
-        factTables.filter(t => loc.contains(t + ".parquet"))
-      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        val name = m.relation.cacheBuilder.tableName.getOrElse("")
-        cachedFactTables.filter(name.contains)
+        factTables.filter(t => loc.contains(t + ".parquet")) ++
+          stagedFacts.filter(t => loc.contains(s"/graft_${t}_")).map(_.stripPrefix("ds_"))
       case other => other.children.flatMap(rawFactScans)
     }
     plan.collect { case b: BroadcastExchangeExec =>
@@ -104,8 +104,8 @@ object Plans {
     sb.append("with autoBroadcastJoinThreshold scaled to the fixture (24 KB) so the\n")
     sb.append("size-based planner sees production-like fact/dim ratios: facts can never\n")
     sb.append("be a broadcast build side, dimensions always can.\n\n")
-    sb.append("`fact_bcast` = fact tables (lineitem/orders — also the base of the\n")
-    sb.append("synthesized TPC-DS fact CTEs) under a BroadcastExchange: must be NONE.\n")
+    sb.append("`fact_bcast` = fact tables (lineitem/orders and the staged TPC-DS\n")
+    sb.append("sales facts) under a BroadcastExchange: must be NONE.\n")
     sb.append("`topk` = TakeOrderedAndProject for the ORDER BY+LIMIT golden queries.\n\n")
     sb.append("| query | fact_bcast | topk |\n|---|---|---|\n")
 

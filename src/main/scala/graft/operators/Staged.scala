@@ -6,6 +6,8 @@ import java.nio.file.StandardOpenOption.{CREATE, WRITE}
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.functions._
 
 import graft.Fs
@@ -132,8 +134,8 @@ object Staged {
       rowGroupBytes: Option[Long] = None)(slice: Int => DataFrame): String = {
     val suffix = "_" + hex(dir) + bucket.fold("")("_" + _._1)
     val name = s"graft_${family}_${layoutVer}_${hex(defText)}$suffix"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val loc = new File(wh, name)
+    val loc = location(spark, name)
+    val wh = loc.getParent
 
     // holding the name's build lock, with no table published under it
     def build(): Unit = {
@@ -171,6 +173,10 @@ object Staged {
     name
   }
 
+  /** The directory a staged table `name` is published in. */
+  def location(spark: SparkSession, name: String): File =
+    new File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
+
   private def write(df: DataFrame, s: Int, slices: Int,
       bucket: Option[(Int, String)], rowGroupBytes: Option[Long],
       tmp: String): Unit = {
@@ -191,10 +197,13 @@ object Staged {
     w.saveAsTable(tmp)
   }
 
-  /** Register a published table this session's catalog lacks. */
+  /** Register a published table this session's catalog lacks. The check
+    * asks the session catalog directly: `spark.catalog.tableExists` runs
+    * the analyzer (~2 ms warm), and an attached table is checked on every
+    * call. */
   private def attach(spark: SparkSession, name: String, loc: File,
       bucket: Option[(Int, String)]): Unit =
-    if (!spark.catalog.tableExists(name)) {
+    if (!spark.sessionState.catalog.tableExists(TableIdentifier(name))) {
       val path = loc.getAbsolutePath
       val schema = spark.read.parquet(path).schema.toDDL
       val cluster = bucket.fold("") { case (n, key) =>

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Engine
 import graft.QueryDsl.{Q, Twin}
+import graft.queries.Tpcds
 
 /** Staged TPC-DS inventory: the weekly (Sunday) item × warehouse snapshot
   * grid materialized ONCE at ingest as a sorted parquet table.
@@ -37,30 +39,28 @@ object TpcdsLayout {
     * the stored table instead of silently attaching stale data that no
     * longer matches the oracle's inlined CTE (round-11 advice). */
   def writeStagedInventory(spark: SparkSession, dir: String): String =
-    Staged.table(spark, "inventory", graft.queries.Tpcds.defHash("inventory"),
-        dir) { _ =>
-      graft.queries.Tpcds.ensureStar(spark, dir)
+    Staged.table(spark, "inventory", Tpcds.defHash("inventory"), dir) { _ =>
+      Tpcds.bindStar(spark, dir)
       spark.table("inventory")
         .repartitionByRange(32, col("inv_date_sk"))
         .sortWithinPartitions(col("inv_date_sk"), col("inv_item_sk"))
     }
 
-  /** Run a tpcds query text with `inventory` pointing at the stored
-    * layout (all other star views stay as ensureStar builds them). The
-    * re-point is ANALYSIS-scoped: Spark resolves the view eagerly when
-    * s.sql() builds the DataFrame, so the synthesized view is restored
-    * immediately after — a later view-path query in the same session
-    * reads the CTE derivation again, keeping staged-vs-view twin timings
-    * honest even for harnesses that share one session (round-11 advice;
-    * Bench's fresh-session-per-query never hit this). */
-  private def staged(name: String): Q = { (s, dir) =>
-    val tn = writeStagedInventory(s, dir)
-    graft.queries.Tpcds.ensureStar(s, dir)
-    s.sql(s"CREATE OR REPLACE TEMPORARY VIEW inventory AS SELECT * FROM $tn")
-    try s.sql(graft.queries.Tpcds.texts(name).trim)
-    finally s.sql("CREATE OR REPLACE TEMPORARY VIEW inventory AS " +
-      graft.queries.Tpcds.viewBody("inventory"))
+  /** Run a tpcds query text with `inventory` bound to the stored layout
+    * (every other name as the default query binds it). The next default
+    * query over `inventory` binds the synthesized view again. */
+  private def staged(name: String): Q = {
+    val text = Tpcds.texts(name).trim
+    val bind = Tpcds.binder(text)
+    (s, dir) => {
+      val tn = writeStagedInventory(s, dir)
+      bind(s, dir)
+      Engine.bind(s, "inventory", Staged.location(s, tn).getPath)
+      s.sql(text)
+    }
   }
+
+  private val bindDateDim = Tpcds.binder("date_dim")
 
   /** q39 as a fused single-derivation program over the staged fact.
     *
@@ -86,7 +86,7 @@ object TpcdsLayout {
     * partsupp. Values = tpcds_q39 (shared oracle; GraftSpec twin-rows). */
   private def fusedQ39: Q = { (s, dir) =>
     val tn = writeStagedInventory(s, dir)
-    graft.queries.Tpcds.ensureStar(s, dir)
+    bindDateDim(s, dir)
     val dd = s.table("date_dim")
       .filter(col("d_year") === 2001 && col("d_moy").isin(1, 2))
       .select(col("d_date_sk"), col("d_moy"))
@@ -134,8 +134,8 @@ object TpcdsLayout {
     def channel(p: String, fact: String): String = {
       val cols = suffixes.map(c => s"${p}_$c")
       Staged.table(spark, s"${p}price",
-          graft.queries.Tpcds.defHash(fact) + cols.mkString(","), dir) { _ =>
-        graft.queries.Tpcds.ensureStar(spark, dir)
+          Tpcds.defHash(fact) + cols.mkString(","), dir) { _ =>
+        Tpcds.bindStar(spark, dir)
         spark.table(fact)
           .select(cols.map(col): _*)
           .repartitionByRange(32, col(s"${p}_sold_date_sk"))
@@ -145,6 +145,8 @@ object TpcdsLayout {
     (channel("ss", "store_sales"), channel("cs", "catalog_sales"),
       channel("ws", "web_sales"))
   }
+
+  private val bindItemDates = Tpcds.binder("item date_dim")
 
   /** q14 as a fused program over the staged pricing projections — the
     * k48 pattern applied to the round-12 verdict's worst confirmed-
@@ -165,7 +167,7 @@ object TpcdsLayout {
     * tpcds_q14 (shared oracle; the ROLLUP tail is the text's own). */
   private def fusedQ14: Q = { (s, dir) =>
     val (ssT, csT, wsT) = writeStagedSalesPricing(s, dir)
-    graft.queries.Tpcds.ensureStar(s, dir)
+    bindItemDates(s, dir)
     val sqlh = graft.QueryDsl.sql
     // slim item dims, derived once (the view re-synthesizes from part on
     // every reference; four references in the text path)
@@ -225,32 +227,12 @@ object TpcdsLayout {
       LIMIT 100""")
   }
 
-  /** q64 with the twice-referenced cross_sales CTE derived ONCE — the
-    * round-13 verdict's only unadjudicated over-bar TPC-DS shape
-    * (1.85-2.06x across two rounds, task 7).
-    *
-    * The text's final SELECT references cross_sales twice (cs1 year 1999,
-    * cs2 year 2000); Catalyst inlines CTEs and pushes the DIFFERENT year
-    * filters into each copy, so the two subtrees are unequal and
-    * ReuseExchange cannot share them — the entire 17-way join (plus the
-    * cs_ui catalog-returns aggregate it contains) runs twice per query.
-    * A stage decomposition at sf10 confirms: the two join pipelines
-    * are mirror images, each ~half the runtime (see OPTIMIZATION_r14.md).
-    * The fused program computes cross_sales ONCE restricted to
-    * d1.d_year IN (1999, 2000) — equivalent because syear IS d1.d_year,
-    * so filtering the shared derivation to the union of both years and
-    * re-filtering per leg is exactly the text's pushed-down pair —
-    * localCheckpoints the grouped result (~|item x store x buyer-addr|
-    * rows after the selective i_color/i_current_price item filter), and
-    * self-joins the two year slices. Same decimal sumd expressions, same
-    * ORDER BY: values = tpcds_q64 (shared oracle). This is the k15/k48
-    * shared-CTE materialization pattern, not a new layout. */
-  private def fusedQ64: Q = { (s, dir) =>
-    graft.queries.Tpcds.ensureStar(s, dir)
+  /** q64's cross_sales aggregate over both of the text's years. */
+  private val crossSales: String = {
     val sqlh = graft.QueryDsl.sql
     val refund = s"(${sqlh.dmoney("cr_refunded_cash")} + " +
       s"${sqlh.dmoney("cr_reversed_charge")} + ${sqlh.dmoney("cr_store_credit")})"
-    s.sql(s"""
+    s"""
       WITH cs_ui AS
         (SELECT cs_item_sk,
                 ${sqlh.sumd(sqlh.dmoney("cs_ext_list_price"))} AS sale,
@@ -307,9 +289,33 @@ object TpcdsLayout {
       GROUP BY i_product_name, i_item_sk, s_store_name, s_zip,
                ad1.ca_street_number, ad1.ca_street_name, ad1.ca_city,
                ad1.ca_zip, ad2.ca_street_number, ad2.ca_street_name,
-               ad2.ca_city, ad2.ca_zip, d1.d_year, d2.d_year, d3.d_year""")
-      .localCheckpoint()
-      .createOrReplaceTempView("cross_sales_m")
+               ad2.ca_city, ad2.ca_zip, d1.d_year, d2.d_year, d3.d_year"""
+  }
+  private val bindCrossSales = Tpcds.binder(crossSales)
+
+  /** q64 with the twice-referenced cross_sales CTE derived ONCE — the
+    * round-13 verdict's only unadjudicated over-bar TPC-DS shape
+    * (1.85-2.06x across two rounds, task 7).
+    *
+    * The text's final SELECT references cross_sales twice (cs1 year 1999,
+    * cs2 year 2000); Catalyst inlines CTEs and pushes the DIFFERENT year
+    * filters into each copy, so the two subtrees are unequal and
+    * ReuseExchange cannot share them — the entire 17-way join (plus the
+    * cs_ui catalog-returns aggregate it contains) runs twice per query.
+    * A stage decomposition at sf10 confirms: the two join pipelines
+    * are mirror images, each ~half the runtime (see OPTIMIZATION_r14.md).
+    * The fused program computes cross_sales ONCE restricted to
+    * d1.d_year IN (1999, 2000) — equivalent because syear IS d1.d_year,
+    * so filtering the shared derivation to the union of both years and
+    * re-filtering per leg is exactly the text's pushed-down pair —
+    * localCheckpoints the grouped result (~|item x store x buyer-addr|
+    * rows after the selective i_color/i_current_price item filter), and
+    * self-joins the two year slices. Same decimal sumd expressions, same
+    * ORDER BY: values = tpcds_q64 (shared oracle). This is the k15/k48
+    * shared-CTE materialization pattern, not a new layout. */
+  private def fusedQ64: Q = { (s, dir) =>
+    bindCrossSales(s, dir)
+    s.sql(crossSales).localCheckpoint().createOrReplaceTempView("cross_sales_m")
     s.sql("""
       SELECT cs1.product_name AS product_name, cs1.store_name AS store_name,
              cs1.store_zip AS store_zip,

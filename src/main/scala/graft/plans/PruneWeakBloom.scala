@@ -54,8 +54,7 @@ import org.apache.spark.sql.types._
 object PruneWeakBloom extends Rule[LogicalPlan] with PredicateHelper {
 
   private def enabled: Boolean =
-    conf.getConfString("spark.graft.bloom.prune",
-      sys.env.getOrElse("GRAFT_BLOOM_PRUNE", "true")).toBoolean
+    conf.getConfString("spark.graft.bloom.prune", "true").toBoolean
   private def threshold: Double =
     conf.getConfString("spark.graft.bloom.maxCreationSelectivity", "0.25").toDouble
   /** Absolute kept-row ceiling. Past ~4M distinct keys the filter

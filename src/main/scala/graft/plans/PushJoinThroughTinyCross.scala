@@ -66,8 +66,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 object PushJoinThroughTinyCross extends Rule[LogicalPlan] with PredicateHelper {
 
   private def enabled: Boolean =
-    conf.getConfString("spark.graft.pushJoinThroughTinyCross",
-      sys.env.getOrElse("GRAFT_PUSH_CROSS", "true")).toBoolean
+    conf.getConfString("spark.graft.pushJoinThroughTinyCross", "true").toBoolean
 
   private def maxTiny: Long =
     conf.getConfString("spark.graft.pushJoinThroughTinyCross.maxRows", "128").toLong

@@ -311,11 +311,12 @@ object Relational {
 
     "q28_cte_shared" -> { (s, dir) =>
       // Materialized-CTE analogue (GlareDB operators/materialize.rs:69):
-      // the shared subplan is computed once and cached, then consumed twice.
+      // the shared subplan is computed once and checkpointed, then consumed
+      // twice; unlike a cache entry, it leaves no JVM-wide state behind.
       val perCust = t(s, dir, "orders")
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n"), sumd(dbig(col("o_totalprice"))).as("total"))
-        .cache()
+        .localCheckpoint()
       val hi = perCust.filter(col("n") >= 15)
         .select(lit("hi").as("bucket"), col("o_custkey"), col("n"), col("total"))
       val lo = perCust.filter(col("n") <= 5)

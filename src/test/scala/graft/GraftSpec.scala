@@ -838,6 +838,66 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bad.isEmpty, s"fact-table broadcasts:\n${bad.mkString("\n")}")
   }
 
+  test("plan regression: a broadcast of staged store_sales is a fact broadcast") {
+    val sess = spark.newSession()
+    graft.queries.Tpcds.bindStar(sess, dir)
+    val df = sess.sql("""SELECT /*+ BROADCAST(store_sales) */ d_year, COUNT(*) AS n
+      FROM date_dim JOIN store_sales ON ss_sold_date_sk = d_date_sk
+      GROUP BY d_year""")
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    assert(Plans.factBroadcasts(plan) == Seq("store_sales"), plan.treeString)
+  }
+
+  /** Runs `queries` in a child JVM on this JVM's warehouse and returns
+    * whether its cache manager was empty afterwards. */
+  private def inChild(queries: String*): Boolean = {
+    val log = java.io.File.createTempFile("star-child", ".log")
+    try {
+      val child = ChildJvm.launch("graft.StarChild", dir +: queries, log)
+      val code = child.waitFor()
+      val out = scala.io.Source.fromFile(log).getLines().toSeq
+      assert(code == 0, out.takeRight(40).mkString("\n"))
+      out.collectFirst { case StarChild.Result(empty) => empty.toBoolean }
+        .getOrElse(fail(out.takeRight(40).mkString("\n")))
+    } finally log.delete()
+  }
+
+  test("star: TPC-DS queries and twins leave no cached relation behind") {
+    assert(inChild("tpcds_q09", "tpcds_q64", "k62_fused_ds64"),
+      "the cache manager holds a relation after the TPC-DS runs")
+  }
+
+  test("star: TPC-H and TPC-DS runs in one session each read their own customer") {
+    def rows(s: SparkSession, q: String): Seq[String] =
+      SparkEntry.queries(q)(s, dir).collect().map(_.toString).toSeq.sorted
+    val alone = Seq("tpch_q10", "tpcds_q01").map(q => q -> rows(spark.newSession(), q)).toMap
+    assert(alone.values.forall(_.nonEmpty))
+    val shared = spark.newSession()
+    Seq("tpch_q10", "tpcds_q01", "tpch_q10", "tpcds_q01").zipWithIndex.foreach { case (q, i) =>
+      assert(rows(shared, q) == alone(q), s"run ${i + 1} ($q) differs from $q alone")
+    }
+  }
+
+  test("star: a second JVM on the same warehouse attaches the star and writes none") {
+    SparkEntry.queries("tpcds_q25")(spark.newSession(), dir).collect()
+    val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    def star(): Map[String, Seq[(String, Long, Long)]] =
+      wh.listFiles().filter(_.getName.startsWith("graft_ds_")).map { d =>
+        d.getName -> d.listFiles().map(f => (f.getName, f.length, f.lastModified)).toSeq.sorted
+      }.toMap
+    val before = star()
+    // one fixture dir's star: 24 tables sharing the dir-hash suffix
+    assert(before.keys.groupBy(_.split('_').last).values.exists(_.size == 24),
+      s"staged star tables: ${before.keys.toSeq.sorted}")
+    inChild("tpcds_q25")
+    assert(star() == before, "the child JVM changed a staged star table")
+    val tmp = wh.listFiles().map(_.getName).filter(_.endsWith("__tmp"))
+    assert(tmp.isEmpty, s"unpublished builds: ${tmp.mkString(", ")}")
+  }
+
   test("plan regression: q01 pushes the shipdate filter into the scan") {
     val plan = SparkEntry.queries("q01_pricing_summary")(spark, dir)
       .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
@@ -1018,5 +1078,22 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ObjectStores.normalize("s3n://b/k") == "s3a://b/k")
     assert(ObjectStores.normalize("gs://b/k") == "gs://b/k")
     assert(ObjectStores.normalize("/local/path.parquet") == "/local/path.parquet")
+  }
+}
+
+/** Runs the queries `args.tail` on fixture dir `args(0)`, one fresh child
+  * session each, and prints whether the cache manager is empty after them. */
+object StarChild {
+  val Result = """cache empty=(\w+)""".r
+
+  def main(args: Array[String]): Unit = {
+    val spark = Engine.session(cpus = 2, appName = "star-child")
+    spark.sparkContext.setLogLevel("ERROR")
+    args.toSeq.tail.foreach { q =>
+      SparkEntry.queries(q)(spark.newSession(), args(0))
+        .write.format("noop").mode("overwrite").save()
+    }
+    println(s"cache empty=${spark.sharedState.cacheManager.isEmpty}")
+    spark.stop()
   }
 }

@@ -59,10 +59,8 @@ object Q64Probe {
     }
 
     val sView = spark.newSession()
-    graft.queries.Tpcds.ensureStar(sView, dir)
     timeRuns("tpcds_q64/view",
-      () => sView.sql(graft.queries.Tpcds.texts("tpcds_q64").trim))
-    try graft.queries.Tpcds.clearStarCache(spark) catch { case _: Throwable => }
+      () => graft.queries.Tpcds.queries("tpcds_q64")(sView, dir))
     System.gc()
     val sFused = spark.newSession()
     timeRuns("k62_fused_ds64",

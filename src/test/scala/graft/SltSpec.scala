@@ -193,8 +193,9 @@ class SltSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def setupTpcdsTwins(s: org.apache.spark.sql.SparkSession): String = {
     import org.apache.spark.sql.functions.{col => fcol}
-    // materialize + cache the synthesized star schema once (sf0.001)
+    // stage the synthesized star schema and bind every name of it (sf0.001)
     graft.queries.Tpcds.queries("tpcds_q42")(s, "/root/testdata/sf0.001").collect()
+    graft.queries.Tpcds.bindStar(s, "/root/testdata/sf0.001")
     val dtxt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$tpcdsSltRoot/describe_files.slt")),
       java.nio.charset.StandardCharsets.UTF_8)
