@@ -68,15 +68,6 @@ object Engine {
       // wrong plan shape to scale up. AQE still broadcasts runtime-small
       // intermediates.
       .config("spark.sql.autoBroadcastJoinThreshold", (8L << 20).toString)
-      // Size-based join planning reads a file table's bytes on disk, and
-      // parquet's compressed bytes understate the rows a scan decodes:
-      // the staged TPC-DS store_sales is 31 MB of zstd parquet at sf0.1 and
-      // 86 MB in Spark's columnar cache. At 1x, sf0.1 catalog_sales (600k
-      // rows) became a broadcast build side in tpcds_q25 (+25% warm); at
-      // 3x it is a sort-merge join again, and the TPC-H plans that change
-      // at sf0.1 (q03, q05, q10) ran 25-40% faster (4-vCPU VM). No sf0.01
-      // TPC-H plan changes.
-      .config("spark.sql.sources.fileCompressionFactor", "3")
       // Runtime Bloom-filter join reduction (the reference's scan-filter
       // story — bloom-filtered row-group pruning — expressed at cluster
       // scale): a selective filter on one join side builds a bloom over

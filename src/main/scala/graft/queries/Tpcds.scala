@@ -4607,10 +4607,14 @@ object Tpcds {
     * oracle runs, so both engines see identical inputs by construction;
     * its name carries [[defHash]], so a definition edit stages it anew.
     * Every session and JVM over the warehouse reads one materialization,
-    * and join planning reads its file sizes, as for the fixture tables. */
+    * and join planning reads its file sizes, as for the fixture tables.
+    * Tables are written in 4 MB row groups, so Spark splits a fact's scan
+    * across tasks: a whole table in one row group (the default size at
+    * sf0.1) ran tpcds_q67's scan and partial aggregation as one task. */
   private def stage(s: SparkSession, dir: String): Map[String, String] =
     cteDefs.collect { case (name, _) if !views(name) =>
-      val table = graft.operators.Staged.table(s, s"ds_$name", defHash(name), dir) { _ =>
+      val table = graft.operators.Staged.table(s, s"ds_$name", defHash(name), dir,
+          rowGroupBytes = Some(4L << 20)) { _ =>
         val text = wrap(s"SELECT * FROM $name")
         baseReads(text).foreach(Engine.table(s, dir, _))
         s.sql(text)

@@ -851,22 +851,28 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Plans.factBroadcasts(plan) == Seq("store_sales"), plan.treeString)
   }
 
+  private def warehouse: java.io.File =
+    new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+
   /** Runs `queries` in a child JVM on this JVM's warehouse and returns
-    * whether its cache manager was empty afterwards. */
-  private def inChild(queries: String*): Boolean = {
+    * whether its cache manager was empty afterwards, and the staged star
+    * tables its catalog attached. */
+  private def inChild(queries: String*): (Boolean, Set[String]) = {
     val log = java.io.File.createTempFile("star-child", ".log")
     try {
-      val child = ChildJvm.launch("graft.StarChild", dir +: queries, log)
+      val child = ChildJvm.launch("graft.StarChild",
+        Seq(warehouse.getAbsolutePath, dir) ++ queries, log)
       val code = child.waitFor()
       val out = scala.io.Source.fromFile(log).getLines().toSeq
       assert(code == 0, out.takeRight(40).mkString("\n"))
-      out.collectFirst { case StarChild.Result(empty) => empty.toBoolean }
-        .getOrElse(fail(out.takeRight(40).mkString("\n")))
+      out.collectFirst { case StarChild.Result(empty, names) =>
+        (empty.toBoolean, names.split(',').filter(_.nonEmpty).toSet)
+      }.getOrElse(fail(out.takeRight(40).mkString("\n")))
     } finally log.delete()
   }
 
   test("star: TPC-DS queries and twins leave no cached relation behind") {
-    assert(inChild("tpcds_q09", "tpcds_q64", "k62_fused_ds64"),
+    assert(inChild("tpcds_q09", "tpcds_q64", "k62_fused_ds64")._1,
       "the cache manager holds a relation after the TPC-DS runs")
   }
 
@@ -883,7 +889,7 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("star: a second JVM on the same warehouse attaches the star and writes none") {
     SparkEntry.queries("tpcds_q25")(spark.newSession(), dir).collect()
-    val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    val wh = warehouse
     def star(): Map[String, Seq[(String, Long, Long)]] =
       wh.listFiles().filter(_.getName.startsWith("graft_ds_")).map { d =>
         d.getName -> d.listFiles().map(f => (f.getName, f.length, f.lastModified)).toSeq.sorted
@@ -892,7 +898,9 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one fixture dir's star: 24 tables sharing the dir-hash suffix
     assert(before.keys.groupBy(_.split('_').last).values.exists(_.size == 24),
       s"staged star tables: ${before.keys.toSeq.sorted}")
-    inChild("tpcds_q25")
+    val (_, attached) = inChild("tpcds_q25")
+    assert(attached.size == 24 && attached.subsetOf(before.keySet),
+      s"the child attached ${attached.toSeq.sorted}, not the staged star")
     assert(star() == before, "the child JVM changed a staged star table")
     val tmp = wh.listFiles().map(_.getName).filter(_.endsWith("__tmp"))
     assert(tmp.isEmpty, s"unpublished builds: ${tmp.mkString(", ")}")
@@ -1081,19 +1089,24 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 }
 
-/** Runs the queries `args.tail` on fixture dir `args(0)`, one fresh child
-  * session each, and prints whether the cache manager is empty after them. */
+/** Runs the queries `args.drop(2)` on warehouse `args(0)` and fixture dir
+  * `args(1)`, one fresh child session each, and prints whether the cache
+  * manager is empty after them and the staged star tables it attached. */
 object StarChild {
-  val Result = """cache empty=(\w+)""".r
+  val Result = """cache empty=(\w+) star=(\S*)""".r
 
   def main(args: Array[String]): Unit = {
-    val spark = Engine.session(cpus = 2, appName = "star-child")
+    val spark = Engine.configure(SparkSession.builder().master("local[2]")
+      .appName("star-child").config("spark.sql.warehouse.dir", args(0)), 2)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    args.toSeq.tail.foreach { q =>
-      SparkEntry.queries(q)(spark.newSession(), args(0))
+    args.toSeq.drop(2).foreach { q =>
+      SparkEntry.queries(q)(spark.newSession(), args(1))
         .write.format("noop").mode("overwrite").save()
     }
-    println(s"cache empty=${spark.sharedState.cacheManager.isEmpty}")
+    val star = spark.sessionState.catalog.listTables("default", "graft_ds_*")
+      .map(_.table).sorted
+    println(s"cache empty=${spark.sharedState.cacheManager.isEmpty} star=${star.mkString(",")}")
     spark.stop()
   }
 }
