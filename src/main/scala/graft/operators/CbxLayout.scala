@@ -59,7 +59,7 @@ object CbxLayout {
     * `hits`, which we point at the stored layout for this session). */
   private def staged(name: String): Q = { (s, dir) =>
     val th = writeStagedHits(s, dir)
-    s.sql(s"CREATE OR REPLACE TEMPORARY VIEW hits AS SELECT * FROM $th")
+    graft.Engine.view(s, "hits", s.table(th))
     s.sql(graft.queries.ClickBench.text(name).trim)
   }
 

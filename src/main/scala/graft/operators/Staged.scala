@@ -10,34 +10,38 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.functions._
 
-import graft.Fs
+import graft.{Engine, Fs}
 
 /** Staged tables: ingest-time physical layouts, written once per
-  * (fixture dir, layout version, definition) and attached by every later
+  * (fixture dir, layout version, definition) and read by every later
   * session and JVM. GlareDB stores no layouts; these are graft's
   * ingest-time answer (production analogue: layout epochs in the catalog).
   *
   * Publish protocol — `<warehouse>/<name>` exists only once the table is
   * complete:
-  *   - attach: a name already in the catalog with its dir present is
-  *     returned as is; a dir with no catalog entry (another JVM built it)
-  *     is attached as an external table (`CREATE TABLE … LOCATION`; bucket
-  *     identity rides on the bucketed writer's file-name suffixes, so it
-  *     keeps its co-location and write-time sort order);
+  *   - reach: a published plain table is bound into the caller's session
+  *     by path with [[graft.Engine.bind]], like a fixture table: one
+  *     resolution per path per JVM and no catalog entry. Only a bucketed
+  *     table is attached to the session catalog, because the catalog entry
+  *     is what carries its bucket spec: a dir with no entry (another JVM
+  *     built it) is attached as an external table (`CREATE TABLE …
+  *     LOCATION`; bucket identity rides on the bucketed writer's file-name
+  *     suffixes, so it keeps its co-location and write-time sort order);
   *   - build: under an exclusive OS file lock on `<name>`, every slice is
   *     written into the managed table `<name>__tmp`, which is then
   *     published with `ALTER TABLE … RENAME`. For the session catalog that
   *     is one directory rename: the table stays MANAGED, keeps its bucket
-  *     spec, and `DROP TABLE` deletes its files. A rename onto an existing
-  *     location fails loudly.
+  *     spec, and `DROP TABLE default.<name>` deletes its files (an
+  *     unqualified `DROP` would remove the temp view of the same name
+  *     instead). A rename onto an existing location fails loudly.
   *
   * A build killed between slices (an sf100 ENOSPC once left a
   * half-written lineitem projection with a per-slice `_SUCCESS` and a live
   * catalog entry) therefore leaves only `<name>__tmp`, which the next
   * builder deletes: holding the lock proves its writer is dead, because the
   * OS drops a lock with its process. A second JVM arriving mid-build waits
-  * on the lock and then attaches the published table instead of deleting
-  * and rebuilding it. */
+  * on the lock and then reads the published table instead of deleting and
+  * rebuilding it. */
 object Staged {
 
   /** Layout version, baked into every staged-table name. Bump when a
@@ -65,7 +69,6 @@ object Staged {
     * bounded batches, not one all-table exchange. Slices are sized from
     * the input's on-disk bytes (~one slice per 4 GB, min 1, max 16). */
   def ingestSlices(dir: String, table: String): Int = {
-    sys.env.get("GRAFT_INGEST_SLICES").foreach(n => return n.toInt)
     val gb = Fs.size(new File(s"$dir/$table.parquet")).toDouble / (1L << 30)
     math.max(1, math.min(16, math.ceil(gb / 4.0).toInt))
   }
@@ -109,8 +112,9 @@ object Staged {
 
   private[operators] def tmpName(name: String): String = name + "__tmp"
 
-  /** Attach-or-build the staged table `graft_<family>_<layoutVer>_<hash
-    * (defText)>_<hash(dir)>[_<buckets>]` and return its name.
+  /** Build the staged table `graft_<family>_<layoutVer>_<hash
+    * (defText)>_<hash(dir)>[_<buckets>]` unless it is published, make it
+    * readable as that name in `spark`'s session and return the name.
     *
     * `defText` is the table's defining text (its SQL or a description of
     * its projection): an edit to it renames the table, so a stale build is
@@ -134,14 +138,15 @@ object Staged {
       rowGroupBytes: Option[Long] = None)(slice: Int => DataFrame): String = {
     val suffix = "_" + hex(dir) + bucket.fold("")("_" + _._1)
     val name = s"graft_${family}_${layoutVer}_${hex(defText)}$suffix"
-    val loc = location(spark, name)
+    val loc = new File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
     val wh = loc.getParent
 
     // holding the name's build lock, with no table published under it
     def build(): Unit = {
       val tmp = tmpName(name)
       // a catalog entry whose files are gone would block the rename
-      spark.sql(s"DROP TABLE IF EXISTS $name")
+      spark.sql(s"DROP TABLE IF EXISTS default.$name")
       dropTmp(spark, wh, tmp)
       pruneStaleLayouts(wh)
       val sibling = (Pattern.quote(s"graft_${family}_${layoutVer}_") +
@@ -166,16 +171,15 @@ object Staged {
       }
     }
 
-    if (loc.isDirectory) attach(spark, name, loc, bucket)
-    else withBuildLock(wh, name) {
-      if (loc.isDirectory) attach(spark, name, loc, bucket) else build()
+    if (!loc.isDirectory) withBuildLock(wh, name) {
+      if (!loc.isDirectory) build()
+    }
+    bucket match {
+      case Some((n, key)) => attach(spark, name, loc, n, key)
+      case None => Engine.bind(spark, name, loc.getAbsolutePath)
     }
     name
   }
-
-  /** The directory a staged table `name` is published in. */
-  def location(spark: SparkSession, name: String): File =
-    new File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
 
   private def write(df: DataFrame, s: Int, slices: Int,
       bucket: Option[(Int, String)], rowGroupBytes: Option[Long],
@@ -197,24 +201,22 @@ object Staged {
     w.saveAsTable(tmp)
   }
 
-  /** Register a published table this session's catalog lacks. The check
-    * asks the session catalog directly: `spark.catalog.tableExists` runs
-    * the analyzer (~2 ms warm), and an attached table is checked on every
-    * call. */
+  /** Register a published bucketed table this session's catalog lacks.
+    * Spark rejects a bucket spec without a column list, so the schema is
+    * inferred once here. The check asks the session catalog directly:
+    * `spark.catalog.tableExists` runs the analyzer (~2 ms warm), and an
+    * attached table is checked on every call. */
   private def attach(spark: SparkSession, name: String, loc: File,
-      bucket: Option[(Int, String)]): Unit =
+      n: Int, key: String): Unit =
     if (!spark.sessionState.catalog.tableExists(TableIdentifier(name))) {
       val path = loc.getAbsolutePath
       val schema = spark.read.parquet(path).schema.toDDL
-      val cluster = bucket.fold("") { case (n, key) =>
-        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS"
-      }
       spark.sql(s"CREATE TABLE IF NOT EXISTS $name ($schema) USING parquet " +
-        s"$cluster LOCATION '$path'")
+        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS LOCATION '$path'")
     }
 
   private def dropTmp(spark: SparkSession, wh: String, tmp: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
+    spark.sql(s"DROP TABLE IF EXISTS default.$tmp")
     Fs.rm(new File(wh, tmp))
   }
 

@@ -56,7 +56,7 @@ object TpcdsLayout {
     (s, dir) => {
       val tn = writeStagedInventory(s, dir)
       bind(s, dir)
-      Engine.bind(s, "inventory", Staged.location(s, tn).getPath)
+      Engine.view(s, "inventory", s.table(tn))
       s.sql(text)
     }
   }

@@ -4601,26 +4601,24 @@ object Tpcds {
     * derivation far below a scan of the stored grid. */
   private val views = Set("dd_seq", "cust_seq", "inventory")
 
-  /** Stage every other star table once per fixture dir and definition,
-    * and return each name's staged location. A table is written through
-    * [[graft.operators.Staged]] from the same inline CTE text the DuckDB
-    * oracle runs, so both engines see identical inputs by construction;
-    * its name carries [[defHash]], so a definition edit stages it anew.
-    * Every session and JVM over the warehouse reads one materialization,
-    * and join planning reads its file sizes, as for the fixture tables.
-    * Tables are written in 4 MB row groups, so Spark splits a fact's scan
-    * across tasks: a whole table in one row group (the default size at
-    * sf0.1) ran tpcds_q67's scan and partial aggregation as one task. */
-  private def stage(s: SparkSession, dir: String): Map[String, String] =
-    cteDefs.collect { case (name, _) if !views(name) =>
-      val table = graft.operators.Staged.table(s, s"ds_$name", defHash(name), dir,
-          rowGroupBytes = Some(4L << 20)) { _ =>
-        val text = wrap(s"SELECT * FROM $name")
-        baseReads(text).foreach(Engine.table(s, dir, _))
-        s.sql(text)
-      }
-      name -> graft.operators.Staged.location(s, table).getPath
-    }.toMap
+  /** Stage star table `name` once per fixture dir and definition, and
+    * return the staged table's name, bound in `s`. A table is written
+    * through [[graft.operators.Staged]] from the same inline CTE text the
+    * DuckDB oracle runs, so both engines see identical inputs by
+    * construction; its name carries [[defHash]], so a definition edit
+    * stages it anew. Every session and JVM over the warehouse reads one
+    * materialization, and join planning reads its file sizes, as for the
+    * fixture tables. Tables are written in 4 MB row groups, so Spark splits
+    * a fact's scan across tasks: a whole table in one row group (the
+    * default size at sf0.1) ran tpcds_q67's scan and partial aggregation
+    * as one task. */
+  private def stage(s: SparkSession, dir: String, name: String): String =
+    graft.operators.Staged.table(s, s"ds_$name", defHash(name), dir,
+        rowGroupBytes = Some(4L << 20)) { _ =>
+      val text = wrap(s"SELECT * FROM $name")
+      baseReads(text).foreach(Engine.table(s, dir, _))
+      s.sql(text)
+    }
 
   /** The TPC-H base tables `text` names; `customer` is a star name. */
   private def baseReads(text: String): Seq[String] =
@@ -4628,22 +4626,20 @@ object Tpcds {
       s"\\b$t\\b".r.findFirstIn(text).nonEmpty)
 
   /** Bind, into the caller's session, every star name `q` reads: the
-    * staged tables by [[Engine.bind]], the views by a catalog insert of
-    * their analyzed body, after the base tables those bodies read. The
-    * names are computed once; each call rebinds them, so a name another
-    * runner re-pointed in the session (TPC-H's `customer`, a layout twin's
-    * `inventory`) reads the star again. */
+    * tables by a catalog insert of their staged table, which is staged
+    * first if need be, the views by a catalog insert of their analyzed
+    * body, after the base tables those bodies read. The names are computed
+    * once; each call rebinds them, so a name another runner re-pointed in
+    * the session (TPC-H's `customer`, a layout twin's `inventory`) reads
+    * the star again. */
   private[graft] def binder(q: String): (SparkSession, String) => Unit = {
     val names = closure(q, views)
     val base = baseReads(names.filter(views).map(viewBody).mkString("\n"))
     (s, dir) => {
-      val tables = stage(s, dir)
       base.foreach(Engine.table(s, dir, _))
       names.foreach { name =>
-        tables.get(name) match {
-          case Some(path) => Engine.bind(s, name, path)
-          case None => Engine.view(s, name, s.sql(viewBody(name)))
-        }
+        Engine.view(s, name,
+          if (views(name)) s.sql(viewBody(name)) else s.table(stage(s, dir, name)))
       }
     }
   }

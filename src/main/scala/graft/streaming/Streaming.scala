@@ -112,7 +112,7 @@ object Streaming {
     * input (state for these shapes is O(input window)), floor
     * min(4, cores), cap at the session's cores — a 100 TB/day stream derives hundreds of
     * partitions and still uses every core, while a kilobyte fixture stops
-    * paying 32-way commit fan-out. Override: SPARK_GRAFT_STREAM_PARTS.
+    * paying 32-way commit fan-out.
     * Safe for result values on every shape here: partitioning never
     * changes what a shuffle computes, and each bench/oracle run starts a
     * fresh query (memory sink, fresh checkpoint), so there is no prior
@@ -124,12 +124,11 @@ object Streaming {
     * optimum at 4-8 partitions (st04 −48%, st01 −23% vs 32) with a mild
     * SINGLE-partition penalty (the per-batch compute serializes), hence
     * the floor of min(4, cores) rather than 1. */
-  private def sizedStreamParts(staged: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
-      val bytes = graft.Fs.size(new java.io.File(staged))
-      val cores = graft.Engine.defaultCpus
-      math.max(math.min(4, cores), math.min(cores, (bytes >> 23).toInt))
-    }
+  private def sizedStreamParts(staged: String): Int = {
+    val bytes = graft.Fs.size(new java.io.File(staged))
+    val cores = graft.Engine.defaultCpus
+    math.max(math.min(4, cores), math.min(cores, (bytes >> 23).toInt))
+  }
 
   /** Run `body` with the session's shuffle partitions sized by
     * [[sizedStreamParts]], restoring the previous value after (the sink

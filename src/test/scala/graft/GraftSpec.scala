@@ -888,19 +888,21 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("star: a second JVM on the same warehouse attaches the star and writes none") {
-    SparkEntry.queries("tpcds_q25")(spark.newSession(), dir).collect()
+    val q25 = SparkEntry.queries("tpcds_q25")(spark.newSession(), dir)
+    q25.collect()
     val wh = warehouse
     def star(): Map[String, Seq[(String, Long, Long)]] =
       wh.listFiles().filter(_.getName.startsWith("graft_ds_")).map { d =>
         d.getName -> d.listFiles().map(f => (f.getName, f.length, f.lastModified)).toSeq.sorted
       }.toMap
     val before = star()
-    // one fixture dir's star: 24 tables sharing the dir-hash suffix
-    assert(before.keys.groupBy(_.split('_').last).values.exists(_.size == 24),
-      s"staged star tables: ${before.keys.toSeq.sorted}")
-    val (_, attached) = inChild("tpcds_q25")
-    assert(attached.size == 24 && attached.subsetOf(before.keySet),
-      s"the child attached ${attached.toSeq.sorted}, not the staged star")
+    val scanned = StarChild.stagedScans(q25)
+    assert(scanned.nonEmpty &&
+      scanned.map(new java.io.File(_).getName).subsetOf(before.keySet),
+      s"q25 scans ${scanned.toSeq.sorted}, staged: ${before.keys.toSeq.sorted}")
+    val (_, childScanned) = inChild("tpcds_q25")
+    assert(childScanned == scanned,
+      s"the child scanned ${childScanned.toSeq.sorted}, not the staged ${scanned.toSeq.sorted}")
     assert(star() == before, "the child JVM changed a staged star table")
     val tmp = wh.listFiles().map(_.getName).filter(_.endsWith("__tmp"))
     assert(tmp.isEmpty, s"unpublished builds: ${tmp.mkString(", ")}")
@@ -1091,21 +1093,29 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 /** Runs the queries `args.drop(2)` on warehouse `args(0)` and fixture dir
   * `args(1)`, one fresh child session each, and prints whether the cache
-  * manager is empty after them and the staged star tables it attached. */
+  * manager is empty after them and the staged star dirs their plans scan. */
 object StarChild {
   val Result = """cache empty=(\w+) star=(\S*)""".r
+
+  /** The root paths of the staged star dirs `df`'s plan scans. */
+  def stagedScans(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location.rootPaths
+    }.flatten.map(_.toUri.getPath).filter(new java.io.File(_).getName.startsWith("graft_ds_"))
+      .toSet
+  }
 
   def main(args: Array[String]): Unit = {
     val spark = Engine.configure(SparkSession.builder().master("local[2]")
       .appName("star-child").config("spark.sql.warehouse.dir", args(0)), 2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    args.toSeq.drop(2).foreach { q =>
-      SparkEntry.queries(q)(spark.newSession(), args(1))
-        .write.format("noop").mode("overwrite").save()
-    }
-    val star = spark.sessionState.catalog.listTables("default", "graft_ds_*")
-      .map(_.table).sorted
+    val star = args.toSeq.drop(2).flatMap { q =>
+      val df = SparkEntry.queries(q)(spark.newSession(), args(1))
+      df.write.format("noop").mode("overwrite").save()
+      stagedScans(df)
+    }.distinct.sorted
     println(s"cache empty=${spark.sharedState.cacheManager.isEmpty} star=${star.mkString(",")}")
     spark.stop()
   }

@@ -12,7 +12,6 @@ object St04Probe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = Engine.session(cpus = 32, appName = "st04-probe")
     spark.sparkContext.setLogLevel("WARN")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "derived")
     Seq("cold", "warm", "warm2").foreach { label =>
       Seq("st04_stream_stream_join", "st01_stream_hourly").foreach { qn =>
         val s = spark.newSession()
@@ -20,7 +19,7 @@ object St04Probe {
         val df = SparkEntry.queries(qn)(s, dir)
         df.write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        println(f"[parts=$parts $label] $qn end-to-end: $dt%.2f s")
+        println(f"[$label] $qn end-to-end: $dt%.2f s")
       }
     }
     // re-run with progress capture: re-issue the core query inline so we

@@ -51,6 +51,15 @@ object StagedKit {
       spark.range(s * rowsPerSlice, (s + 1) * rowsPerSlice).toDF("id")
     }
 
+  /** The same ids in one slice, bucketed and sorted by `id` into four
+    * buckets; `onBuild` runs when the call builds the table. */
+  def bucketedSpecTable(spark: SparkSession)(onBuild: => Unit): String =
+    Staged.table(spark, "specb", "range ids:v1", "spec-fixture",
+        Some((4, "id"))) { _ =>
+      onBuild
+      spark.range(0, slices * rowsPerSlice).toDF("id")
+    }
+
   /** The warehouse's staged dirs of the spec table. */
   def specDirs(wh: String): Seq[String] =
     Option(new File(wh).listFiles()).getOrElse(Array.empty[File])
@@ -64,15 +73,18 @@ object StagedKit {
 }
 
 /** Child JVM of the cross-JVM specs: builds the spec table on warehouse
-  * `args(0)`. Mode `halt` kills the JVM after slice 0 is written; mode
-  * `block` writes `<args(2)>/started` after slice 0 and waits for
-  * `<args(2)>/go` before writing the rest. */
+  * `args(0)`. Mode `build` builds it whole; mode `halt` kills the JVM after
+  * slice 0 is written; mode `block` writes `<args(2)>/started` after
+  * slice 0 and waits for `<args(2)>/go` before writing the rest. Mode
+  * `bucketed` builds the bucketed spec table instead. */
 object StagedChild {
   def main(args: Array[String]): Unit = {
     val Array(wh, mode, signals) = args
     val spark = StagedKit.session(wh, "staged-child")
-    StagedKit.specTable(spark) { s =>
+    if (mode == "bucketed") StagedKit.bucketedSpecTable(spark)(())
+    else StagedKit.specTable(spark) { s =>
       if (s == 1) mode match {
+        case "build" =>
         case "halt" => Runtime.getRuntime.halt(3)
         case "block" =>
           new File(signals, "started").createNewFile()

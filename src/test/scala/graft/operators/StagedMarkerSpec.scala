@@ -25,7 +25,7 @@ class StagedMarkerSpec extends AnyFunSuite {
       val tmp = Staged.tmpName(tg)
       spark.table(tg).limit((fullCount / 2).toInt)
         .write.format("parquet").saveAsTable(tmp)
-      spark.sql(s"DROP TABLE $tg")
+      spark.sql(s"DROP TABLE default.$tg")
       val (published, leftover) =
         (new java.io.File(wh, tg), new java.io.File(wh, tmp))
       assert(!published.exists(), "DROP TABLE must delete a managed build")

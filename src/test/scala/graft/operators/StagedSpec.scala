@@ -8,6 +8,8 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The staged-table publish protocol across JVMs: `<warehouse>/<name>`
@@ -76,6 +78,43 @@ class StagedSpec extends AnyFunSuite {
         assert(!invoked.get, "the waiting caller must attach, not rebuild")
         assert(spark.table(name).count() == full)
         assert(StagedKit.specDirs(wh) == Seq(name))
+      } finally graft.Fs.rm(signals)
+    }
+  }
+
+  test("a plain table another JVM built is read by path, with no catalog entry") {
+    StagedKit.withWarehouse("staged-plain") { (spark, wh) =>
+      val signals = signalsDir()
+      try {
+        val child = StagedKit.launchChild(wh, "build", signals)
+        assert(awaitExit(child, signals) == 0, childLog(signals))
+
+        val name = StagedKit.specTable(spark)(_ => fail("the published table was rebuilt"))
+        assert(spark.table(name).count() == full)
+        assert(!spark.sessionState.catalog.tableExists(TableIdentifier(name)),
+          "a plain staged table needs no session catalog entry")
+      } finally graft.Fs.rm(signals)
+    }
+  }
+
+  test("a bucketed table another JVM built keeps its bucket spec and joins without an exchange") {
+    StagedKit.withWarehouse("staged-bucketed") { (spark, wh) =>
+      val signals = signalsDir()
+      try {
+        val child = StagedKit.launchChild(wh, "bucketed", signals)
+        assert(awaitExit(child, signals) == 0, childLog(signals))
+
+        val name = StagedKit.bucketedSpecTable(spark)(fail("the published table was rebuilt"))
+        val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(name))
+        assert(meta.bucketSpec.contains(BucketSpec(4, Seq("id"), Seq("id"))),
+          s"bucket spec: ${meta.bucketSpec}")
+        // a size-based broadcast would hide the co-location
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val t = spark.table(name)
+        val joined = t.as("a").join(t.as("b"), col("a.id") === col("b.id"))
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"), s"the bucketed self-join shuffles:\n$plan")
+        assert(joined.count() == full)
       } finally graft.Fs.rm(signals)
     }
   }
