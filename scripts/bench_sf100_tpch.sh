@@ -9,13 +9,12 @@
 set -euo pipefail
 cd /root/repo
 TWINS="k02_bucketed_join,k03_bucketed_q21,k04_bucketed_q18,k05_bucketed_q04"
-TWINS+=",k07_bucketed_q05,k08_staged_q11,k09_bucketed_q03"
-TWINS+=",k10_bucketed_q13,k11_staged_q02,k12_bucketed_q12,k13_bucketed_q09"
-TWINS+=",k14_bucketed_q10,k15_fused_q15,k16_staged_q01,k17_bucketed_q08"
-TWINS+=",k18_fused_q14,k19_denorm_q05,k20_denorm_q07,k21_denorm_q03"
+TWINS+=",k08_staged_q11,k10_bucketed_q13,k11_staged_q02,k12_bucketed_q12"
+TWINS+=",k14_bucketed_q10,k15_fused_q15,k16_staged_q01"
+TWINS+=",k19_denorm_q05,k20_denorm_q07,k21_denorm_q03"
 TWINS+=",k22_denorm_q06,k23_denorm_q09,k24_denorm_q10,k25_denorm_q08"
 TWINS+=",k26_denorm_q14,k27_bucketed_q22"
-TWINS+=",k30_fused_q17,k31_fused_q20,k36_pairs_q16,k61_grid_q17"
+TWINS+=",k30_fused_q17,k31_fused_q20,k36_pairs_q16"
 HQ=$(printf "tpch_q%02d," $(seq 1 22))
 export SPARK_GRAFT_SF_DIR=target/sf100
 export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}

@@ -150,12 +150,6 @@ object Bench {
     val jiffiesPre = cpuJiffies()
     val calPre = calibrate()
 
-    // stage bucketed tables outside the timed region (table layout prep is
-    // a one-time cost in production, not part of the query); skipped when
-    // the selection has no bucketed-layout query (e.g. sf1+ scaling runs)
-    if (selected.exists(_.startsWith("k")))
-      graft.operators.Skew.writeBucketed(spark, sfDir, graft.operators.Skew.defaultBuckets)
-
     // Suite isolation (round-2 verdict: suite-position contamination made
     // tpch_q01 read 4x slower than its identical DataFrame twin):
     //  - each query runs in a FRESH child session (same executors/context,
@@ -188,7 +182,8 @@ object Bench {
     // enough for queries early in the suite — C2 is still compiling the
     // parquet reader / Tungsten hot loops during their timed runs (measured:
     // q01 at suite position 1 ran 1.26 s vs its identical twin tpch_q01 at
-    // position 24 running 0.79 s). Same hygiene as the timed loop.
+    // position 24 running 0.79 s). Same hygiene as the timed loop. A twin's
+    // staged layouts are built by its first run, so staging is never timed.
     if (!sys.env.contains("SPARK_GRAFT_BENCH_NOWARM")) {
       selected.foreach { name =>
         try runOnce(spark.newSession(), name)
@@ -257,8 +252,7 @@ object Bench {
     val total = results.map(_._2._1).filter(_ >= 0).sum
     // same-run layout pairs: default vs staged twin measured in THIS session
     val medians = results.map { case (k, (m, _)) => k -> m }.toMap
-    // keyed by the TWIN query (a default may have several twins, e.g.
-    // tpch_q05 has both k07 bucketed and k19 denormalized)
+    // keyed by the TWIN query, so a default with several twins keeps each
     val pairsJson = Twin.all.sortBy(_.of).flatMap { twin =>
       val dflt = twin.of
       (medians.get(twin.name), medians.get(dflt)) match {

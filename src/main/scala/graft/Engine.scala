@@ -97,7 +97,7 @@ object Engine {
       // bit cap, every probe is a cache miss on 180M fact rows, and the
       // creation adds a full extra pass over filtered orders — the sf10
       // win (1 MB L2-resident filter) inverts. Queries whose keys outgrow
-      // the cap want the bucketed-layout twins (k07/k09), not a bigger
+      // the cap want the staged-layout twins (k19/k21), not a bigger
       // bloom; Spark's default cap is the right cliff-edge.
       // Filter sizing stays at Spark's default (1M items / 8.4M bits =
       // 1 MB): measured at sf10 q05 (2.3M filtered orderkeys, FPP ~28%),

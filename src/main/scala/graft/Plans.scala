@@ -33,8 +33,8 @@ object Plans {
     * payload of a broadcast exchange. Traversal stops at aggregates: an
     * aggregation below the exchange bounds the broadcast payload by its
     * group cardinality, so a fact scan under it ships group rows, not fact
-    * rows (k18 broadcasts the per-partkey revenue aggregate of a lineitem
-    * month — legitimate at any scale; a raw lineitem broadcast is not). */
+    * rows (a per-partkey revenue aggregate of a lineitem month may
+    * broadcast at any scale; a raw lineitem broadcast may not). */
   def factBroadcasts(plan: SparkPlan): Seq[String] = {
     def rawFactScans(p: SparkPlan): Seq[String] = p match {
       case _: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
@@ -147,10 +147,7 @@ object Plans {
       "d05_ngram_jaccard", "d06_embedding_neardup", "d07_dedup_clusters",
       "n03_knn_lsh", "e04_asof_join", "e05_range_join", "k01_salted_join",
       "k02_bucketed_join", "k03_bucketed_q21", "k04_bucketed_q18",
-      "k05_bucketed_q04", "k07_bucketed_q05",
-      "k09_bucketed_q03", "k10_bucketed_q13", "k11_staged_q02",
-      // k13 is excluded: its 1-row supplier-count scalar attaches via a
-      // deliberate broadcast cross join (no raw-row NLJ)
+      "k05_bucketed_q04", "k10_bucketed_q13", "k11_staged_q02",
       "k12_bucketed_q12", "k14_bucketed_q10")
     val nljViolations = plans
       .filter(p => bucketJoinSet.contains(p._1))
@@ -171,14 +168,10 @@ object Plans {
       "k03_bucketed_q21" -> "orderkey",
       "k04_bucketed_q18" -> "orderkey",
       "k05_bucketed_q04" -> "orderkey",
-      "k07_bucketed_q05" -> "orderkey",
-      "k09_bucketed_q03" -> "orderkey",
       "k10_bucketed_q13" -> "custkey",
       "k11_staged_q02" -> "partkey",
       "k12_bucketed_q12" -> "orderkey",
-      "k13_bucketed_q09" -> "orderkey",
       "k14_bucketed_q10" -> "orderkey",
-      "k17_bucketed_q08" -> "orderkey",
       "k27_bucketed_q22" -> "custkey")
     val bucketShuffleViolations =
       plans.filter(p => bucketKeyOf.contains(p._1)).flatMap { p =>

@@ -142,19 +142,11 @@ object Skew {
         t(spark, dir, "lineitem")
         spark.sql(lineitemSql)
     }
-    // c_nationkey denormalized into orders at ingest (a materialized join
-    // index): q05-shaped queries then never touch customer at all. Left
-    // join: orders without a customer keep a null nationkey, which fails
-    // any equality downstream exactly like the inner join it replaces.
-    val tor = Staged.table(spark, "bkt_orders2", "orders+c_nationkey", dir,
-        Some((nBuckets, "o_orderkey")), Staged.ingestSlices(dir, "orders")) {
-      _ =>
-        val cust = t(spark, dir, "customer")
-          .select(col("c_custkey").as("bk_ck"), col("c_nationkey"))
-        t(spark, dir, "orders")
-          .join(cust, col("o_custkey") === col("bk_ck"), "left")
-          .drop("bk_ck")
-    }
+    // a staged name does not carry the bucket key, so this orderkey copy
+    // needs a family apart from writeBucketed's custkey one (bkt_orders)
+    val tor = Staged.table(spark, "bkt_orders2", "orders", dir,
+        Some((nBuckets, "o_orderkey")), Staged.ingestSlices(dir, "orders"))(
+      _ => t(spark, dir, "orders"))
     (tli, tor)
   }
 
@@ -212,35 +204,6 @@ object Skew {
         .distinct()
         .repartitionByRange(32, col("p_size"))
         .sortWithinPartitions(col("p_size"), col("p_brand"), col("p_type"))
-    }
-  }
-
-  /** Pre-aggregated per-part quantity grid: one row per l_partkey carrying
-    * the FINAL `sumd(drate(l_quantity))` double (`sq`) and the row count
-    * (`c`) over ALL of lineitem — exactly tpch_q17's correlated
-    * sub-aggregate, materialized once at ingest (the k46/k49 user-grid
-    * recovery argument applied to TPC-H: the grid row IS the subquery
-    * result for its part, and decimal sums are exact and associative, so
-    * the query-time threshold `0.2 * (sq / c)` replays the text's
-    * `0.2 * (sumd(drate(l_quantity)) / COUNT(*))` bit-for-bit regardless
-    * of aggregation order). Cardinality is |parts that ever sold| — 20 k
-    * at sf0.1, 2 M at sf100 — vs |lineitem| (600 k / 600 M): a 30-300x
-    * reduction, which is what makes THIS sub-aggregate grid-able while the
-    * q20 analog is not: (l_partkey, l_suppkey) pairs are 98.5 % unique in
-    * the fixture lineitem (measured at sf0.1: 590,973 distinct pairs /
-    * 600,000 rows), so a (part, supp, year) grid collapses nothing — the
-    * q67/DsProbe near-unique-base negative, closed by arithmetic without
-    * a run. The def text rides in the table name so an edit to the grid
-    * definition rebuilds instead of attaching stale aggregates. */
-  def writeStagedPartQtyGrid(
-      spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    Staged.table(spark, "pqty",
-        "l_partkey:sumd(drate(l_quantity)),count:v1", dir) { _ =>
-      t(spark, dir, "lineitem")
-        .groupBy(col("l_partkey"))
-        .agg(sumd(drate(col("l_quantity"))).as("sq"), count(lit(1)).as("c"))
-        .repartitionByRange(32, col("l_partkey"))
-        .sortWithinPartitions(col("l_partkey"))
     }
   }
 
@@ -434,84 +397,6 @@ object Skew {
           asc("p_size"))
     }),
 
-    // TPC-H q17 on the per-part quantity grid (writeStagedPartQtyGrid):
-    // the correlated per-part avg is a STORED aggregate, so the query is
-    // one broadcast-filtered lineitem pass + the 1-row final sum. The
-    // fused twin k30 still derives the thresholds at query time (scan ->
-    // localCheckpoint survivors -> aggregate them); here both the
-    // checkpoint materialization and the threshold aggregate disappear —
-    // and unlike the DuckDB proxy's decorrelated plan (a full 600 M-row
-    // group-by into 2 M part groups per query at sf100), the grid prepays
-    // that group-by at ingest. Same values as tpch_q17 (shared oracle):
-    // see the writer's recovery argument.
-    Twin("k61_grid_q17", "tpch_q17", { (s, dir) =>
-      val tg = writeStagedPartQtyGrid(s, dir)
-      // part_x's p_container, synthesized exactly like the CTE (k36
-      // precedent for replaying the view's derived columns)
-      val container = concat(
-        when(col("p_partkey") % 5 === 0, "SM")
-          .when(col("p_partkey") % 5 === 1, "LG")
-          .when(col("p_partkey") % 5 === 2, "MED")
-          .when(col("p_partkey") % 5 === 3, "JUMBO").otherwise("WRAP"),
-        lit(" "),
-        when(col("p_partkey") % 8 === 0, "CASE")
-          .when(col("p_partkey") % 8 === 1, "BOX")
-          .when(col("p_partkey") % 8 === 2, "BAG")
-          .when(col("p_partkey") % 8 === 3, "JAR")
-          .when(col("p_partkey") % 8 === 4, "PKG")
-          .when(col("p_partkey") % 8 === 5, "PACK")
-          .when(col("p_partkey") % 8 === 6, "CAN").otherwise("DRUM"))
-      val ptKeys = t(s, dir, "part")
-        .filter(col("p_brand") === "Brand#23" && container === "MED BOX")
-        .select(col("p_partkey"))
-      val thr = s.table(tg)
-        .join(broadcast(ptKeys), col("l_partkey") === col("p_partkey"))
-        .select(col("l_partkey").as("tk"),
-          (lit(0.2) * (col("sq") / col("c"))).as("qty_thr"))
-      t(s, dir, "lineitem")
-        .join(broadcast(thr), col("l_partkey") === col("tk"))
-        .filter(col("l_quantity") < col("qty_thr"))
-        .agg((sumd(dmoney(col("l_extendedprice"))) / 7.0).as("avg_yearly"))
-    }),
-
-    // TPC-H q05 on the bucketed layout. On raw fixtures q05 is the worst
-    // scaler in the suite (sf10→sf30 marginal 18x the proxy): BOTH facts
-    // shuffle on l_orderkey for the SMJ while only ~1/7 of orders survive
-    // the date filter. Here the orders⋈lineitem join is a co-located
-    // merge (zero fact exchange); supplier⋈nation⋈region broadcasts; the
-    // single remaining shuffle is the already-joined row stream against
-    // customer on its own key. Same values as tpch_q05 (shared oracle).
-    Twin("k07_bucketed_q05", "tpch_q05", { (s, dir) =>
-      val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
-      val nr = t(s, dir, "nation")
-        .join(t(s, dir, "region").filter(col("r_name") === "ASIA"),
-          col("n_regionkey") === col("r_regionkey"))
-      val supNR = t(s, dir, "supplier")
-        .join(nr, col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_nationkey"), col("n_name"))
-      val ordersF = s.table(tor)
-        .filter(col("o_orderdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-01-01 00:00:00").cast("timestamp"))
-        .select(col("o_orderkey"), col("c_nationkey"))
-      s.table(tli)
-        .select(col("l_orderkey"), col("l_suppkey"),
-          col("l_extendedprice"), col("l_discount"))
-        .join(ordersF.hint("merge"), col("l_orderkey") === col("o_orderkey"))
-        // c_nationkey rides on the staged orders (denormalized at ingest),
-        // so the customer join disappears: this is one fused bucket-local
-        // stage + a broadcast + the 5-row final aggregate
-        .join(broadcast(supNR), col("l_suppkey") === col("s_suppkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .groupBy(col("n_name"))
-        // the decimal conversion happens INSIDE the aggregate (like the SQL
-        // text), after the joins have dropped 6/7 of the rows — computing
-        // it at the scan paid 60M decimal multiplies and shuffled a
-        // 16-byte decimal instead of two 8-byte doubles
-        .agg(sumd(dmoney(col("l_extendedprice")) *
-          (one - drate(col("l_discount")))).as("revenue"))
-        .orderBy(desc("revenue"))
-    }),
-
     // TPC-H q11 on the staged partsupp: the per-query synthesis cross-join
     // disappears (the table is stored), supplier⋈nation broadcasts, and
     // the per-part sums are computed ONCE — the threshold branch and the
@@ -545,33 +430,6 @@ object Skew {
         .join(broadcast(threshold), col("value") > col("t"), "inner")
         .select(col("ps_partkey"), col("value"))
         .orderBy(desc("value"))
-    }),
-
-    // TPC-H q03 on the bucketed layout: lineitem⋈orders is a co-located
-    // merge on the bucket key, the mktsegment-filtered customer broadcasts,
-    // and the per-orderkey revenue aggregation is bucket-local — the only
-    // data movement is the final top-10. Same values as tpch_q03.
-    Twin("k09_bucketed_q03", "tpch_q03", { (s, dir) =>
-      val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
-      val cust = t(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey"))
-      val ordersF = s.table(tor)
-        .filter(col("o_orderdate") < lit("1996-03-15 00:00:00").cast("timestamp"))
-        // o_shippriority is an orders_x schema-completion column (constant 0
-        // in the reduced fixtures) — derived here exactly like the CTE
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          lit(0).as("o_shippriority"))
-        .join(broadcast(cust), col("c_custkey") === col("o_custkey"))
-      s.table(tli)
-        .filter(col("l_shipdate") > lit("1996-03-15 00:00:00").cast("timestamp"))
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-        .join(ordersF.hint("merge"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_shippriority"))
-        .agg(sumd(dmoney(col("l_extendedprice")) *
-          (one - drate(col("l_discount")))).as("revenue"))
-        .orderBy(desc("revenue"), asc("o_orderdate"), asc("l_orderkey"))
-        .limit(10)
     }),
 
     // TPC-H q13 on the custkey-bucketed layout (the same staged tables
@@ -648,59 +506,6 @@ object Skew {
         .orderBy(desc("s_acctbal"), asc("n_name"), asc("s_name"),
           asc("p_partkey"))
         .limit(100)
-    }),
-
-    // TPC-H q09 on the bucketed layout, with the partsupp JOIN ELIMINATED.
-    // The synthesized partsupp is pure integer arithmetic over
-    // (partkey, supplier index 0..3) — so instead of shuffling 4x|part|
-    // rows to look up ps_supplycost by (l_partkey, l_suppkey), the twin
-    // inverts the ps_suppkey formula per lineitem row: test which of the 4
-    // candidate supplier slots (if any) matches l_suppkey, keep matching
-    // rows (exactly the partsupp inner-join semantics — the synthesized
-    // table is duplicate-free for >=4 suppliers, so at most one slot
-    // matches), and compute ps_supplycost from (l_partkey, slot) inline.
-    // With orders⋈lineitem a co-located merge on the bucket key and
-    // part/supplier⋈nation broadcast, the fact data is NEVER exchanged:
-    // the only shuffle is the ~|nation|x|year| final aggregate. At 100 TB
-    // this is the generated-column / join-index pattern: a join to a
-    // DERIVABLE table is a per-row expression, not data movement.
-    // Same values as tpch_q09 (shared oracle).
-    Twin("k13_bucketed_q09", "tpch_q09", { (s, dir) =>
-      val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
-      val redParts = t(s, dir, "part")
-        .filter(col("p_name").like("%red%")).select(col("p_partkey"))
-      val supN = t(s, dir, "supplier")
-        .join(t(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name"))
-      val sCount = t(s, dir, "supplier").agg(count(lit(1)).as("s_count"))
-      val quarter = floor(col("s_count") / lit(4)).cast(LongType)
-      def slotSupp(i: Int): Column =
-        pmod(col("l_partkey") - 1 + lit(i.toLong) * quarter, col("s_count")) + 1
-      val slot = when(col("l_suppkey") === slotSupp(0), 0L)
-        .when(col("l_suppkey") === slotSupp(1), 1L)
-        .when(col("l_suppkey") === slotSupp(2), 2L)
-        .when(col("l_suppkey") === slotSupp(3), 3L)
-      val supplycost = round(
-        pmod(col("l_partkey") * 31 + col("ps_i") * 17, lit(100000L))
-          .cast(DoubleType) / 100.0 + 1.0, 2)
-      s.table(tli)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-        .join(s.table(tor).select(col("o_orderkey"), col("o_orderdate"))
-          .hint("merge"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(redParts), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(supN), col("l_suppkey") === col("s_suppkey"))
-        .crossJoin(broadcast(sCount))
-        .withColumn("ps_i", slot)
-        .filter(col("ps_i").isNotNull)
-        .withColumn("ps_supplycost", supplycost)
-        .groupBy(col("n_name").as("nation"),
-          year(col("o_orderdate")).as("o_year"))
-        .agg(sumd(dmoney(col("l_extendedprice")) *
-            (one - drate(col("l_discount"))) -
-            dmoney(col("ps_supplycost")) * drate(col("l_quantity")))
-          .as("sum_profit"))
-        .orderBy(asc("nation"), desc("o_year"))
     }),
 
     // TPC-H q10 on the bucketed layout: lineitem(R-returns)⋈orders(3-month
@@ -804,70 +609,6 @@ object Skew {
           (col("sum_disc") / col("count_order")).as("avg_disc"),
           col("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // TPC-H q08 on the bucketed layout: the 8-way join collapses to ONE
-    // co-located merge (lineitem⋈orders on the bucket key) plus three
-    // broadcasts — the AMERICA-customer constraint rides on the
-    // denormalized c_nationkey the staged orders already carry (the same
-    // join index k07 uses), STANDARD parts and supplier⋈nation broadcast.
-    // Zero fact exchange; the only shuffle is the |years|-row final
-    // aggregate. Same values as tpch_q08 (shared oracle).
-    Twin("k17_bucketed_q08", "tpch_q08", { (s, dir) =>
-      val (tli, tor) = writeBucketedTpch(s, dir, defaultBuckets)
-      val amKeys = t(s, dir, "nation")
-        .join(t(s, dir, "region").filter(col("r_name") === "AMERICA"),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"))
-      val ordersF = s.table(tor)
-        .filter(col("o_orderdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
-          col("o_orderdate") <= lit("1997-12-31 00:00:00").cast("timestamp"))
-        .join(broadcast(amKeys), col("c_nationkey") === col("n_nationkey"),
-          "leftsemi")
-        .select(col("o_orderkey"), col("o_orderdate"))
-      val supN2 = t(s, dir, "supplier")
-        .join(t(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("nation"))
-      val partStd = t(s, dir, "part")
-        .filter(col("p_type") === "STANDARD").select(col("p_partkey"))
-      val volume = dmoney(col("l_extendedprice")) * (one - drate(col("l_discount")))
-      s.table(tli)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-          col("l_extendedprice"), col("l_discount"))
-        .join(ordersF.hint("merge"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(partStd), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(supN2), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg(round(
-          sumd(when(col("nation") === "NATION_3", volume)
-            .otherwise(lit(0).cast(DecimalType(12, 4)))) / sumd(volume), 6)
-          .as("mkt_share"))
-        .orderBy(asc("o_year"))
-    }),
-
-    // TPC-H q14 with the part shuffle ELIMINATED: the month of lineitem is
-    // pre-aggregated to exact unscaled-i64 revenue per partkey (p_type is
-    // constant per part, so the promo/total split factors through the
-    // per-part sums exactly), and that small aggregate broadcasts into a
-    // streaming scan of part — neither fact nor dimension is ever
-    // exchanged beyond the tiny per-partkey partials. Same values as
-    // tpch_q14 (shared oracle).
-    Twin("k18_fused_q14", "tpch_q14", { (s, dir) =>
-      val la = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-09-01 00:00:00").cast("timestamp") &&
-          col("l_shipdate") < lit("1996-10-01 00:00:00").cast("timestamp"))
-        // unscaled scale-8 revenue: price_u(4) x (1 - disc)_u(4); per-row
-        // < 1e14, per-part-month sums < 1e16 — exact in i64
-        .withColumn("row_u",
-          expr("to_unscaled64(l_extendedprice, 12, 4)") *
-            (lit(10000L) - expr("to_unscaled64(l_discount, 6, 4)")))
-        .groupBy(col("l_partkey"))
-        .agg(sum(col("row_u")).as("gu"))
-      t(s, dir, "part").select(col("p_partkey"), col("p_type"))
-        .join(broadcast(la), col("p_partkey") === col("l_partkey"))
-        .agg(round(lit(100.0) *
-          expr("sum_unscaled128(CASE WHEN p_type LIKE 'PROMO%' THEN gu ELSE 0L END, 8, 4)") /
-          expr("sum_unscaled128(gu, 8, 4)"), 6).as("promo_revenue"))
     }),
 
     // TPC-H q12 on the bucketed layout: on raw fixtures ALL of q12's
@@ -1006,12 +747,19 @@ object Skew {
           .as("revenue"))
     }),
 
-    // TPC-H q09 on the denormalized projection: k13's inline partsupp
-    // inversion (the synthesized table is arithmetic — no join) PLUS the
-    // stored o_orderdate, so even the orders merge disappears: one scan of
-    // the fact, two broadcasts, and the |nation × year| final aggregate.
-    // Profit per row is exact unscaled-i64 arithmetic (revenue at scale 8
-    // minus supplycost_u(4) × qty_u(4)). Same values as tpch_q09.
+    // TPC-H q09 on the denormalized projection, with the partsupp JOIN
+    // ELIMINATED. The synthesized partsupp is pure integer arithmetic over
+    // (partkey, supplier index 0..3), so instead of shuffling 4x|part| rows
+    // to look up ps_supplycost by (l_partkey, l_suppkey), the twin inverts
+    // the ps_suppkey formula per fact row: it tests which of the 4
+    // candidate supplier slots (if any) matches l_suppkey and keeps the
+    // matching rows (exactly the inner-join semantics — the synthesized
+    // table is duplicate-free for >=4 suppliers, so at most one slot
+    // matches). With o_orderdate stored on the fact row there is no orders
+    // join either: one scan of the fact, two broadcasts, and the
+    // |nation × year| final aggregate. Profit per row is exact unscaled-i64
+    // arithmetic (revenue at scale 8 minus supplycost_u(4) × qty_u(4)).
+    // Same values as tpch_q09.
     Twin("k23_denorm_q09", "tpch_q09", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
       val redParts = t(s, dir, "part")
@@ -1087,7 +835,7 @@ object Skew {
     // scan, the AMERICA-customer constraint is a broadcast semi against the
     // stored l_cnation, and the supplier nation broadcasts. The only
     // shuffle is the |years|-row final aggregate. Same values as tpch_q08
-    // (shared oracle; k17 is the bucketed variant of the same query).
+    // (shared oracle).
     Twin("k25_denorm_q08", "tpch_q08", { (s, dir) =>
       val tdn = writeDenormLineitem(s, dir, defaultBuckets)
       val amKeys = t(s, dir, "nation")
@@ -1119,7 +867,7 @@ object Skew {
     // unique-key left join), so the whole query is one pruned scan + an
     // ungrouped conditional sum over stored unscaled i64. ZERO joins, zero
     // shuffles beyond the single-partition reduce. Same values as tpch_q14
-    // (shared oracle; k18 is the aggregate-broadcast variant).
+    // (shared oracle).
     // ASSUMPTION (oracle-gated): `l_ptype IS NOT NULL` stands in for "the
     // left join matched a part row", which is exact only while part.p_type
     // is never null — true of the TPC-H spec and these fixtures. If null

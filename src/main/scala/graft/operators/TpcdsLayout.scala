@@ -83,7 +83,7 @@ object TpcdsLayout {
     * the output: inventory is synthesized as date_dim × (item subset) ×
     * warehouse (every inv FK resolves), the output carries only the _sk
     * keys, and w_warehouse_name is functionally determined by
-    * w_warehouse_sk — same group-elimination argument as k13's derived
+    * w_warehouse_sk — same group-elimination argument as k23's derived
     * partsupp. Values = tpcds_q39 (shared oracle; GraftSpec twin-rows). */
   private def fusedQ39: Q = { (s, dir) =>
     val tn = writeStagedInventory(s, dir)

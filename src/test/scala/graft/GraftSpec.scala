@@ -343,6 +343,16 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(unpaired.isEmpty, s"twins without a same-run bench pair: ${unpaired.map(_.name)}")
   }
 
+  test("twin registry: every TPC-H default has at most one twin") {
+    // a second layout twin stays only while each wins at one scale; such
+    // a measured split is named here with its evidence in CHANGES.md
+    val split = Set("tpch_q10")
+    val crowded = Twin.all.filter(_.of.startsWith("tpch_q")).groupBy(_.of)
+      .filter { case (of, ts) => ts.size > 1 && !split.contains(of) }
+    assert(crowded.isEmpty, s"TPC-H defaults with several twins: " +
+      crowded.map { case (of, ts) => s"$of: ${ts.map(_.name).mkString(", ")}" })
+  }
+
   test("cosine_sim: self-similarity is 1, matches scala computation") {
     val rows = Engine.table(spark, dir, "embeddings")
       .filter(col("vec_id") < 3)

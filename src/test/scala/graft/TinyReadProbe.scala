@@ -33,7 +33,7 @@ object TinyReadProbe {
     val qs = Seq("k37_staged_cbx37", "k38_staged_cbx38", "k39_staged_cbx39",
       "k40_staged_cbx40", "k41_staged_cbx41", "k42_staged_cbx42",
       "k43_staged_cbx05", "k49_grid_cbx08", "k50_grid_cbx09",
-      "k57_grid_cbx18", "k61_grid_q17")
+      "k57_grid_cbx18")
     val spark = Engine.session(appName = "tinyread-probe")
     spark.sparkContext.setLogLevel("WARN")
     val acc = new StageAcc

@@ -15,7 +15,7 @@ class StagedMarkerSpec extends AnyFunSuite {
 
   test("partial staged build (no marker) is dropped and rebuilt") {
     StagedKit.withWarehouse("marker-spec") { (spark, wh) =>
-      val tg = Skew.writeStagedPartQtyGrid(spark, dir)
+      val tg = Skew.writeStagedQ16Pairs(spark, dir)
       val fullCount = spark.table(tg).count()
       assert(fullCount > 1)
 
@@ -35,7 +35,7 @@ class StagedMarkerSpec extends AnyFunSuite {
       // a fresh session (same catalog) must not attach the leftover and
       // must rebuild the table to the full row count
       val s2 = spark.newSession()
-      val tg2 = Skew.writeStagedPartQtyGrid(s2, dir)
+      val tg2 = Skew.writeStagedQ16Pairs(s2, dir)
       assert(tg2 == tg)
       assert(s2.table(tg2).count() == fullCount,
         "rebuild must restore the full table, not attach the partial one")
