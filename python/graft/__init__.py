@@ -22,7 +22,16 @@ Typical use::
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["register", "sql", "table", "connect"]
+__all__ = ["register", "sql", "table", "connect", "FILE_SYSTEM_CONFS"]
+
+# The session confs that give ``file:`` graft's in-process local filesystem
+# (``graft.NioLocalFs``: permissions and link targets through java.nio, no
+# chmod/readlink/ls process per call); the same pairs as
+# ``graft.NioLocalFs.confs``, which ``Engine.configure`` applies.
+FILE_SYSTEM_CONFS = [
+    ("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem"),
+    ("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.NioLocalFs"),
+]
 
 
 def _jvm(spark: SparkSession):
@@ -69,7 +78,8 @@ def connect(app_name: str = "graft", master: str = None) -> SparkSession:
     (or reuse) a SparkSession carrying ``graft.GraftExtensions`` and
     register the graft surface on it. The extension is appended to the
     ``spark.sql.extensions`` the JVM's defaults already name
-    (spark-defaults.conf, ``--conf``), so those still apply."""
+    (spark-defaults.conf, ``--conf``), so those still apply. ``file:``
+    gets graft's local filesystem (``FILE_SYSTEM_CONFS``)."""
     # start the JVM so SparkConf() reads its defaults
     SparkContext._ensure_initialized()
     exts = [e for e in SparkConf().get("spark.sql.extensions", "").split(",")
@@ -78,6 +88,8 @@ def connect(app_name: str = "graft", master: str = None) -> SparkSession:
         exts.append("graft.GraftExtensions")
     builder = (SparkSession.builder.appName(app_name)
                .config("spark.sql.extensions", ",".join(exts)))
+    for key, value in FILE_SYSTEM_CONFS:
+        builder = builder.config(key, value)
     if master:
         builder = builder.master(master)
     return register(builder.getOrCreate())

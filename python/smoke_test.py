@@ -6,7 +6,7 @@
 Exercises the binding end-to-end: registration, path-as-table sugar (the
 s04 shape), compat scalar functions (the q69 shape), a TVF, a sketch
 aggregate, a decimal kernel in a child session (the session extension),
-and the fixture-table reader.
+the fixture-table reader and the ``file:`` filesystem graft installs.
 """
 import os
 import sys
@@ -27,12 +27,14 @@ import graft
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
-spark = (SparkSession.builder.master("local[4]")
-         .appName("graft-python-smoke")
-         .config("spark.sql.extensions", "graft.GraftExtensions")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.ui.enabled", "false")
-         .getOrCreate())
+builder = (SparkSession.builder.master("local[4]")
+           .appName("graft-python-smoke")
+           .config("spark.sql.extensions", "graft.GraftExtensions")
+           .config("spark.sql.shuffle.partitions", "4")
+           .config("spark.ui.enabled", "false"))
+for key, value in graft.FILE_SYSTEM_CONFS:
+    builder = builder.config(key, value)
+spark = builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 graft.register(spark)
 
@@ -45,6 +47,15 @@ def check(name, got, pred):
     if not ok:
         failures.append(name)
 
+
+# file: resolves to graft's in-process local filesystem
+jvm = spark._jvm
+hconf = spark._jsc.hadoopConfiguration()
+fs = jvm.org.apache.hadoop.fs.Path("file:///").getFileSystem(hconf)
+check("file_fs_conf", hconf.get("fs.file.impl"),
+      lambda c: c == "graft.NioLocalFileSystem")
+check("file_fs_class", fs.getClass().getName(),
+      lambda c: c == "graft.NioLocalFileSystem")
 
 # s04 shape: path-as-table sugar
 rows = graft.sql(

@@ -133,6 +133,11 @@ object Engine {
       // merge join over the staged tables re-Sorts ~GB per task of data
       // that is already sorted on disk — measured 2x on the sf30 twins.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+      // `file:` reads and sets permissions and link targets in-process
+      // (NioLocalFs.scala): without libhadoop Hadoop's own local
+      // filesystem starts a chmod/readlink/ls process for each, hundreds
+      // per run of the st04 stream join's checkpoint and state commits.
+      .config(NioLocalFs.confs.toMap)
   // NOTE on parquet timestamps: deprecated INT96 (Spark's compatibility
   // default for session-tz TimestampType) carries NO footer min/max
   // statistics, so row-group pruning and footer-based selectivity

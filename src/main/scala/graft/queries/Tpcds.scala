@@ -714,6 +714,13 @@ object Tpcds {
 
   private val byName = cteDefs.toMap
 
+  /** Whether a text reads a star name as a whole word: `customer` is not
+    * read by `ss_customer_sk`. */
+  private val reads: Map[String, String => Boolean] = cteDefs.map { case (name, _) =>
+    val word = s"\\b$name\\b".r
+    name -> ((text: String) => word.findFirstIn(text).isDefined)
+  }.toMap
+
   private lazy val hashes: Map[String, String] = cteDefs.map { case (name, _) =>
     name -> Integer.toHexString(wrap(s"SELECT * FROM $name").hashCode).take(8)
   }.toMap
@@ -721,11 +728,11 @@ object Tpcds {
   /** The fixture CTE names `q` references, in definition order, closed
     * over the definitions of the names `expand` accepts. */
   private def closure(q: String, expand: String => Boolean): Seq[String] = {
-    var included = cteDefs.collect { case (name, _) if q.contains(name) => name }.toSet
+    var included = cteDefs.collect { case (name, _) if reads(name)(q) => name }.toSet
     var grew = true
     while (grew) {
       val next = included ++ cteDefs.collect {
-        case (name, _) if included.exists(i => expand(i) && byName(i).contains(name)) => name
+        case (name, _) if included.exists(i => expand(i) && reads(name)(byName(i))) => name
       }
       grew = next.size != included.size
       included = next
@@ -4657,5 +4664,5 @@ object Tpcds {
   val queries: Map[String, Q] =
     texts.map { case (name, text) => name -> run(text) }
 
-  val oracles: Map[String, String] = texts.map { case (n, t) => n -> wrap(t) }
+  lazy val oracles: Map[String, String] = texts.map { case (n, t) => n -> wrap(t) }
 }

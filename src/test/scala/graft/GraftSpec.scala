@@ -918,6 +918,19 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tmp.isEmpty, s"unpublished builds: ${tmp.mkString(", ")}")
   }
 
+  test("star: tpcds_q25 binds only the six star tables its plan scans") {
+    // `customer` appears inside ss_customer_sk / sr_customer_sk; q25 reads
+    // no customer table, so a whole-word closure leaves it unbound
+    val s = spark.newSession()
+    val q25 = SparkEntry.queries("tpcds_q25")(s, dir)
+    // each staged table is also bound under its own graft_ds_* name
+    val bound = s.sessionState.catalog.listLocalTempViews("*").map(_.table)
+      .filterNot(_.startsWith("graft_ds_")).toSet
+    val scanned = StarChild.stagedScans(q25)
+    assert(scanned.size == 6, s"q25 scans ${scanned.toSeq.sorted}")
+    assert(bound.size == 6 && !bound("customer"), s"q25 binds ${bound.toSeq.sorted}")
+  }
+
   test("plan regression: q01 pushes the shipdate filter into the scan") {
     val plan = SparkEntry.queries("q01_pricing_summary")(spark, dir)
       .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
